@@ -1540,18 +1540,20 @@ def _text_source_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # float-parity policy (module docstring): the multi-row AVG goes
     # through DECIMAL — per-row doubles are bit-identical across engines,
     # so truncating each to DECIMAL(20,10) makes the aggregate exact and
-    # summation-order-independent
-    avg_q = F.round(
-        F.avg(F.col("q").cast("decimal(20,10)")), 4
-    ).cast("double")
+    # summation-order-independent. The mean is emitted as an integer in
+    # units of 1e-4 (no rounded DOUBLE in the hashed result), and keep is
+    # decided on that integer.
+    avg_e4 = F.round(
+        F.avg(F.col("q").cast("decimal(20,10)")) * 10000
+    ).cast("bigint")
     return (
         per.groupBy("source")
         .agg(
-            avg_q.alias("avg_quality"),
+            avg_e4.alias("avg_quality_e4"),
             F.count("*").alias("n_docs"),
             F.sum("nt").alias("n_tokens"),
         )
-        .withColumn("keep", F.col("avg_quality") >= 0.75)
+        .withColumn("keep", F.col("avg_quality_e4") >= 7500)
     )
 
 
@@ -3591,7 +3593,11 @@ def oracle_sql() -> dict[str, str]:
     """
     # domain rollup over the SAME per-doc quality expression as
     # text_quality (unrounded inside the avg, rounded once at the end —
-    # matching the engine's round-then-compare keep decision)
+    # matching the engine's round-then-compare keep decision). DuckDB's
+    # avg(DECIMAL) returns DOUBLE, so the mean in 1e-4 units is computed
+    # from the exact DECIMAL sum in integer arithmetic: the sum in 1e-10
+    # units, divided by n_docs·1e6 with half-up rounding, is what Spark's
+    # round(avg(DECIMAL) * 10000) yields.
     out["text_source_quality"] = f"""
         WITH q AS (
           SELECT source,
@@ -3619,13 +3625,22 @@ def oracle_sql() -> dict[str, str]:
                        / len(text) ELSE 0.0 END AS pr
               FROM documents))
         )
-        SELECT source,
-               CAST(round(avg(CAST(quality AS DECIMAL(20,10))), 4) AS DOUBLE)
-                 AS avg_quality,
-               count(*) AS n_docs, sum(n) AS n_tokens,
-               (CAST(round(avg(CAST(quality AS DECIMAL(20,10))), 4) AS DOUBLE)
-                >= 0.75) AS keep
-        FROM q GROUP BY source
+        , a AS (
+          SELECT source,
+                 CAST(sum(CAST(quality AS DECIMAL(20,10))) * 10000000000
+                      AS HUGEINT) AS q_e10,
+                 count(*) AS n_docs, sum(n) AS n_tokens
+          FROM q GROUP BY source
+        )
+        , r AS (
+          SELECT source, n_docs, n_tokens,
+                 CAST((q_e10 + n_docs * 500000) // (n_docs * 1000000)
+                      AS BIGINT) AS avg_quality_e4
+          FROM a
+        )
+        SELECT source, avg_quality_e4, n_docs, n_tokens,
+               avg_quality_e4 >= 7500 AS keep
+        FROM r
     """
     # exact-substring repeats: every length-50 normalized window, md5'd,
     # per-doc distinct, grouped cross-doc — the same stride-1 detection the

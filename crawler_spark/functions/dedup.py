@@ -257,19 +257,6 @@ def _sharded_jaccard(
 # MinHash + LSH (banding) — the scale path for unknown-block near-dup
 
 
-def minhash_signature(text: Column, n_hashes: int = 64, shingle_n: int = 5) -> Column:
-    """MinHash signature as array<bigint>: per hash seed i, the min over
-    shingles of xxhash64(shingle, i). All JVM built-ins (xxhash64 accepts a
-    seed column via concat trick: hash of (i, shingle))."""
-    grams = char_ngrams(text, shingle_n)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(grams, lambda g: F.xxhash64(i.cast("string"), g))
-        ),
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     n_hashes: int = 64,

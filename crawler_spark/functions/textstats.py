@@ -232,10 +232,6 @@ def fingerprint_md5(text: Column) -> Column:
     return F.md5(normalized(text).cast("binary"))
 
 
-def fingerprint_xxh64(text: Column) -> Column:
-    return F.xxhash64(normalized(text))
-
-
 # ---------------------------------------------------------------------------
 # Composite keep/drop gate (the FineWeb/Gopher-rule composition pattern:
 # several cheap signals vote, the document carries WHY it was dropped).
@@ -273,10 +269,6 @@ def web_gate_reasons(
             ),
         )
     )
-
-
-def web_gate_keep(text: Column, **thresholds) -> Column:
-    return F.size(web_gate_reasons(text, **thresholds)) == 0
 
 
 # token-budget buckets: fixed thresholds, pure integer comparisons (no

@@ -1385,11 +1385,3 @@ def extract_records_batch_for(cfg_map: dict[str, ConnectorConfig] | None):
             yield pd.DataFrame(out)
 
     return _batch
-
-
-def extract_records_batch(
-    it: Iterator[pd.DataFrame], cfg: ConnectorConfig = SYNTH
-) -> Iterator[pd.DataFrame]:
-    """Single-config variant (input cols: url, body) — see
-    ``extract_records_batch_for``."""
-    yield from extract_records_batch_for({None: cfg})(it)

@@ -9,7 +9,7 @@ order reproducible under any parallelism (SURVEY.md §4.3.3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crawler_spark import schemas
@@ -41,10 +41,6 @@ def seeds_to_frontier(seeds: DataFrame, round_added: int = 0) -> DataFrame:
         .withColumn("depth", F.col("depth").cast("int"))
         .withColumn("page_no", F.col("page_no").cast("int"))
     )
-
-
-def empty_frontier(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], schemas.FRONTIER)
 
 
 def add_candidates(

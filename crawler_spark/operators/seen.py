@@ -765,14 +765,3 @@ class BloomTable:
             return pd.Series(out)
 
         return candidates.withColumn("__maybe", _maybe_seen(F.col(hash_col)))
-
-
-def exact_antijoin_unseen(
-    candidates: DataFrame, seen: DataFrame, hash_col: str = "url_hash"
-) -> DataFrame:
-    """Plain J1 for small scale / parity tests."""
-    return candidates.join(
-        seen.select(F.col("url_hash").alias("__seen_h")),
-        F.col(hash_col) == F.col("__seen_h"),
-        "left_anti",
-    )

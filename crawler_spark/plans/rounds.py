@@ -74,6 +74,12 @@ from crawler_spark.operators.politeness import (
 from crawler_spark.operators import secondary
 from crawler_spark.operators.seen import BloomTable
 from crawler_spark.plans.checkpoint import Checkpointer
+from crawler_spark.plans.sidecar import (
+    Sidecar,
+    freshest,
+    keep_all,
+    keep_freshest,
+)
 
 
 def _round_stats_from_written(lineage: dict) -> dict:
@@ -368,6 +374,49 @@ class CrawlResult:
     metrics: list[dict]
 
 
+def _robots_is_final(col):
+    # a probe is FINAL (cacheable) for 200 and 4xx; 5xx/network rows are
+    # transient disallow-alls that the next wave re-probes
+    return (col >= 200) & (col < 500)
+
+
+def _robots_backfill(rob: DataFrame) -> DataFrame:
+    # bookkeeping columns absent from tables written by older builds (a
+    # resume must not crash on its own cache)
+    if "probe_status" not in rob.columns:
+        rob = rob.withColumn("probe_status", F.lit(200))
+    if "probed_round" not in rob.columns:
+        rob = rob.withColumn("probed_round", F.lit(0))
+    return rob
+
+
+def _robots_fold(rob: DataFrame) -> DataFrame:
+    """Robots probe-cache compaction: TTL re-probes append one row per host
+    per wave. Keep, per host, the freshest row overall AND the freshest
+    FINAL row (≤2 rows) — exactly the rows the effective-politeness winner
+    window can ever select at ANY round (the freshest unexpired final is
+    always the freshest final, and the freshness-wins fallback is the
+    freshest overall). Keeping only the single freshest row would let a
+    fresh transient (5xx disallow-all) probe DELETE a still-unexpired final
+    row and wrongly block the host until the next re-probe."""
+    rob = _robots_backfill(rob)
+    final = _robots_is_final(F.col("probe_status"))
+    w_all = Window.partitionBy("host").orderBy(
+        F.col("probed_round").desc(),
+        final.desc(),
+        F.col("probe_status").asc(),
+    )
+    w_final = Window.partitionBy("host", final).orderBy(
+        F.col("probed_round").desc(), F.col("probe_status").asc()
+    )
+    return (
+        rob.withColumn("__rn", F.row_number().over(w_all))
+        .withColumn("__rf", F.row_number().over(w_final))
+        .where((F.col("__rn") == 1) | (final & (F.col("__rf") == 1)))
+        .drop("__rn", "__rf")
+    )
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -404,31 +453,34 @@ class CrawlEngine:
             self.ckpt = Checkpointer(self.cfg.ckpt_dir)
         import os as _os
 
-        # probed-robots politeness rows persist NEXT TO the checkpoint (a
-        # cache keyed by host, not by round — resume reuses it; re-probing
-        # on every resume would hammer every known host)
-        self._robots_dir = _os.path.join(self.cfg.ckpt_dir, "robots_politeness")
-        # adaptive-backoff factors: same sidecar-cache pattern (appended
-        # per round, freshest row per host wins, compacted past a file
-        # bound); a kill mid-write at worst loses one round's adjustment
-        self._adaptive_dir = _os.path.join(
-            self.cfg.ckpt_dir, "adaptive_politeness"
+        # checkpoint sidecars (plans/sidecar.py): per-key caches persisted
+        # NEXT TO the checkpoint, keyed by host or url, not by round —
+        # resume reuses them. Each is constructed with its fold and file
+        # bound; the domain readers and updates below interpret the rows.
+        def _sidecar(name, fold, max_files=64):
+            return Sidecar(
+                spark, _os.path.join(self.cfg.ckpt_dir, name), fold, max_files
+            )
+
+        # probed-robots politeness rows (re-probing on every resume would
+        # hammer every known host)
+        self._robots = _sidecar("robots_politeness", _robots_fold)
+        # adaptive-backoff factors; factor-1.0 rows (== absent) fold away
+        self._adaptive = _sidecar(
+            "adaptive_politeness",
+            lambda t: keep_freshest("host")(t).where(F.col("factor") > 1.0),
         )
-        # trap-suppression sketches: same sidecar-cache pattern
-        self._trap_dir = _os.path.join(self.cfg.ckpt_dir, "trap_sketches")
-        # rel=canonical alias map: same sidecar-cache pattern
-        self._alias_dir = _os.path.join(
-            self.cfg.ckpt_dir, "canonical_aliases"
-        )
-        # HTTP validators (ETag/Last-Modified): same sidecar-cache pattern
-        self._validators_dir = _os.path.join(
-            self.cfg.ckpt_dir, "http_validators"
-        )
+        # trap-suppression sketches
+        self._traps = _sidecar("trap_sketches", keep_freshest("host"))
+        # rel=canonical / redirect alias map: RAW edges, not collapsed — the
+        # read path pointer-jumps, so stored pairs keep later-learned chain
+        # links composable
+        self._aliases = _sidecar("canonical_aliases", keep_freshest("url"))
+        # HTTP validators (ETag/Last-Modified)
+        self._validators = _sidecar("http_validators", keep_freshest("url"))
         # 304 visit log: unchanged-revisit evidence for the change-rate
-        # estimator (append-only; one row per 304 answer)
-        self._nm_dir = _os.path.join(
-            self.cfg.ckpt_dir, "not_modified_visits"
-        )
+        # estimator — HISTORY, not state, so compaction keeps every row
+        self._nm = _sidecar("not_modified_visits", keep_all, max_files=256)
         # persisted frames created by _curate_webtext (one LSH gram frame
         # per run when keep_best is on); the caller unpersists after the
         # curated outputs materialize
@@ -457,55 +509,16 @@ class CrawlEngine:
     def _empty(self, schema) -> DataFrame:
         return self.spark.createDataFrame([], schema)
 
-    # ---- live robots.txt acquisition -------------------------------------
-    def _politeness_bytes(self) -> int | None:
-        """Driver-known upper bound on the effective politeness table's
-        size: the robots probe cache's on-disk bytes (user rows are config
-        scale). None when no probe cache exists — user-only politeness is
-        bounded by construction and keeps its broadcast."""
-        import os as _os
-
-        try:
-            return sum(
-                e.stat().st_size
-                for e in _os.scandir(self._robots_dir)
-                if e.is_file() and not e.name.startswith(("_", "."))
-            )
-        except OSError:
-            return None
-
     # ---- adaptive per-host backoff (AIMD on 429/503) ---------------------
 
     def _load_adaptive_factors(self) -> DataFrame | None:
         """Freshest ``(host, factor)`` per host from the sidecar, or None.
         Rows at factor 1.0 are equivalent to absent (kept until compaction
         folds them away)."""
-        import os as _os
-
-        if not _os.path.isdir(self._adaptive_dir):
+        t = self._adaptive.read()
+        if t is None:
             return None
-        try:
-            t = self.spark.read.parquet(self._adaptive_dir)
-        except Exception:
-            return None
-        w = Window.partitionBy("host").orderBy(F.col("updated_round").desc())
-        return (
-            t.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select("host", "factor")
-        )
-
-    def _adaptive_bytes(self) -> int | None:
-        import os as _os
-
-        try:
-            return sum(
-                e.stat().st_size
-                for e in _os.scandir(self._adaptive_dir)
-                if e.is_file()
-            )
-        except OSError:
-            return None
+        return freshest(t, "host").select("host", "factor")
 
     def _adaptive_update(self, fetched: DataFrame, round_no: int) -> None:
         """One bounded append per live round: hosts whose throttle-signal
@@ -543,36 +556,7 @@ class CrawlEngine:
             F.lit(int(round_no)).alias("updated_round"),
         ).where(newf != oldf)
         if rows.count():
-            rows.write.mode("append").parquet(self._adaptive_dir)
-            self._compact_adaptive_table()
-
-    def _compact_adaptive_table(self, max_files: int = 64) -> None:
-        """Freshest row per host; factor-1.0 rows (== absent) fold away.
-        Cache semantics like the robots dir: a kill mid-rewrite at worst
-        loses learned factors, never correctness."""
-        import os as _os
-        import shutil as _sh
-
-        try:
-            files = [
-                f
-                for f in _os.listdir(self._adaptive_dir)
-                if not f.startswith("_") and not f.startswith(".")
-            ]
-        except OSError:
-            return
-        if len(files) <= max_files:
-            return
-        winners = self._load_adaptive_factors()
-        if winners is None:
-            return
-        keep = winners.where(F.col("factor") > 1.0).withColumn(
-            "updated_round", F.lit(0)
-        )
-        tmp = self._adaptive_dir + ".compact"
-        keep.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _sh.rmtree(self._adaptive_dir, ignore_errors=True)
-        _os.replace(tmp, self._adaptive_dir)
+            self._adaptive.append(rows)
 
     # -- trap suppression (evidence-based; the incremental form of
     #    functions/urlfilter.host_dup_stats) -------------------------------
@@ -581,20 +565,10 @@ class CrawlEngine:
         """Freshest (host, url_sk, fp_sk) per host from the sidecar —
         sketches are merged cumulatively at update time, so the newest
         row per host IS the whole-crawl state."""
-        import os as _os
-
-        if not _os.path.isdir(self._trap_dir):
+        t = self._traps.read()
+        if t is None:
             return None
-        try:
-            t = self.spark.read.parquet(self._trap_dir)
-        except Exception:
-            return None
-        w = Window.partitionBy("host").orderBy(F.col("updated_round").desc())
-        return (
-            t.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select("host", "url_sk", "fp_sk")
-        )
+        return freshest(t, "host").select("host", "url_sk", "fp_sk")
 
     def _trap_update(self, ok: DataFrame, round_no: int) -> None:
         """One bounded append per round: per-host HLL sketches of this
@@ -636,35 +610,9 @@ class CrawlEngine:
                 .otherwise(F.hll_union("fp_sk", "__of"))
                 .alias("fp_sk"),
             )
-        cur.withColumn(
-            "updated_round", F.lit(int(round_no))
-        ).write.mode("append").parquet(self._trap_dir)
-        self._compact_trap_table()
-
-    def _compact_trap_table(self, max_files: int = 64) -> None:
-        """Same cache semantics as the adaptive/robots sidecars: a kill
-        mid-rewrite at worst loses learned sketches, never correctness."""
-        import os as _os
-        import shutil as _sh
-
-        try:
-            files = [
-                f
-                for f in _os.listdir(self._trap_dir)
-                if not f.startswith("_") and not f.startswith(".")
-            ]
-        except OSError:
-            return
-        if len(files) <= max_files:
-            return
-        winners = self._load_trap_sketches()
-        if winners is None:
-            return
-        keep = winners.withColumn("updated_round", F.lit(0))
-        tmp = self._trap_dir + ".compact"
-        keep.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _sh.rmtree(self._trap_dir, ignore_errors=True)
-        _os.replace(tmp, self._trap_dir)
+        self._traps.append(
+            cur.withColumn("updated_round", F.lit(int(round_no)))
+        )
 
     def _trapped_hosts(self) -> DataFrame | None:
         """Hosts whose sketch estimates cross the trap thresholds. Host
@@ -681,8 +629,6 @@ class CrawlEngine:
         ).select("host")
 
     # ---- <link rel=canonical> alias collapse --------------------------
-
-    ALIAS_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
     def _alias_update(self, ok: DataFrame, round_no: int) -> None:
         """One bounded append per round: (url, canonical) for every fetched
@@ -779,20 +725,7 @@ class CrawlEngine:
                     "left_anti",
                 )
             )
-        aliases.write.mode("append").parquet(self._alias_dir)
-        self._compact_alias_table()
-
-    def _alias_bytes(self) -> int | None:
-        import os as _os
-
-        try:
-            return sum(
-                e.stat().st_size
-                for e in _os.scandir(self._alias_dir)
-                if e.is_file() and not e.name.startswith(("_", "."))
-            )
-        except OSError:
-            return None
+        self._aliases.append(aliases)
 
     def _load_alias_map(self) -> DataFrame | None:
         """Collapsed alias map ``(url, canonical_final)`` or None.
@@ -804,22 +737,12 @@ class CrawlEngine:
         resolve_redirects, ceil(log2 max_hops)+1 equi-joins over the alias
         table only). Cycle rows (sites do ship canonical loops) resolve to
         nothing and are dropped: the candidate keeps its literal URL."""
-        import os as _os
-
-        if not _os.path.isdir(self._alias_dir):
-            return None
-        try:
-            t = self.spark.read.parquet(self._alias_dir)
-        except Exception:
+        t = self._aliases.read()
+        if t is None:
             return None
         from crawler_spark.operators.redirects import resolve_redirects
 
-        w = Window.partitionBy("url").orderBy(F.col("updated_round").desc())
-        edges = (
-            t.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select("url", "canonical")
-        )
+        edges = freshest(t, "url").select("url", "canonical")
         out = resolve_redirects(
             edges, "url", "canonical", max_hops=self.cfg.canonical_max_hops
         )
@@ -827,52 +750,16 @@ class CrawlEngine:
             "url", F.col("final_canonical").alias("canonical_final")
         )
 
-    def _compact_alias_table(self, max_files: int = 64) -> None:
-        """Fold history to freshest-per-url (RAW edges, not collapsed —
-        the read path pointer-jumps, so storing pairs keeps later-learned
-        chain links composable). Same crash semantics as the other
-        sidecars: a kill mid-rewrite loses learned aliases, never
-        correctness."""
-        import os as _os
-        import shutil as _sh
-
-        try:
-            files = [
-                f
-                for f in _os.listdir(self._alias_dir)
-                if not f.startswith("_") and not f.startswith(".")
-            ]
-        except OSError:
-            return
-        if len(files) <= max_files:
-            return
-        t = self.spark.read.parquet(self._alias_dir)
-        w = Window.partitionBy("url").orderBy(F.col("updated_round").desc())
-        keep = (
-            t.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select("url", "canonical", F.lit(0).alias("updated_round"))
-        )
-        tmp = self._alias_dir + ".compact"
-        keep.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _sh.rmtree(self._alias_dir, ignore_errors=True)
-        _os.replace(tmp, self._alias_dir)
-
     def _apply_alias_map(
         self, cands: DataFrame, amap: DataFrame
     ) -> DataFrame:
         """Rewrite candidate URLs to collapsed canonical identity: one
-        LEFT equi-join on url (broadcast when the sidecar's driver-known
-        on-disk bytes fit, mirroring the politeness/adaptive gates; plain
-        shuffle join past that), url_hash/host recomputed JVM-side so the
-        downstream seen anti-join and per-host politeness key on the
-        terminal URL."""
+        LEFT equi-join on url (Sidecar.broadcast_if_small), url_hash/host
+        recomputed JVM-side so the downstream seen anti-join and per-host
+        politeness key on the terminal URL."""
         from crawler_spark.functions.canonicalize import url_host
 
-        b = self._alias_bytes()
-        if b is not None and b <= self.ALIAS_BROADCAST_MAX_BYTES:
-            amap = F.broadcast(amap)
-        m = amap.select(
+        m = self._aliases.broadcast_if_small(amap).select(
             F.col("url").alias("__alias_u"),
             F.col("canonical_final").alias("__alias_c"),
         )
@@ -905,74 +792,19 @@ class CrawlEngine:
             "last_modified",
             F.lit(int(round_no)).alias("updated_round"),
         )
-        rows.write.mode("append").parquet(self._validators_dir)
-        self._compact_validators_table()
-
-    def _validators_bytes(self) -> int | None:
-        import os as _os
-
-        try:
-            return sum(
-                e.stat().st_size
-                for e in _os.scandir(self._validators_dir)
-                if e.is_file() and not e.name.startswith(("_", "."))
-            )
-        except OSError:
-            return None
+        self._validators.append(rows)
 
     def _load_validators(self) -> DataFrame | None:
         """Freshest (url, req_etag, req_last_modified) per url, or None —
         column names match live_fetch's conditional-request inputs."""
-        import os as _os
-
-        if not _os.path.isdir(self._validators_dir):
+        t = self._validators.read()
+        if t is None:
             return None
-        try:
-            t = self.spark.read.parquet(self._validators_dir)
-        except Exception:
-            return None
-        w = Window.partitionBy("url").orderBy(F.col("updated_round").desc())
-        return (
-            t.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select(
-                "url",
-                F.col("etag").alias("req_etag"),
-                F.col("last_modified").alias("req_last_modified"),
-            )
+        return freshest(t, "url").select(
+            "url",
+            F.col("etag").alias("req_etag"),
+            F.col("last_modified").alias("req_last_modified"),
         )
-
-    def _compact_validators_table(self, max_files: int = 64) -> None:
-        """Freshest-per-url fold; same crash semantics as the other
-        sidecars (a kill mid-rewrite loses stored validators → the next
-        revisit is an unconditional fetch, never a correctness issue)."""
-        import os as _os
-        import shutil as _sh
-
-        try:
-            files = [
-                f
-                for f in _os.listdir(self._validators_dir)
-                if not f.startswith("_") and not f.startswith(".")
-            ]
-        except OSError:
-            return
-        if len(files) <= max_files:
-            return
-        t = self.spark.read.parquet(self._validators_dir)
-        w = Window.partitionBy("url").orderBy(F.col("updated_round").desc())
-        keep = (
-            t.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .select(
-                "url", "etag", "last_modified",
-                F.lit(0).alias("updated_round"),
-            )
-        )
-        tmp = self._validators_dir + ".compact"
-        keep.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _sh.rmtree(self._validators_dir, ignore_errors=True)
-        _os.replace(tmp, self._validators_dir)
 
     def _nm_update(self, fetched: DataFrame, round_no: int) -> None:
         """Append this round's 304 answers as (url, ts, round) — the
@@ -984,60 +816,14 @@ class CrawlEngine:
             F.col("warc_ts").alias("ts"),
             F.lit(int(round_no)).alias("round"),
         )
-        rows.write.mode("append").parquet(self._nm_dir)
-        self._compact_nm_table()
-
-    def _compact_nm_table(self, max_files: int = 256) -> None:
-        """The 304 log is HISTORY, not state — compaction must keep every
-        row (unlike the freshest-per-key sidecars), so it only merges the
-        O(rounds) per-round file dribble into a bounded file count.
-        Same crash semantics: a kill mid-rewrite loses logged visits,
-        which only means some revisit intervals re-learn — never
-        correctness."""
-        import os as _os
-        import shutil as _sh
-
-        try:
-            files = [
-                f
-                for f in _os.listdir(self._nm_dir)
-                if not f.startswith("_") and not f.startswith(".")
-            ]
-        except OSError:
-            return
-        if len(files) <= max_files:
-            return
-        t = self.spark.read.parquet(self._nm_dir)
-        nbytes = self._nm_bytes() or 0
-        width = max(1, min(64, nbytes // (128 * 1024 * 1024) + 1))
-        tmp = self._nm_dir + ".compact"
-        t.coalesce(int(width)).write.mode("overwrite").parquet(tmp)
-        _sh.rmtree(self._nm_dir, ignore_errors=True)
-        _os.replace(tmp, self._nm_dir)
-
-    def _nm_bytes(self) -> int | None:
-        import os as _os
-
-        try:
-            return sum(
-                e.stat().st_size
-                for e in _os.scandir(self._nm_dir)
-                if e.is_file() and not e.name.startswith(("_", "."))
-            )
-        except OSError:
-            return None
+        self._nm.append(rows)
 
     def not_modified_visits(self) -> DataFrame | None:
         """All logged 304 visits ``(url, ts, fetch_id)`` or None —
         ``fetch_id`` is the round number (the deterministic same-ts
         tiebreak the change-rate window orders by)."""
-        import os as _os
-
-        if not _os.path.isdir(self._nm_dir):
-            return None
-        try:
-            t = self.spark.read.parquet(self._nm_dir)
-        except Exception:
+        t = self._nm.read()
+        if t is None:
             return None
         return t.select(
             "url", "ts", F.col("round").cast("long").alias("fetch_id")
@@ -1118,27 +904,8 @@ class CrawlEngine:
         return out
 
     def _load_robots_table(self) -> DataFrame | None:
-        import os as _os
-
-        if not _os.path.isdir(self._robots_dir):
-            return None
-        try:
-            rob = self.spark.read.parquet(self._robots_dir)
-        except Exception:
-            return None
-        # backfill bookkeeping columns absent from tables written by older
-        # builds (a resume must not crash on its own cache)
-        if "probe_status" not in rob.columns:
-            rob = rob.withColumn("probe_status", F.lit(200))
-        if "probed_round" not in rob.columns:
-            rob = rob.withColumn("probed_round", F.lit(0))
-        return rob
-
-    @staticmethod
-    def _robots_is_final(col):
-        # a probe is FINAL (cacheable) for 200 and 4xx; 5xx/network rows
-        # are transient disallow-alls that the next wave re-probes
-        return (col >= 200) & (col < 500)
+        rob = self._robots.read()
+        return None if rob is None else _robots_backfill(rob)
 
     def _refresh_effective_politeness(self, round_no: int = 0) -> None:
         rob = self._load_robots_table()
@@ -1149,7 +916,7 @@ class CrawlEngine:
             # transient disallow-all beats an expired allow row (the host
             # stays blocked until a re-probe succeeds, RFC 9309 §2.3.1.4),
             # while a lone expired final row still beats nothing.
-            final = self._robots_is_final(F.col("probe_status"))
+            final = _robots_is_final(F.col("probe_status"))
             unexpired = final
             if self.cfg.robots_ttl_rounds is not None:
                 unexpired = final & (
@@ -1222,7 +989,7 @@ class CrawlEngine:
             # disallow-all row blocks fetches meanwhile, and the next wave
             # re-probes the host (RFC 9309 §2.3.1.4). A TTL ages out final
             # probes too, so long crawls pick up changed rules.
-            known_pred = self._robots_is_final(F.col("probe_status"))
+            known_pred = _robots_is_final(F.col("probe_status"))
             if cfg.robots_ttl_rounds is not None:
                 known_pred = known_pred & (
                     F.col("probed_round")
@@ -1248,71 +1015,10 @@ class CrawlEngine:
         ).persist()
         try:
             if wave.count():
-                wave.write.mode("append").parquet(self._robots_dir)
-                self._compact_robots_table()
+                self._robots.append(wave)
                 self._refresh_effective_politeness(serves_round)
         finally:
             wave.unpersist()
-
-    def _compact_robots_table(self, max_files: int = 64) -> None:
-        """TTL re-probes append one row per host per wave; over a long
-        crawl the cache dir accretes files that every refresh re-reads.
-        Past ``max_files``, rewrite it keeping, per host, the freshest row
-        overall AND the freshest FINAL row (≤2 rows) — exactly the rows the
-        effective-politeness winner window can ever select at ANY round
-        (the freshest unexpired final is always the freshest final, and the
-        freshness-wins fallback is the freshest overall). Keeping only the
-        single freshest row would let a fresh transient (5xx disallow-all)
-        probe DELETE a still-unexpired final row and wrongly block the
-        host until the next re-probe. The dir is a CACHE — a kill
-        mid-rewrite at worst loses probes, and the next wave simply
-        re-fetches them."""
-        import os as _os
-        import shutil as _sh
-
-        try:
-            files = [
-                f for f in _os.listdir(self._robots_dir)
-                if not f.startswith("_") and not f.startswith(".")
-            ]
-        except OSError:
-            return
-        if len(files) <= max_files:
-            return
-        rob = self._load_robots_table()
-        if rob is None:
-            return
-        final = self._robots_is_final(F.col("probe_status"))
-        w_all = Window.partitionBy("host").orderBy(
-            F.col("probed_round").desc(),
-            final.desc(),
-            F.col("probe_status").asc(),
-        )
-        w_final = Window.partitionBy("host", final).orderBy(
-            F.col("probed_round").desc(), F.col("probe_status").asc()
-        )
-        winners = (
-            rob.withColumn("__rn", F.row_number().over(w_all))
-            .withColumn("__rf", F.row_number().over(w_final))
-            .where((F.col("__rn") == 1) | (final & (F.col("__rf") == 1)))
-            .drop("__rn", "__rf")
-        )
-        tmp = self._robots_dir + ".compact"
-        # output width from the dir's driver-known byte size (the winners
-        # are a subset of the input): at millions of probed hosts the
-        # rewrite must not funnel the whole table through one task
-        try:
-            n_bytes = sum(
-                e.stat().st_size
-                for e in _os.scandir(self._robots_dir)
-                if e.is_file() and not e.name.startswith(("_", "."))
-            )
-        except OSError:
-            n_bytes = 0
-        n_out = max(1, n_bytes // (64 << 20))
-        winners.coalesce(int(n_out)).write.mode("overwrite").parquet(tmp)
-        _sh.rmtree(self._robots_dir, ignore_errors=True)
-        _os.replace(tmp, self._robots_dir)
 
     def _candidate_schema_cols(self):
         return [f.name for f in schemas.FRONTIER.fields]
@@ -1690,11 +1396,12 @@ class CrawlEngine:
                     _sect_t[0] = now
 
             seen = seen_df()
-            # driver-known politeness size bound (robots probe cache bytes):
-            # gates every per-host broadcast this round — a probed table
-            # spanning millions of hosts degrades to shuffle joins instead
-            # of blowing the driver
-            pol_bytes = self._politeness_bytes()
+            # driver-known politeness size bound (robots probe cache bytes;
+            # None without a probe cache — user rows are config scale and
+            # keep their broadcast): gates every per-host broadcast this
+            # round — a probed table spanning millions of hosts degrades to
+            # shuffle joins instead of blowing the driver
+            pol_bytes = self._robots.nbytes()
             allowed = (
                 apply_robots(frontier, self.politeness, politeness_bytes=pol_bytes)
                 if self.politeness is not None
@@ -1819,12 +1526,7 @@ class CrawlEngine:
                         fac = fac.where(F.col("factor") > 1.0).select(
                             F.col("host").alias("__f_host"), "factor"
                         )
-                        fb = self._adaptive_bytes()
-                        if (
-                            fb is None
-                            or fb <= politeness_mod.BROADCAST_MAX_BYTES
-                        ):
-                            fac = F.broadcast(fac)
+                        fac = self._adaptive.broadcast_if_small(fac)
                         if "crawl_delay_ms" not in batch_in.columns:
                             batch_in = batch_in.withColumn(
                                 "crawl_delay_ms", F.lit(0)
@@ -1858,12 +1560,7 @@ class CrawlEngine:
                 if cfg.conditional_fetch:
                     vals = self._load_validators()
                     if vals is not None:
-                        vb = self._validators_bytes()
-                        if (
-                            vb is None
-                            or vb <= self.ALIAS_BROADCAST_MAX_BYTES
-                        ):
-                            vals = F.broadcast(vals)
+                        vals = self._validators.broadcast_if_small(vals)
                         # revisited URLs pick up their stored validators;
                         # first-time URLs join to NULLs → unconditional GET
                         batch_in = batch_in.join(

@@ -159,7 +159,7 @@ def test_e2e_alias_rewrite_suppresses_alias_fetch(spark, tmp_path):
     spark.createDataFrame(
         [(alias_url, target_url, 0)],
         "url string, canonical string, updated_round int",
-    ).write.mode("append").parquet(eng._alias_dir)
+    ).write.mode("append").parquet(eng._aliases.path)
 
     res = eng.run()
     got = {r["url"] for r in res.records.select("url").collect()}
@@ -279,7 +279,7 @@ def test_alias_rewrite_broadcast_gate_both_sides(spark, tmp_path, monkeypatch):
     """The alias-map join broadcasts below the driver-known sidecar byte
     bound and degrades to a plain (non-broadcast) join past it — plan-
     asserted on both sides of the gate."""
-    from crawler_spark.plans.rounds import CrawlEngine
+    from crawler_spark.operators import politeness
     from crawler_spark.schemas import FRONTIER
 
     def _plan(df):
@@ -301,6 +301,6 @@ def test_alias_rewrite_broadcast_gate_both_sides(spark, tmp_path, monkeypatch):
     # small sidecar: broadcast hash join
     assert "BroadcastHashJoin" in _plan(eng._apply_alias_map(cands, amap))
     # force the gate shut: the same join must NOT broadcast
-    monkeypatch.setattr(CrawlEngine, "ALIAS_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(politeness, "BROADCAST_MAX_BYTES", 0)
     shut = _plan(eng._apply_alias_map(cands, amap))
     assert "BroadcastHashJoin" not in shut

@@ -159,7 +159,7 @@ def test_validators_sidecar_roundtrip(spark, tmp_path):
     }
     assert got["http://s/a"] == '"v2"'
     # compaction folds history without changing the answer
-    eng._compact_validators_table(max_files=0)
+    eng._validators.compact(max_files=0)
     got2 = {
         r["url"]: r["req_etag"] for r in eng._load_validators().collect()
     }
@@ -273,10 +273,10 @@ def test_nm_log_compaction_preserves_every_row(spark, tmp_path):
               for r in eng.not_modified_visits().collect()}
     assert len(before) == 15
     # force a compaction pass: history (every row), not freshest-per-key
-    eng._compact_nm_table(max_files=0)
+    eng._nm.compact(max_files=0)
     import os
 
-    files = [f for f in os.listdir(eng._nm_dir)
+    files = [f for f in os.listdir(eng._nm.path)
              if not f.startswith(("_", "."))]
     assert len(files) <= 2  # merged into a bounded count
     after = {(r["url"], r["ts"], r["fetch_id"])

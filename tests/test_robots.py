@@ -157,9 +157,9 @@ def test_robots_table_backfills_old_schema(spark, tmp_path):
 
 
 def test_robots_cache_compaction_keeps_latest_row(spark, tmp_path):
-    """_compact_robots_table rewrites the probe cache keeping each host's
-    newest row — TTL re-probes otherwise accrete one file per wave that
-    every refresh re-reads."""
+    """Compacting the robots sidecar rewrites the probe cache keeping each
+    host's newest row — TTL re-probes otherwise accrete one file per wave
+    that every refresh re-reads."""
     import os
 
     from crawler_spark.plans.rounds import CrawlEngine, EngineConfig
@@ -193,7 +193,7 @@ def test_robots_cache_compaction_keeps_latest_row(spark, tmp_path):
         spark, None, seeds, politeness=None,
         cfg=EngineConfig(ckpt_dir=ck, fetch_mode="live"),
     )
-    eng._compact_robots_table(max_files=1)
+    eng._robots.compact(max_files=1)
     rows = {}
     for r in eng._load_robots_table().collect():
         rows.setdefault(r["host"], []).append(r)

@@ -22,6 +22,7 @@ if hasattr(time, "tzset"):
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
+import pandas as pd
 
 import __spark_entry__ as entry_mod
 
@@ -94,11 +95,8 @@ def main() -> int:
         # row, u2_record_distinct ARRAY<BIGINT>, failed exactly this
         # way). Replicate that sort so the incompatibility fails HERE.
         try:
-            import pandas as _pd
-
-            _pdf = _pd.DataFrame(
-                [[r[c] for c in scols] for r in srows[:1000]],
-                columns=scols,
+            _pdf = pd.DataFrame(
+                [[r[c] for c in scols] for r in srows], columns=scols
             )
             if len(_pdf):
                 _pdf.sort_values(by=list(_pdf.columns), kind="mergesort")
