@@ -499,6 +499,8 @@ def main() -> None:
         eff_median = round(ratios[len(ratios) // 2] / 4.0, 3)
         bt4, bt16 = min(pair_list, key=lambda p: p[0] + 4.0 * p[1])
         eff = round(bt4 / bt16 / 4.0, 3)
+        estimator = "cleanest_pair"
+        cleanest = [bt4, bt16]
         if eff > 1.0:
             # physicality guard: >1.0 N→4N on identical plans is
             # impossible — it means THAT pair's 4-core leg was the
@@ -506,6 +508,11 @@ def main() -> None:
             # too), violating the picker's one-sided-noise premise. The
             # median over all pairs is the honest read in that regime.
             eff = min(eff_median, 1.0)
+            # label the fallback and drop the rejected pair, so nobody
+            # recomputes bt4/bt16/4 from the artifact and gets a number
+            # that contradicts efficiency_n_to_4n
+            estimator = "median_fallback"
+            cleanest = None
         urls = urls_popped  # macro_round's own count — no duplicated formula
         scaling = {
             "n_urls": N_URLS_SCALING,
@@ -519,7 +526,8 @@ def main() -> None:
             "local4_seconds": t4,
             "local16_urls_per_sec": round(urls / t16, 1),
             "local16_seconds": t16,
-            "cleanest_pair_seconds": [bt4, bt16],
+            "cleanest_pair_seconds": cleanest,
+            "estimator": estimator,
             "efficiency_n_to_4n": eff,
             "efficiency_median_pairs": eff_median,
         }

@@ -1385,3 +1385,54 @@ def extract_records_batch_for(cfg_map: dict[str, ConnectorConfig] | None):
             yield pd.DataFrame(out)
 
     return _batch
+
+
+# The fused round schema: the link columns, then the record columns. Link
+# rows leave the record columns null; record rows leave the link columns
+# null.
+ROUND_OUT_COLS = ["url", "total_count", "out_url", "out_idx", *RECORD_OUT_COLS[1:]]
+ROUND_OUT_SCHEMA = (
+    "url string, total_count int, out_url string, out_idx int, "
+    + RECORD_OUT_SCHEMA.removeprefix("url string, ")
+)
+
+
+def _round_rows(out: pd.DataFrame) -> pd.DataFrame:
+    # absent columns are object columns of None, which Arrow converts to
+    # nulls of any type (an all-NaN float column would not convert to
+    # array/struct)
+    n = len(out)
+    return pd.DataFrame(
+        {
+            c: out[c].to_numpy() if c in out.columns else [None] * n
+            for c in ROUND_OUT_COLS
+        },
+        columns=ROUND_OUT_COLS,
+    )
+
+
+def extract_round_batch(links_fn, records_fn):
+    """Fuse a round's two extractors into one mapInPandas batch function
+    (input cols: url, body, connector_id, kind; output ROUND_OUT_SCHEMA).
+
+    Search pages go to ``links_fn`` (an ``extract_links_batch_for``
+    function), every other page to ``records_fn`` (an
+    ``extract_records_batch_for`` function), so one Python stage per round
+    serves both halves.
+    """
+
+    def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            is_search = (pdf["kind"] == "search").to_numpy()
+            cols = ["url", "body", "connector_id"]
+            for rows, fn in (
+                (pdf[is_search], links_fn),
+                (pdf[~is_search], records_fn),
+            ):
+                if len(rows):
+                    for out in fn(iter([rows[cols]])):
+                        yield _round_rows(out)
+            if not len(pdf):
+                yield pd.DataFrame(columns=ROUND_OUT_COLS)
+
+    return _batch

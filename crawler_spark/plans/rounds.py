@@ -3,9 +3,14 @@
 One round is one Spark DAG:
 
     frontier ─(robots)─(W1 per-host budget pop)─(salted host repartition)
-             ─(J2 fixture-fetch join)─(extract links/records, Arrow UDFs)
+             ─(J2 fixture-fetch join)─[fetched, materialized once]
+             ─(one extract pass, Arrow UDF: search → links, detail → records)
+             ─(page-metadata join)─[extracted, materialized once]
              ─(new links → canonical → J1 seen anti-join)─(frontier union)
              ─(checkpoint commit)
+
+The driver stops after the commit whose exact frontier count is 0, so no
+empty round is probed after the last one.
 
 The reference's sequential page loop (base.js:67-113) is the degenerate
 1-host / budget-1 case; its deterministic visit order is preserved not by
@@ -48,11 +53,12 @@ from crawler_spark import schemas
 from crawler_spark.functions.canonicalize import url_hash, url_host
 from crawler_spark.operators import opic as opic_mod
 from crawler_spark.operators.extract import (
-    LINKS_OUT_SCHEMA,
-    RECORD_OUT_SCHEMA,
+    RECORD_OUT_COLS,
+    ROUND_OUT_SCHEMA,
     ConnectorConfig,
     extract_links_batch_for,
     extract_records_batch_for,
+    extract_round_batch,
 )
 from crawler_spark.operators.fetch import (
     fixture_fetch,
@@ -1112,6 +1118,9 @@ class CrawlEngine:
         # manifests without the metric), which disables the sizing, never
         # correctness
         frontier_rows: int | None
+        # whether frontier_rows is the EXACT size (a snapshot footer or the
+        # seed count) rather than a delta-replay upper bound
+        frontier_exact = True
         if latest is not None:
             # branch on what the checkpoint actually contains, not the
             # config string: in "auto" mode delta commits engage past the
@@ -1127,6 +1136,7 @@ class CrawlEngine:
                 # delta round's committed adds bound, so auto-mode's
                 # delta-engagement check survives the resume.
                 frontier, snap = self._load_frontier_state(latest)
+                frontier_exact = False
                 fr = self.ckpt.round_metric(snap, "frontier_rows")
                 if fr is not None:
                     for _q in self.ckpt.committed_rounds():
@@ -1154,6 +1164,7 @@ class CrawlEngine:
 
         recrawl_hashes: DataFrame | None = None
         pending_add_rows: DataFrame | None = None
+        frontier_unioned = recrawl is not None
         if recrawl is not None:
             rows = recrawl.select(
                 F.col("url"),
@@ -1188,23 +1199,28 @@ class CrawlEngine:
             # bucket-partitioned parquet sidecar that filter_unseen
             # consumes with a distributed hash-keyed join — the exact same
             # shape seen_delta already uses.
-            n_rc = recrawl_hashes.count()
-            if frontier_rows is not None:
-                frontier_rows += n_rc
             # gate CUMULATIVELY: the cuckoo keeps prior waves (a second
             # run(recrawl=...) on the same engine adds to it), and
             # mark_deleted raises past the combined total — a per-wave
             # check would crash that second run instead of falling back
-            # to the sidecar branch below
-            if (
-                n_rc + self.bloom_table.n_revoked_driver
-                <= BloomTable.REVOKED_DRIVER_MAX
-            ):
-                _rc = [r["url_hash"] for r in recrawl_hashes.collect()]
+            # to the sidecar branch below. ONE bounded action decides:
+            # more than `room` hashes back means the wave overflows.
+            room = max(
+                0,
+                BloomTable.REVOKED_DRIVER_MAX
+                - self.bloom_table.n_revoked_driver,
+            )
+            _rc = [
+                r["url_hash"]
+                for r in recrawl_hashes.limit(room + 1).collect()
+            ]
+            if len(_rc) <= room:
+                n_rc = len(_rc)
                 self.bloom_table.mark_deleted(np.array(_rc, dtype=np.int64))
             else:
                 import os as _os
 
+                n_rc = recrawl_hashes.count()
                 rv_dir = _os.path.join(cfg.ckpt_dir, "_revoked_sidecar")
                 (
                     recrawl_hashes.select("url_hash")
@@ -1219,6 +1235,8 @@ class CrawlEngine:
                     .parquet(rv_dir)
                 )
                 self.bloom_table.set_revoked_df(spark.read.parquet(rv_dir))
+            if frontier_rows is not None:
+                frontier_rows += n_rc
 
         # live robots acquisition: effective politeness from any prior
         # probes, then a run-start wave over seed (+ recrawl) hosts so the
@@ -1261,6 +1279,7 @@ class CrawlEngine:
             n_sm = sm_rows.count()  # bounded: hosts × sitemap entries
             if n_sm:
                 frontier = add_candidates(frontier, sm_rows)
+                frontier_unioned = True
                 if frontier_rows is not None:
                     frontier_rows += n_sm
                 if cfg.frontier_storage in ("delta", "auto"):
@@ -1274,6 +1293,23 @@ class CrawlEngine:
                     )
             else:
                 sm_rows.unpersist()
+
+        # run-start frontier built ONCE: with recrawl/sitemap rows unioned
+        # in, pop's window, its join-back and the first commit's
+        # remove_popped would each rebuild the add_candidates lineage.
+        # Gated on the driver-known tiny bound, so a big frontier is never
+        # pinned in executor storage.
+        aqe_min, _ = tiny_round_thresholds(
+            spark.sparkContext.defaultParallelism, cfg
+        )
+        if (
+            frontier_unioned
+            and frontier_rows is not None
+            and frontier_rows < aqe_min
+        ):
+            frontier = frontier.localCheckpoint(eager=True)
+        # an exactly-empty frontier (a complete checkpoint) runs no round
+        frontier_empty = frontier_exact and frontier_rows == 0
 
         start_latest = latest if latest is not None else -1
         # the round whose commit the bloom table must cover to be trusted
@@ -1346,7 +1382,7 @@ class CrawlEngine:
                 frontier, round_no, latest, last_committed, start_latest,
                 seen_count, metrics_log, recrawl_hashes,
                 bloom_enabled, seen_df, all_seen_df, orig_aqe, orig_shuffle,
-                frontier_rows, pending_add_rows,
+                frontier_rows, pending_add_rows, frontier_empty,
             )
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", orig_aqe)
@@ -1356,7 +1392,7 @@ class CrawlEngine:
         self, frontier, round_no, latest, last_committed, start_latest,
         seen_count, metrics_log, recrawl_hashes,
         bloom_enabled, seen_df, all_seen_df, orig_aqe, orig_shuffle="200",
-        frontier_rows=None, pending_add_rows=None,
+        frontier_rows=None, pending_add_rows=None, frontier_empty=False,
     ) -> CrawlResult:
         spark, cfg = self.spark, self.cfg
         # tiny-round thresholds derived from CLUSTER WIDTH (unless pinned):
@@ -1380,7 +1416,10 @@ class CrawlEngine:
 
         _debug_rt = _os.environ.get("SPARK_GRAFT_ROUND_TIMING")
 
-        while round_no < cfg.max_rounds:
+        # the loop ends when a commit's EXACT frontier footer count is 0;
+        # delta-frontier rounds carry only an upper bound and end through
+        # the n_popped == 0 path below
+        while round_no < cfg.max_rounds and not frontier_empty:
             import time as _time
 
             round_t0 = _time.time()
@@ -1573,36 +1612,34 @@ class CrawlEngine:
                     timeout_s=cfg.fetch_timeout_s,
                     user_agent=cfg.user_agent,
                     connectors=self.connectors,
-                ).persist()
+                )
             else:
-                fetched = fixture_fetch(
-                    popped, self.pages, batch_bound=n_popped
-                ).persist()
+                fetched = fixture_fetch(popped, self.pages, batch_bound=n_popped)
             # materialize the fetch EXACTLY once, before any of the
             # concurrent commit writes downstream can race to be its first
             # materializer — concurrent first-computes of an uncached block
             # each run the lineage, and in live mode that lineage is real
             # HTTP requests (duplicate fetches would break politeness)
-            fetched.count()
-            fetched_cache = fetched
-            if n_popped < aqe_min:
+            tiny = n_popped < aqe_min
+            if tiny:
                 # driver-bound tail/test rounds: EVERY Dataset op eagerly
                 # re-analyzes its whole logical plan, so at tiny batches the
                 # dominant round cost is Catalyst analysis over the
-                # fetch-join lineage, paid again by each downstream op.
-                # Truncate it: the round's data is already materialized in
-                # the cache, localCheckpoint swaps the plan for a shallow
-                # LogicalRDD scan of it. Big rounds keep the full plan —
-                # analysis amortizes, and accurate size stats matter there
-                # for join planning. Coalesce first: the fetch join
-                # inherits the pages scan's file partitioning (32+ mostly-
-                # empty partitions for a handful of rows), and the
-                # checkpointed partition count is what EVERY downstream
-                # stage of the round then runs at.
-                fetched = fetched.coalesce(
+                # fetch-join lineage, paid again by each downstream op. The
+                # eager localCheckpoint is the one materialization AND
+                # swaps the plan for a shallow LogicalRDD scan of it. Big
+                # rounds keep the full plan — analysis amortizes, and
+                # accurate size stats matter there for join planning.
+                # Coalesce after: the fetch join inherits the pages scan's
+                # file partitioning (32+ mostly-empty partitions for a
+                # handful of rows), and the coalesced count is what EVERY
+                # downstream stage of the round then runs at.
+                fetched = fetched.localCheckpoint(eager=True).coalesce(
                     int(want_shuffle)
-                ).localCheckpoint(eager=True)
-                fetched_cache.unpersist()
+                )
+            else:
+                fetched = fetched.persist()
+                fetched.count()
             if cfg.fetch_mode == "live":
                 ok, retry, dead = split_retries(
                     fetched, cfg.max_attempts, live_retryable()
@@ -1659,58 +1696,76 @@ class CrawlEngine:
                     _os.path.join(cfg.warc_out, f"round={round_no}"),
                     **wkw,
                 )
-            _sect("fetch+count")
+            _sect("fetch")
 
             # lineage-truncated frames (LogicalRDD) report no size stats, so
             # the planner can no longer see that round-bounded frames are
             # broadcast-small; at tiny batches hint it explicitly — the
             # driver KNOWS the bound (n_popped). Big rounds keep planner /
             # AQE decisions.
-            tiny = n_popped < aqe_min
             _b = F.broadcast if tiny else (lambda df: df)
 
-            searches = ok.where(F.col("kind") == "search")
-            details = ok.where(F.col("kind") != "search")
-            # tiny rounds: one cheap probe over the truncated fetch result
-            # tells the driver which halves of the round are EMPTY, so the
-            # dead mapInPandas/enrichment stages are skipped instead of
-            # spun up on zero rows (a seeds-only round 0 otherwise pays the
-            # whole record-extraction pipeline for nothing). Big rounds
-            # skip the probe — an extra action there costs more than empty
-            # stages, and their batches are never one-sided for long.
-            n_details_round: int | None = None
-            n_links: int | None = None
-            if tiny:
-                n_details_round = details.count()
-
-            # ---- search pages → record links + next pages (S1/A1/O3)
-            link_rows = searches.select("url", "body", "connector_id").mapInPandas(
-                extract_links_batch_for(self.connectors), LINKS_OUT_SCHEMA
+            # ---- ONE extraction pass over the round's ok pages: search
+            # pages → record links + next pages (S1/A1/O3), detail pages →
+            # records + webtext + related links. One Python stage, joined
+            # once to the page metadata and materialized once (recs and
+            # the frontier both read it, and live secondary chains below
+            # must see each record exactly once); links and recs are
+            # projections of it.
+            page_meta = ok.select(
+                "url",
+                "kind",
+                "connector_id",
+                "seed_idx",
+                "page_no",
+                "in_page_idx",
+                "dfs_rank",
+                "depth",
+                "score",
+                *(["lang"] if has_lang else []),
+                "warc_ts",
+            ).join(
+                F.broadcast(
+                    self.seed_cfg.select("connector_id", "related_policy")
+                ),
+                "connector_id",
+                "left",
             )
-            smeta = searches.select(
+            extracted = (
+                ok.select("url", "body", "connector_id", "kind")
+                .mapInPandas(
+                    extract_round_batch(
+                        extract_links_batch_for(self.connectors),
+                        extract_records_batch_for(self.connectors),
+                    ),
+                    ROUND_OUT_SCHEMA,
+                )
+                .join(_b(page_meta), "url")
+            )
+            # the eager localCheckpoint is the one materialization, in big
+            # rounds too: the checkpointed plan keeps the origin's size
+            # statistics, and a persisted extract plan, self-joined by the
+            # secondary enrichment below, grew big-round planning past the
+            # driver heap
+            extracted = extracted.localCheckpoint(eager=True)
+            # page kind → output rows: link rows (null out_url included)
+            # for "search", one record row per detail page otherwise
+            n_rows = dict(extracted.groupBy("kind").count().collect())
+            n_links = n_rows.pop("search", 0)
+            n_recs = sum(n_rows.values())
+            links = extracted.where(F.col("kind") == "search").select(
                 F.col("url").alias("parent_url"),
                 "connector_id",
                 "seed_idx",
                 "page_no",
                 "depth",
                 "score",
+                "total_count",
+                "out_url",
+                "out_idx",
             )
-            links = (
-                link_rows.join(_b(smeta), link_rows["url"] == smeta["parent_url"])
-                .drop("url")
-                .persist()
-            )
-            if tiny:
-                # same tiny-round lineage truncation as `fetched`/`recs`:
-                # the frontier write is otherwise the first materializer of
-                # the link-extraction mapInPandas, serializing a Python
-                # stage into the commit's critical path
-                links_cache = links
-                n_links = links.count()
-                links = links.coalesce(
-                    int(want_shuffle)
-                ).localCheckpoint(eager=True)
-                links_cache.unpersist()
+            recs = extracted.where(F.col("kind") != "search")
+            _sect("extract")
 
             record_cands = (
                 links.where(F.col("out_url").isNotNull())
@@ -1851,18 +1906,17 @@ class CrawlEngine:
                 F.col("connector_id"),
             )
 
-            # ---- detail pages → records + webtext + related links
-            rec_rows = details.select("url", "body", "connector_id").mapInPandas(
-                extract_records_batch_for(self.connectors), RECORD_OUT_SCHEMA
-            )
             # Gallica-style typed secondary fetches (gallica.js:83-148):
             # inline enrichment hops merged into the parent records BEFORE
             # any write; never frontier candidates, never in the seen set
             sec_caches: list = []
-            if secondary.chain_len(self.connectors) and n_details_round != 0:
+            if secondary.chain_len(self.connectors) and n_recs:
+                # connector ids and metadata come from `ok`/`page_meta`,
+                # not from `recs`: every extra reference to the extract
+                # lineage multiplies the plan big rounds analyze
                 rec_rows, sec_caches = secondary.enrich_secondaries(
-                    rec_rows,
-                    details.select("url", "connector_id"),
+                    recs.select(*RECORD_OUT_COLS),
+                    ok.select("url", "connector_id"),
                     self.pages,
                     self.connectors,
                     fetch_mode=cfg.fetch_mode,
@@ -1872,52 +1926,21 @@ class CrawlEngine:
                     user_agent=cfg.user_agent,
                     # each hop's wave is one URL per chained record at most
                     # (seed_wave / next_url are per-record scalars), so the
-                    # round's detail count bounds every hop's semi-filter
-                    batch_bound=n_details_round,
+                    # round's record count bounds every hop's semi-filter
+                    batch_bound=n_recs,
                 )
-            dmeta = details.select(
-                "url",
-                "connector_id",
-                "seed_idx",
-                "page_no",
-                "in_page_idx",
-                "dfs_rank",
-                "depth",
-                "kind",
-                "score",
-                *(["lang"] if has_lang else []),
-                "warc_ts",
-            )
-            recs = (
-                rec_rows.join(_b(dmeta), "url")
-                .join(
-                    F.broadcast(
-                        self.seed_cfg.select("connector_id", "related_policy")
-                    ),
-                    "connector_id",
-                    "left",
-                )
-                .persist()
-            )
-            # materialize the extract/enrich lineage EXACTLY ONCE, eagerly:
-            # records, webtext and the frontier all read this cache, and
-            # with live secondary chains the lineage carries HTTP side
-            # effects — a deliberate single materialization here is what
-            # lets commit_round write all five tables in parallel (commit
-            # wall = slowest write, not the sum) without racing concurrent
-            # first-materializers of the same cache blocks
-            n_recs = recs.count()
-            recs_cache = recs
-            if n_popped < aqe_min:
-                # same lineage-truncation rationale as `fetched` above: the
-                # extract+enrich plan feeds records, webtext AND the
-                # frontier's related expansion — shallow it once, every
-                # downstream op analyzes a LogicalRDD scan instead
-                recs = recs.coalesce(
-                    int(want_shuffle)
-                ).localCheckpoint(eager=True)
-                recs_cache.unpersist()
-            _sect("extract recs+count")
+                recs = rec_rows.join(_b(page_meta), "url")
+                # the enrichment lineage carries HTTP side effects in live
+                # mode: materialize it exactly once, before the commit's
+                # parallel writes can race to be its first materializer
+                if tiny:
+                    recs = recs.coalesce(int(want_shuffle)).localCheckpoint(
+                        eager=True
+                    )
+                else:
+                    recs = recs.persist()
+                    recs.count()
+                _sect("secondary")
 
             expandable = (F.col("kind") == "record") & (
                 F.col("related_policy").isin("after_parent_write", "before_parent_write")
@@ -2197,7 +2220,7 @@ class CrawlEngine:
                 shrink = (lambda df: df.coalesce(delta_parts))
                 fr_bound = (
                     frontier_rows + n_links + n_popped + 4 * n_recs
-                    if frontier_rows is not None and n_links is not None
+                    if frontier_rows is not None
                     else None
                 )
                 if fr_bound is not None:
@@ -2284,16 +2307,17 @@ class CrawlEngine:
                 tables,
                 metrics,
                 stats_cb=_round_stats_from_written,
-                # every table rides an already-materialized cache (`recs`
-                # is counted eagerly above, `fetched` at the fetch stage),
-                # so all five writes run fully parallel — commit wall is
-                # the slowest write, not the sum
+                # every table rides an already-materialized frame
+                # (`extracted`/`recs` and `fetched` are materialized
+                # eagerly above), so all five writes run fully parallel —
+                # commit wall is the slowest write, not the sum
             )
             # commit + bloom maintenance run AFTER round_wall_s is stamped
             # (they materialize the round's lineage); time them separately
             # so the north-rule metrics expose where a round's wall goes
             metrics["commit_wall_s"] = round(_time.time() - commit_t0, 2)
             fr_committed = metrics.get("frontier_rows")
+            frontier_empty = fr_committed == 0
             if fr_committed is not None:
                 frontier_rows = fr_committed
             elif frontier_rows is not None:
@@ -2301,12 +2325,11 @@ class CrawlEngine:
                 # carry a driver-side UPPER bound (adds can only dedup
                 # down) — used only to size write layouts and the auto-mode
                 # delta-engagement check, never semantics. The add-delta
-                # footer count covers BIG rounds too (n_links is only
-                # counted on tiny rounds); n_popped covers rows the replay
+                # footer count is exact; n_popped covers rows the replay
                 # may re-admit via the popped-tombstone ordering.
                 adds_bound = metrics.get("frontier_adds")
                 if adds_bound is None:
-                    adds_bound = (n_links or 0) + n_popped
+                    adds_bound = n_links + n_popped
                 frontier_rows += adds_bound
             bloom_t0 = _time.time()
             round_log = {"round": round_no, **metrics}
@@ -2376,7 +2399,6 @@ class CrawlEngine:
             popped_raw.unpersist()
             popped.unpersist()
             fetched.unpersist()
-            links.unpersist()
             recs.unpersist()
             for df in round_caches:
                 df.unpersist()

@@ -62,12 +62,50 @@ def test_kill_resume_reaches_identical_state(spark, site, oracle, tmp_path):
     assert rerun.records.count() == resumed.records.count()
 
 
+def _last_job_id(spark) -> int:
+    # job IDs are one global sequence; a job-group filter would miss the
+    # commit's thread-pool writes
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids, default=-1)
+
+
 @pytest.fixture(scope="module")
-def fresh_result(spark, site, tmp_path_factory):
+def fresh_run(spark, site, tmp_path_factory):
     sdfs = site_to_spark(spark, site)
-    return _engine(
-        spark, sdfs, str(tmp_path_factory.mktemp("ck_fresh"))
-    ).run()
+    ck = str(tmp_path_factory.mktemp("ck_fresh"))
+    j0 = _last_job_id(spark)
+    res = _engine(spark, sdfs, ck).run()
+    return {"sdfs": sdfs, "ckpt": ck, "result": res,
+            "jobs": _last_job_id(spark) - j0}
+
+
+@pytest.fixture(scope="module")
+def fresh_result(fresh_run):
+    return fresh_run["result"]
+
+
+# measured: 114 jobs for this crawl (4 rounds, no empty probe round)
+FRESH_CRAWL_MAX_JOBS = 114
+
+
+def test_fresh_crawl_job_budget(fresh_run):
+    assert fresh_run["jobs"] <= FRESH_CRAWL_MAX_JOBS
+
+
+def test_complete_checkpoint_resume_is_idle(spark, fresh_run, monkeypatch):
+    from crawler_spark.plans import rounds
+
+    pops = []
+    pop = rounds.pop_batch
+    monkeypatch.setattr(
+        rounds, "pop_batch", lambda *a, **k: pops.append(1) or pop(*a, **k)
+    )
+    eng = _engine(spark, fresh_run["sdfs"], fresh_run["ckpt"])
+    latest = eng.ckpt.latest_round()
+    res = eng.run()
+    assert pops == []  # no pop ran
+    assert res.metrics == [] and eng.ckpt.latest_round() == latest
+    assert res.rounds == fresh_run["result"].rounds
 
 
 def test_fresh_run_has_no_duplicate_fetches(fresh_result):
