@@ -1,10 +1,7 @@
-"""Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata.
-
-The Spark-side plumbing — schemas, magic-byte sniffing, Arrow batch shape,
-``mapInPandas`` signatures, partitioning — is real and tested; the actual
-decode/resize/frame-sample steps are STUBBED behind deterministic fakes (the
-image/audio libraries are not in this container), clearly marked.
+"""Image validation on opaque ``binary`` columns: magic-byte content-type
+sniffing (Python and a vectorized JVM column form) and header-level
+width/height extraction. No pixel decoding: the image libraries are not
+available here.
 
 Reference anchor for the sniffing: the reference validates downloaded images
 by reading the first bytes and checking the type (base.js:212-217,
@@ -13,25 +10,8 @@ by reading the first bytes and checking the type (base.js:212-217,
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-# asset table schema: one row per binary object
-ASSET = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("bytes", T.BinaryType(), True),
-        T.StructField("content_type", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("has_error", T.BooleanType(), False),
-    ]
-)
 
 # Magic-byte prefixes (S13, base.js:212-217 — first 12 bytes decide validity).
 _MAGIC = {
@@ -117,163 +97,3 @@ def image_dimensions(data: bytes) -> tuple[int | None, int | None]:
     except (IndexError, ValueError):
         pass
     return None, None
-
-
-def decode_image_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas: (url, bytes) → (url, content_type, width, height,
-    features array<float>).
-
-    Content type (magic sniff) and width/height (header parse) are REAL;
-    only the pixel-level feature extraction is a clearly-marked
-    deterministic fake (``_fake_features`` — PIL/libvips absent here), so
-    the pipeline shape is exercised end-to-end and the metadata columns
-    carry true values.
-    """
-    for pdf in it:
-        rows = {"url": [], "content_type": [], "width": [], "height": [], "features": []}
-        for url, data in zip(pdf["url"], pdf["bytes"]):
-            ctype = sniff_content_type(data)
-            rows["url"].append(url)
-            rows["content_type"].append(ctype)
-            if ctype is None:
-                rows["width"].append(None)
-                rows["height"].append(None)
-                rows["features"].append(None)
-                continue
-            w, h = image_dimensions(bytes(data))
-            rows["width"].append(w)
-            rows["height"].append(h)
-            rows["features"].append(_fake_features(bytes(data)))
-        yield pd.DataFrame(rows)
-
-
-DECODE_SCHEMA = (
-    "url string, content_type string, width int, height int, features array<float>"
-)
-
-
-def _fake_features(data: bytes) -> list[float]:
-    """Deterministic stand-in for pixel-level feature extraction (NOT a
-    real decoder — swap for PIL/CLIP/etc. in production)."""
-    import hashlib
-
-    digest = hashlib.md5(data).digest()  # deterministic across processes
-    rng = np.random.default_rng(np.frombuffer(digest, dtype=np.uint8))
-    return [float(x) for x in rng.standard_normal(8).astype(np.float32)]
-
-
-def decode_images(assets: DataFrame) -> DataFrame:
-    """Partition by url hash (decode is CPU-bound; spread evenly), then
-    Arrow-batch decode."""
-    return assets.repartition(F.pmod(F.xxhash64("url"), F.lit(64))).mapInPandas(
-        decode_image_batch, DECODE_SCHEMA
-    )
-
-
-RESIZE_SCHEMA = (
-    "url string, content_type string, src_width int, src_height int, "
-    "out_width int, out_height int, thumb binary"
-)
-
-
-def resize_image_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas: (url, bytes, max_dim) → fit-within-box thumbnail rows.
-
-    REAL: container sniff, header-level source dimensions, and the
-    aspect-preserving fit arithmetic (scale = max_dim / max(w, h), never
-    upscale). FAKE (declared): the pixel resample — the thumb payload is a
-    deterministic hash of (bytes, out dims) until a real decoder is wired.
-    """
-    import hashlib
-
-    for pdf in it:
-        rows = {
-            "url": [], "content_type": [], "src_width": [], "src_height": [],
-            "out_width": [], "out_height": [], "thumb": [],
-        }
-        for url, data, max_dim in zip(pdf["url"], pdf["bytes"], pdf["max_dim"]):
-            ctype = sniff_content_type(data)
-            rows["url"].append(url)
-            rows["content_type"].append(ctype)
-            if ctype is None:
-                for k in ("src_width", "src_height", "out_width", "out_height",
-                          "thumb"):
-                    rows[k].append(None)
-                continue
-            w, h = image_dimensions(bytes(data))
-            rows["src_width"].append(w)
-            rows["src_height"].append(h)
-            if w is None or h is None or w <= 0 or h <= 0:
-                rows["out_width"].append(None)
-                rows["out_height"].append(None)
-                rows["thumb"].append(None)
-                continue
-            scale = min(1.0, int(max_dim) / max(w, h))  # never upscale
-            ow, oh = max(1, round(w * scale)), max(1, round(h * scale))
-            rows["out_width"].append(ow)
-            rows["out_height"].append(oh)
-            # FAKE resample payload (deterministic); a real decoder emits
-            # the re-encoded thumbnail here
-            rows["thumb"].append(
-                hashlib.md5(bytes(data) + f"{ow}x{oh}".encode()).digest()
-            )
-        yield pd.DataFrame(rows)
-
-
-def resize_images(assets: DataFrame, max_dim: int = 256) -> DataFrame:
-    """(url, bytes) → fit-within-``max_dim`` thumbnails (see
-    ``resize_image_batch``); hash-partitioned like ``decode_images``."""
-    inp = assets.select("url", "bytes", F.lit(max_dim).alias("max_dim"))
-    return inp.repartition(F.pmod(F.xxhash64("url"), F.lit(64))).mapInPandas(
-        resize_image_batch, RESIZE_SCHEMA
-    )
-
-
-FRAME_SCHEMA = "url string, frame_idx int, ts_ms long, frame binary"
-
-
-def frame_sample_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas: (url, bytes, n_frames, duration_ms) → one row per
-    sampled frame, evenly spaced over the duration.
-
-    The Spark-side plumbing (schema, batch shape, one-to-many explosion,
-    even-spacing arithmetic) is real; the frame EXTRACTION is a
-    clearly-marked deterministic fake (``ffmpeg``/``pyav`` absent here) —
-    each "frame" is a hash-derived byte payload unique per (url, index).
-    """
-    import hashlib
-
-    for pdf in it:
-        rows = {"url": [], "frame_idx": [], "ts_ms": [], "frame": []}
-        for url, data, n_frames, duration_ms in zip(
-            pdf["url"], pdf["bytes"], pdf["n_frames"], pdf["duration_ms"]
-        ):
-            if data is None or not n_frames:
-                continue
-            n = int(n_frames)
-            step = int(duration_ms) // max(n, 1)
-            for k in range(n):
-                rows["url"].append(url)
-                rows["frame_idx"].append(k)
-                rows["ts_ms"].append(k * step + step // 2)
-                # FAKE frame bytes (deterministic per url+idx); a real
-                # decoder seeks to ts_ms and emits the encoded frame
-                rows["frame"].append(
-                    hashlib.md5(bytes(data)[:64] + str(k).encode()).digest()
-                )
-        yield pd.DataFrame(rows)
-
-
-def frame_samples(
-    videos: DataFrame, n_frames: int = 4, duration_ms: int = 60_000
-) -> DataFrame:
-    """(url, bytes) videos → evenly-spaced frame rows (see
-    ``frame_sample_batch``); hash-partitioned like ``decode_images``."""
-    inp = videos.select(
-        "url", "bytes",
-        F.lit(n_frames).alias("n_frames"),
-        F.lit(duration_ms).alias("duration_ms"),
-    )
-    return inp.repartition(F.pmod(F.xxhash64("url"), F.lit(64))).mapInPandas(
-        frame_sample_batch, FRAME_SCHEMA
-    )

@@ -9,11 +9,53 @@ order reproducible under any parallelism (SURVEY.md §4.3.3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crawler_spark import schemas
 from crawler_spark.functions.canonicalize import url_hash, url_host
+
+
+def frontier_rows(
+    df: DataFrame,
+    url: Column,
+    *,
+    depth: Column | int,
+    seed_idx: Column | int,
+    page_no: Column | int,
+    in_page_idx: Column | int,
+    dfs_rank: Column | int,
+    round_added: int,
+    kind: str,
+    connector_id: Column,
+    score: Column | float = 0.0,
+    host: Column | None = None,
+) -> DataFrame:
+    """New frontier rows for the URLs ``url`` of ``df``, in
+    ``schemas.FRONTIER`` column order and types (so positional unions of
+    builder output are safe). ``url_hash`` and ``host`` derive from the URL
+    unless ``host`` is given; a new row has ``attempts = 0`` and
+    ``not_before = round_added``."""
+
+    def val(v, dtype: str) -> Column:
+        return (v if isinstance(v, Column) else F.lit(v)).cast(dtype)
+
+    return df.select(
+        url.alias("url"),
+        url_hash(url).alias("url_hash"),
+        (url_host(url) if host is None else host).alias("host"),
+        val(depth, "int").alias("depth"),
+        val(score, "double").alias("score"),
+        val(seed_idx, "int").alias("seed_idx"),
+        val(page_no, "int").alias("page_no"),
+        val(in_page_idx, "int").alias("in_page_idx"),
+        val(dfs_rank, "int").alias("dfs_rank"),
+        val(round_added, "int").alias("round_added"),
+        F.lit(0).alias("attempts"),
+        val(round_added, "int").alias("not_before"),
+        F.lit(kind).alias("kind"),
+        connector_id.alias("connector_id"),
+    )
 
 
 def seeds_to_frontier(seeds: DataFrame, round_added: int = 0) -> DataFrame:
@@ -21,25 +63,17 @@ def seeds_to_frontier(seeds: DataFrame, round_added: int = 0) -> DataFrame:
 
     ``seed_idx`` ordering is part of crawl-order parity (vam.js:10-14).
     """
-    return (
-        seeds.select(
-            F.col("url"),
-            url_hash(F.col("url")).alias("url_hash"),
-            url_host(F.col("url")).alias("host"),
-            F.lit(0).alias("depth"),
-            F.lit(0.0).alias("score"),
-            F.col("seed_idx"),
-            F.col("start_page").alias("page_no"),
-            F.lit(-1).alias("in_page_idx"),
-            F.lit(0).alias("dfs_rank"),
-            F.lit(round_added).alias("round_added"),
-            F.lit(0).alias("attempts"),
-            F.lit(round_added).alias("not_before"),
-            F.lit("search").alias("kind"),
-            F.col("connector_id"),
-        )
-        .withColumn("depth", F.col("depth").cast("int"))
-        .withColumn("page_no", F.col("page_no").cast("int"))
+    return frontier_rows(
+        seeds,
+        F.col("url"),
+        depth=0,
+        seed_idx=F.col("seed_idx"),
+        page_no=F.col("start_page"),
+        in_page_idx=-1,
+        dfs_rank=0,
+        round_added=round_added,
+        kind="search",
+        connector_id=F.col("connector_id"),
     )
 
 
@@ -67,9 +101,10 @@ def add_candidates(
     cand = candidates.select(*cols)
     cand_keys = cand.select("url_hash").distinct()
     if broadcast_keys:
-        # tiny (driver-bound) rounds hand lineage-truncated candidate
-        # frames whose LogicalRDD plans carry no size stats — the caller
-        # asserts the round bound makes the key set broadcast-small
+        # candidate frames derived from joins inherit the joins' size
+        # over-estimates (a persisted or checkpointed frame reports its
+        # origin plan's statistics), so the planner would not broadcast the
+        # key set; the caller asserts the round bound makes it small
         cand_keys = F.broadcast(cand_keys)
     contested = frontier.join(cand_keys, "url_hash", "left_semi")
     untouched = frontier.join(cand_keys, "url_hash", "left_anti")

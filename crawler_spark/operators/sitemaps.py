@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from crawler_spark.operators.frontier import frontier_rows
+
 # (?s) dotall + lazy body: both Java regex (Spark) and the tests' replay
 # tooling accept it; [^>]* tolerates attributes on the opening tag
 _URL_BLOCK = r"(?s)<url[\s>](.*?)</url>"
@@ -201,26 +203,22 @@ def sitemap_frontier_rows(
     ranks per host by (priority desc, url) — a key-partitioned window over
     the bounded wave — so the pop order within a host is deterministic on
     any cluster size."""
-    from crawler_spark.functions.canonicalize import url_hash
-
     w = Window.partitionBy("host").orderBy(
         F.col("priority").desc(), F.col("url").asc()
     )
-    return wave.select(
+    return frontier_rows(
+        wave,
         F.col("url"),
-        url_hash(F.col("url")).alias("url_hash"),
-        F.col("host"),
-        F.lit(1).alias("depth"),
-        F.col("priority").cast("double").alias("score"),
-        F.lit(SITEMAP_SEED_IDX).alias("seed_idx"),
-        F.lit(0).alias("page_no"),
-        (F.row_number().over(w) - 1).cast("int").alias("in_page_idx"),
-        F.lit(0).alias("dfs_rank"),
-        F.lit(round_added).alias("round_added"),
-        F.lit(0).alias("attempts"),
-        F.lit(round_added).alias("not_before"),
-        F.lit("record").alias("kind"),
-        F.lit(connector_id).alias("connector_id"),
+        depth=1,
+        score=F.col("priority"),
+        seed_idx=SITEMAP_SEED_IDX,
+        page_no=0,
+        in_page_idx=F.row_number().over(w) - 1,
+        dfs_rank=0,
+        round_added=round_added,
+        kind="record",
+        connector_id=F.lit(connector_id),
+        host=F.col("host"),
     )
 
 

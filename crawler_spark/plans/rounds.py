@@ -1,13 +1,20 @@
 """The batch-iterative crawl loop (SURVEY.md §3.1 Spark re-expression).
 
-One round is one Spark DAG:
+One round is one Spark DAG, built by one ``CrawlEngine`` method per stage
+(``_run_rounds`` calls them in this order, each timed into the round's
+``stage_s``):
 
-    frontier ─(robots)─(W1 per-host budget pop)─(salted host repartition)
-             ─(J2 fixture-fetch join)─[fetched, materialized once]
-             ─(one extract pass, Arrow UDF: search → links, detail → records)
-             ─(page-metadata join)─[extracted, materialized once]
-             ─(new links → canonical → J1 seen anti-join)─(frontier union)
-             ─(checkpoint commit)
+    _pop             frontier ─(robots)─(W1 per-host budget pop)
+                              ─(salted host repartition)
+    _fetch           ─(J2 fixture-fetch join)─[fetched, materialized once]
+    _sidecar_upkeep  ─(adaptive / trap / alias / validator sidecars, WARC)
+    _extract         ─(one extract pass, Arrow UDF: search → links,
+                       detail → records)─(page-metadata join)
+                      ─[extracted, materialized once]─(secondary chains)
+    _expand          ─(record links, next pages, related → URL gates)
+    _seen_filter     ─(J1 seen anti-join / Bloom)─(+ retries)
+    _commit          ─(frontier union)─(checkpoint commit)
+    _bloom_upkeep    ─(Bloom build/update, seen-delta compaction)
 
 The driver stops after the commit whose exact frontier count is 0, so no
 empty round is probed after the last one.
@@ -43,6 +50,8 @@ full mode AND the replay oracle in tests/test_frontier_delta.py).
 
 from __future__ import annotations
 
+import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
 
 import numpy as np
@@ -68,6 +77,7 @@ from crawler_spark.operators.fetch import (
 )
 from crawler_spark.operators.frontier import (
     add_candidates,
+    frontier_rows,
     remove_popped,
     seeds_to_frontier,
 )
@@ -146,6 +156,15 @@ def _round_stats_from_written(lineage: dict) -> dict:
     }
 
 
+# adaptive backoff bounds (EngineConfig.adaptive_politeness): the largest
+# crawl-delay multiplier, and the delay a throttling host with no configured
+# crawl-delay backs off from
+ADAPTIVE_MAX_FACTOR = 64.0
+ADAPTIVE_BASE_DELAY_MS = 1000
+# pointer-jumping bound of the canonical alias collapse
+CANONICAL_MAX_HOPS = 8
+
+
 @dataclass
 class EngineConfig:
     ckpt_dir: str
@@ -171,11 +190,10 @@ class EngineConfig:
     # partition count on resume, and re-size from the committed seen count
     # (BloomTable.sized_for) at each full rebuild. An int pins it.
     bloom_partitions: int | None = None
+    # full Bloom rebuild cadence, also the seen-delta compaction cadence:
+    # compaction folds the O(rounds) per-round delta dirs into one table so
+    # a 10^4-round crawl doesn't read 10^4 directories per round
     bloom_rebuild_every: int = 8
-    # seen-delta compaction cadence (None → bloom_rebuild_every): folds the
-    # O(rounds) per-round delta dirs into one table so a 10^4-round crawl
-    # doesn't read 10^4 directories per round
-    compact_every: int | None = None
     use_opic: bool = False
     opic_initial_cash: float = 1.0
     target_per_task: int = 200
@@ -203,7 +221,6 @@ class EngineConfig:
     # through the same add_candidates dedup as extracted links; on resume
     # the wave is skipped — round 0's commit already holds its rows.
     live_sitemaps: bool = False
-    sitemap_max_children: int = 8
     # opt-in URL curation gate (functions/urlfilter.url_junk) on extracted
     # link candidates: crawler-trap shapes (param explosions, digit-soup
     # paths, session tokens, oversize URLs) are dropped BEFORE the seen
@@ -212,18 +229,14 @@ class EngineConfig:
     # even when the heuristics stay off.
     url_junk_filter: bool = False
     # opt-in adaptive per-host backoff (live mode): hosts answering a
-    # round's fetches with 429/503 for ≥ adaptive_ratio of ≥
-    # adaptive_min_requests requests get their crawl-delay multiplied ×2
-    # for following rounds (up to adaptive_max_factor); a clean round
-    # halves the factor back toward 1. A host with no configured delay
-    # backs off from adaptive_base_delay_ms. AIMD-shaped, persisted next
-    # to the checkpoint like the robots probe cache, so resume keeps the
-    # learned factors.
+    # round's fetches with 429/503 for at least half of at least 4 requests
+    # (politeness.throttle_stats) get their crawl-delay multiplied ×2 for
+    # following rounds (up to ADAPTIVE_MAX_FACTOR); a clean round halves
+    # the factor back toward 1. A host with no configured delay backs off
+    # from ADAPTIVE_BASE_DELAY_MS. AIMD-shaped, persisted next to the
+    # checkpoint like the robots probe cache, so resume keeps the learned
+    # factors.
     adaptive_politeness: bool = False
-    adaptive_ratio: float = 0.5
-    adaptive_min_requests: int = 4
-    adaptive_max_factor: float = 64.0
-    adaptive_base_delay_ms: int = 1000
     # opt-in evidence-based trap suppression (the incremental twin of
     # functions/urlfilter.host_dup_stats): per-host HLL sketches of
     # distinct URL hashes vs distinct body fingerprints, merged across
@@ -249,7 +262,6 @@ class EngineConfig:
     # default: rewriting changes crawl order vs the reference's literal
     # URL identity, so it must never engage under a parity gate.
     canonical_collapse: bool = False
-    canonical_max_hops: int = 8
     # opt-in conditional revisit fetches (live mode, RFC 9110 §13): ETag /
     # Last-Modified response validators persist in a checkpoint sidecar
     # (url → validators, freshest per url); popped batches join them back
@@ -269,7 +281,6 @@ class EngineConfig:
     # page EXISTS, it is just an HTTP-200 error template; suppressing the
     # visit would make the frontier re-pop it forever.
     soft404_filter: bool = False
-    soft404_short_chars: int = 400
     # opt-in webtext curation at run() end (mirrors soft404_filter's
     # sink-stage opt-in shape, but runs on the ASSEMBLED corpus, where
     # cross-document dedup is well-defined — a per-round pass could never
@@ -348,7 +359,6 @@ class EngineConfig:
     # for offline frontier re-scoring (operators/opic.py:pagerank) between
     # crawls. Off by default: it adds O(round links) commit volume.
     persist_link_graph: bool = False
-    extra: dict = dc_field(default_factory=dict)
 
 
 def tiny_round_thresholds(
@@ -421,6 +431,133 @@ def _robots_fold(rob: DataFrame) -> DataFrame:
         .where((F.col("__rn") == 1) | (final & (F.col("__rf") == 1)))
         .drop("__rn", "__rf")
     )
+
+
+_FRONTIER_COLS = schemas.FRONTIER.fieldNames()
+
+
+def _expandable():
+    """Record rows whose connector follows related links."""
+    return (F.col("kind") == "record") & F.col("related_policy").isin(
+        "after_parent_write", "before_parent_write"
+    )
+
+
+@dataclass
+class _RunState:
+    """What one ``CrawlEngine.run`` carries from round to round."""
+
+    frontier: DataFrame
+    # driver-known frontier size (exact, or an upper bound after delta
+    # rounds) — sizes the frontier WRITE layout each round; None = unknown
+    # (old manifests without the metric), which disables the sizing, never
+    # correctness
+    frontier_rows: int | None
+    round_no: int
+    # the latest committed round when the run started (-1: fresh crawl)
+    start_latest: int
+    # the round whose commit the bloom table must cover to be trusted
+    last_committed: int | None
+    # running seen-set size from the committed manifests (no Spark job);
+    # drives the use_bloom="auto" exact→Bloom switch
+    seen_count: int
+    # session settings, restored when run() returns
+    orig_aqe: str
+    orig_shuffle: str
+    # tiny_round_thresholds
+    aqe_min: int
+    shuffle_floor: int
+    has_lang: bool
+    # set once a commit's exact frontier count is 0 (or a complete
+    # checkpoint is resumed): no further round runs
+    frontier_empty: bool = False
+    recrawl_hashes: DataFrame | None = None
+    # delta-frontier persistence: run-start additions no commit holds yet
+    pending_add_rows: DataFrame | None = None
+    # frames persisted for the whole run, released when run() returns
+    run_caches: list = dc_field(default_factory=list)
+    metrics_log: list = dc_field(default_factory=list)
+
+
+@dataclass
+class _Round:
+    """One round's frames and driver-known sizes, filled in stage by
+    stage."""
+
+    no: int
+    # wall seconds per stage, recorded by stage()
+    stage_s: dict = dc_field(default_factory=dict)
+    # frames persisted by the round's stages, released at its end
+    caches: list = dc_field(default_factory=list)
+    # pop
+    pol_bytes: int | None = None
+    allowed: DataFrame | None = None
+    popped_raw: DataFrame | None = None
+    popped: DataFrame | None = None
+    remaining: DataFrame | None = None
+    n_popped: int = 0
+    # n_popped < aqe_min: a driver-bound round (tiny_round_thresholds)
+    tiny: bool = False
+    # the round's shuffle width
+    width: int = 0
+    # fetch
+    fetched: DataFrame | None = None
+    ok: DataFrame | None = None
+    retry: DataFrame | None = None
+    seen_round: DataFrame | None = None
+    # extract
+    links: DataFrame | None = None
+    recs: DataFrame | None = None
+    n_links: int = 0
+    n_recs: int = 0
+    # expand
+    cands: DataFrame | None = None
+    # seen_filter
+    round_adds: DataFrame | None = None
+    # commit
+    metrics: dict = dc_field(default_factory=dict)
+    snapshot_round: bool = True
+
+    @contextmanager
+    def stage(self, name: str):
+        """Record the enclosed block's wall seconds as ``stage_s[name]``."""
+        t0 = time.perf_counter()
+        yield
+        self.stage_s[name] = round(time.perf_counter() - t0, 3)
+
+    def small(self, df: DataFrame) -> DataFrame:
+        """Broadcast-hint a round-bounded frame in tiny rounds. A frame
+        derived from a join inherits the join's size over-estimate — a
+        persisted or checkpointed frame reports its origin plan's
+        statistics (PySpark 4.1: a 50-row broadcast join over a 2M-row scan
+        reports ~3.2 GB planned, persisted or eager-localCheckpointed) — so
+        the planner would not broadcast it; the driver KNOWS the bound
+        (n_popped). Big rounds keep planner / AQE decisions."""
+        return F.broadcast(df) if self.tiny else df
+
+
+def _materialize_once(df: DataFrame, rnd: _Round) -> DataFrame:
+    """``df`` computed exactly once, before any of the commit's concurrent
+    writes can race to be its first materializer — concurrent
+    first-computes of an uncached block each run the lineage, and in live
+    mode that lineage is real HTTP requests (duplicate fetches would break
+    politeness).
+
+    Tiny rounds: EVERY Dataset op eagerly re-analyzes its whole logical
+    plan, so at tiny batches the dominant round cost is Catalyst analysis
+    over the join lineage, paid again by each downstream op. The eager
+    localCheckpoint is the one materialization AND swaps the plan for a
+    shallow scan of it. Coalesce after: a join inherits the pages scan's
+    file partitioning (32+ mostly-empty partitions for a handful of rows),
+    and the coalesced count is what every downstream stage of the round
+    then runs at. Big rounds persist and count instead: analysis amortizes
+    there, and a lost persisted block is recomputed from lineage, where a
+    lost local-checkpoint block fails the job."""
+    if rnd.tiny:
+        return df.localCheckpoint(eager=True).coalesce(rnd.width)
+    df = df.persist()
+    df.count()
+    return df
 
 
 class CrawlEngine:
@@ -532,12 +669,7 @@ class CrawlEngine:
         hosts that answered clean halve back toward 1. Work is one
         aggregation over the already-materialized round batch plus a join
         against the (compacted) factor table."""
-        cfg = self.cfg
-        stats = politeness_mod.throttle_stats(
-            fetched,
-            min_requests=cfg.adaptive_min_requests,
-            ratio=cfg.adaptive_ratio,
-        )
+        stats = politeness_mod.throttle_stats(fetched)
         old = self._load_adaptive_factors()
         if old is not None:
             stats = stats.join(
@@ -551,7 +683,7 @@ class CrawlEngine:
         newf = (
             F.when(
                 F.col("backoff"),
-                F.least(oldf * 2, F.lit(float(cfg.adaptive_max_factor))),
+                F.least(oldf * 2, F.lit(ADAPTIVE_MAX_FACTOR)),
             )
             .when(F.col("clean"), F.greatest(oldf / 2, F.lit(1.0)))
             .otherwise(oldf)
@@ -750,7 +882,7 @@ class CrawlEngine:
 
         edges = freshest(t, "url").select("url", "canonical")
         out = resolve_redirects(
-            edges, "url", "canonical", max_hops=self.cfg.canonical_max_hops
+            edges, "url", "canonical", max_hops=CANONICAL_MAX_HOPS
         )
         return out.where(F.col("resolved")).select(
             "url", F.col("final_canonical").alias("canonical_final")
@@ -773,14 +905,13 @@ class CrawlEngine:
             m, cands["url"] == F.col("__alias_u"), "left"
         )
         new_url = F.coalesce(F.col("__alias_c"), cands["url"])
-        fr_cols = self._candidate_schema_cols()
         repl = {
             "url": new_url.alias("url"),
             "url_hash": F.xxhash64(new_url).alias("url_hash"),
             "host": url_host(new_url).alias("host"),
         }
         return joined.select(
-            *[repl.get(c, F.col(c)) for c in fr_cols]
+            *[repl.get(c, F.col(c)) for c in _FRONTIER_COLS]
         )
 
     # ---- HTTP validators (conditional revisit fetches) -----------------
@@ -1026,9 +1157,6 @@ class CrawlEngine:
         finally:
             wave.unpersist()
 
-    def _candidate_schema_cols(self):
-        return [f.name for f in schemas.FRONTIER.fields]
-
     def _load_frontier_state(self, upto: int) -> tuple[DataFrame, int]:
         """Delta-frontier reconstruction: the latest committed snapshot
         ≤ ``upto`` replayed forward through each later round's del/add
@@ -1096,1340 +1224,1244 @@ class CrawlEngine:
         spark, cfg = self.spark, self.cfg
         self.ckpt.cleanup_partial()
         if not resume and self.ckpt.latest_round() is not None:
-            # fresh start over an existing checkpoint (cli --no-resume /
-            # --force): wipe committed rounds, compacts, and the bitset
-            # table — otherwise stale rounds beyond this run's last round
-            # contaminate the assembled outputs and hijack later resumes
-            self.ckpt.wipe()
-            import shutil as _sh
-
-            _sh.rmtree(self.bloom_table.root, ignore_errors=True)
-            if cfg.bloom_partitions is None:
-                self.bloom_table = BloomTable.adopt(self.bloom_table.root)
-            else:
-                self.bloom_table = BloomTable(
-                    self.bloom_table.root, cfg.bloom_partitions
-                )
+            self._wipe()
         latest = self.ckpt.latest_round() if resume else None
-        metrics_log: list[dict] = []
-
-        # driver-known frontier size (exact, from manifests/seed count) —
-        # sizes the frontier WRITE layout each round; None = unknown (old
-        # manifests without the metric), which disables the sizing, never
-        # correctness
-        frontier_rows: int | None
-        # whether frontier_rows is the EXACT size (a snapshot footer or the
-        # seed count) rather than a delta-replay upper bound
-        frontier_exact = True
-        if latest is not None:
-            # branch on what the checkpoint actually contains, not the
-            # config string: in "auto" mode delta commits engage past the
-            # row threshold, so the latest round may or may not carry a
-            # frontier snapshot — ckpt.has_table is the ground truth
-            if self.ckpt.has_table(latest, "frontier"):
-                frontier = self.ckpt.load(spark, latest, "frontier")
-                fr = self.ckpt.round_metric(latest, "frontier_rows")
-            else:
-                # mid-interval resume: snapshot + delta replay (identical
-                # state by construction — see _load_frontier_state). The
-                # row bound is the snapshot's exact count plus each later
-                # delta round's committed adds bound, so auto-mode's
-                # delta-engagement check survives the resume.
-                frontier, snap = self._load_frontier_state(latest)
-                frontier_exact = False
-                fr = self.ckpt.round_metric(snap, "frontier_rows")
-                if fr is not None:
-                    for _q in self.ckpt.committed_rounds():
-                        if snap < _q <= latest:
-                            _a = self.ckpt.round_metric(_q, "frontier_adds")
-                            if _a is None:
-                                # old manifest without the adds bound: an
-                                # unknown term makes the whole bound
-                                # unknown — never silently under-count
-                                # (the bound gates broadcasts and the
-                                # auto delta-engagement check)
-                                fr = None
-                                break
-                            fr += int(_a)
-            round_no = latest + 1
-            frontier_rows = int(fr) if fr is not None else None
-        else:
-            frontier = seeds_to_frontier(self.seeds)
-            round_no = 0
-            frontier_rows = frontier.count()  # seed list: tiny by contract
-            # createDataFrame seed frames default to the session's full
-            # parallelism — dozens of near-empty partitions that round 0's
-            # whole pop/anti-join/union pipeline then inherits
-            frontier = frontier.coalesce(max(1, -(-frontier_rows // 1_000_000)))
-
-        recrawl_hashes: DataFrame | None = None
-        pending_add_rows: DataFrame | None = None
-        frontier_unioned = recrawl is not None
-        if recrawl is not None:
-            rows = recrawl.select(
-                F.col("url"),
-                url_hash(F.col("url")).alias("url_hash"),
-                url_host(F.col("url")).alias("host"),
-                F.lit(0).alias("depth"),
-                F.lit(0.0).alias("score"),
-                F.lit(0).alias("seed_idx"),
-                F.lit(0).alias("page_no"),
-                F.lit(0).alias("in_page_idx"),
-                F.lit(0).alias("dfs_rank"),
-                F.lit(round_no).alias("round_added"),
-                F.lit(0).alias("attempts"),
-                F.lit(round_no).alias("not_before"),
-                F.lit("record").alias("kind"),
-                F.col("connector_id"),
-            )
-            frontier = add_candidates(frontier, rows)
-            recrawl_hashes = rows.select("url_hash").persist()
-            # delta-frontier persistence: run-start additions exist only in
-            # this run's memory until a commit persists them — ride the
-            # first committed round's add delta (a snapshot commit covers
-            # them implicitly and clears the pending set too). Armed for
-            # "auto" as well: delta commits can engage mid-run there.
-            if cfg.frontier_storage in ("delta", "auto"):
-                pending_add_rows = rows
-            # revoked-seen hashes: size-gated. Small waves (--force on a
-            # connector, images recheck — thousands) collect into the
-            # table's driver cuckoo, which rides the existing bitset
-            # broadcast for free. Big waves (change-rate recrawl at web
-            # scale is 10^7-8 URLs/day) NEVER collect: they persist as a
-            # bucket-partitioned parquet sidecar that filter_unseen
-            # consumes with a distributed hash-keyed join — the exact same
-            # shape seen_delta already uses.
-            # gate CUMULATIVELY: the cuckoo keeps prior waves (a second
-            # run(recrawl=...) on the same engine adds to it), and
-            # mark_deleted raises past the combined total — a per-wave
-            # check would crash that second run instead of falling back
-            # to the sidecar branch below. ONE bounded action decides:
-            # more than `room` hashes back means the wave overflows.
-            room = max(
-                0,
-                BloomTable.REVOKED_DRIVER_MAX
-                - self.bloom_table.n_revoked_driver,
-            )
-            _rc = [
-                r["url_hash"]
-                for r in recrawl_hashes.limit(room + 1).collect()
-            ]
-            if len(_rc) <= room:
-                n_rc = len(_rc)
-                self.bloom_table.mark_deleted(np.array(_rc, dtype=np.int64))
-            else:
-                import os as _os
-
-                n_rc = recrawl_hashes.count()
-                rv_dir = _os.path.join(cfg.ckpt_dir, "_revoked_sidecar")
-                (
-                    recrawl_hashes.select("url_hash")
-                    .repartition(
-                        self.bloom_table.n_partitions,
-                        F.pmod(
-                            F.col("url_hash"),
-                            F.lit(self.bloom_table.n_partitions),
-                        ),
-                    )
-                    .write.mode("overwrite")
-                    .parquet(rv_dir)
-                )
-                self.bloom_table.set_revoked_df(spark.read.parquet(rv_dir))
-            if frontier_rows is not None:
-                frontier_rows += n_rc
-
-        # live robots acquisition: effective politeness from any prior
-        # probes, then a run-start wave over seed (+ recrawl) hosts so the
-        # FIRST pop already honors their rules; the per-round wave below
-        # covers hosts newly discovered by link extraction and (under a
-        # TTL) hosts still being fetched
-        self._refresh_effective_politeness(round_no)
-        if cfg.fetch_mode == "live" and cfg.live_robots:
-            src = self.seeds.select("url")
-            if recrawl is not None:
-                src = src.union(recrawl.select("url"))
-            self._robots_refresh(src, round_no)
-
-        # opt-in live sitemap discovery (fresh starts only: a resume's
-        # round-0 commit already persisted whatever the wave found, and the
-        # seen-set/add_candidates dedup makes re-adding pointless work)
-        if cfg.fetch_mode == "live" and cfg.live_sitemaps and latest is None:
-            from crawler_spark.operators.sitemaps import (
-                sitemap_frontier_rows,
-                sitemap_wave,
-            )
-
-            hosts = (
-                self.seeds.select(
-                    "url", url_host(F.col("url")).alias("host")
-                )
-                .where(F.col("host").isNotNull())
-                .groupBy("host")
-                .agg(F.min("url").alias("url"))
-            )
-            sm_rows = sitemap_frontier_rows(
-                sitemap_wave(
-                    hosts,
-                    timeout_s=cfg.robots_timeout_s,
-                    user_agent=cfg.user_agent,
-                    max_children_per_host=cfg.sitemap_max_children,
-                ),
-                round_added=round_no,
-            ).persist()
-            n_sm = sm_rows.count()  # bounded: hosts × sitemap entries
-            if n_sm:
-                frontier = add_candidates(frontier, sm_rows)
-                frontier_unioned = True
-                if frontier_rows is not None:
-                    frontier_rows += n_sm
-                if cfg.frontier_storage in ("delta", "auto"):
-                    fr_cols = [f.name for f in schemas.FRONTIER.fields]
-                    pending_add_rows = (
-                        sm_rows.select(*fr_cols)
-                        if pending_add_rows is None
-                        else pending_add_rows.select(*fr_cols).union(
-                            sm_rows.select(*fr_cols)
-                        )
-                    )
-            else:
-                sm_rows.unpersist()
-
-        # run-start frontier built ONCE: with recrawl/sitemap rows unioned
-        # in, pop's window, its join-back and the first commit's
-        # remove_popped would each rebuild the add_candidates lineage.
-        # Gated on the driver-known tiny bound, so a big frontier is never
-        # pinned in executor storage.
-        aqe_min, _ = tiny_round_thresholds(
-            spark.sparkContext.defaultParallelism, cfg
-        )
-        if (
-            frontier_unioned
-            and frontier_rows is not None
-            and frontier_rows < aqe_min
-        ):
-            frontier = frontier.localCheckpoint(eager=True)
-        # an exactly-empty frontier (a complete checkpoint) runs no round
-        frontier_empty = frontier_exact and frontier_rows == 0
-
-        start_latest = latest if latest is not None else -1
-        # the round whose commit the bloom table must cover to be trusted
-        last_committed: int | None = latest
-        # running seen-set size from the committed manifests (no Spark job);
-        # drives the use_bloom="auto" exact→Bloom switch
-        seen_count = self.ckpt.sum_metric("fetched_ok") if latest is not None else 0
-
-        def bloom_enabled(seen_count: int) -> bool:
-            # takes the RUNNING count as an argument: _run_rounds owns the
-            # increment, so a closure over this scope's local would freeze
-            # the auto-switch at the resume-time value
-            if cfg.use_bloom == "auto":
-                return seen_count >= cfg.bloom_auto_threshold
-            return bool(cfg.use_bloom)
-
-        def seen_df() -> DataFrame:
-            if cfg.force:
-                # --force ignores PRE-RUN history only: pages fetched by
-                # THIS forced run become seen again, so a URL re-discovered
-                # later in the same run (related link, second seed) is not
-                # re-fetched — the reference analog is --force refetching
-                # once, after which the rewritten file short-circuits repeat
-                # encounters (base.js:135-138,165). Always-empty here would
-                # loop forever on cyclic related graphs.
-                d = self.ckpt.load_all_deltas(
-                    spark, "seen_delta", after=start_latest
-                )
-                return d if d is not None else self._empty(schemas.URL_SEEN)
-            if recrawl_hashes is None:
-                d = self.ckpt.load_all_deltas(spark, "seen_delta")
-                return d if d is not None else self._empty(schemas.URL_SEEN)
-            # revoke recrawl hashes ONLY from deltas that predate this run —
-            # once re-fetched, their fresh delta makes them seen again
-            old = self.ckpt.load_all_deltas(spark, "seen_delta", upto=start_latest)
-            new = self.ckpt.load_all_deltas(spark, "seen_delta", after=start_latest)
-            if old is not None:
-                old = old.join(
-                    recrawl_hashes.select(F.col("url_hash").alias("__rc_h")),
-                    old["url_hash"] == F.col("__rc_h"),
-                    "left_anti",
-                )
-            parts = [p for p in (old, new) if p is not None]
-            if not parts:
-                return self._empty(schemas.URL_SEEN)
-            d = parts[0]
-            for p in parts[1:]:
-                d = d.unionByName(p)
-            return d
-
-        def all_seen_df() -> DataFrame:
-            # UNFILTERED deltas, for Bloom builds only: the bitsets may
-            # over-approximate (force-excluded / revoked hashes included) —
-            # the safe direction, since a bloom hit only routes the row to
-            # the exact confirm against seen_df(), the filtered truth. An
-            # under-approximating bloom built from the filtered view would
-            # go stale the moment a later resume drops the force flag.
-            d = self.ckpt.load_all_deltas(spark, "seen_delta")
-            return d if d is not None else self._empty(schemas.URL_SEEN)
-
-        # session AQE + shuffle-width settings, restored on exit; per-round
-        # the engine toggles AQE off AND narrows the shuffle width below
-        # cfg.aqe_min_batch popped URLs (see field doc) — with AQE off,
-        # every shuffle otherwise runs the session's full
-        # spark.sql.shuffle.partitions tasks over a handful of rows
-        orig_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        orig_shuffle = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        try:
-            return self._run_rounds(
-                frontier, round_no, latest, last_committed, start_latest,
-                seen_count, metrics_log, recrawl_hashes,
-                bloom_enabled, seen_df, all_seen_df, orig_aqe, orig_shuffle,
-                frontier_rows, pending_add_rows, frontier_empty,
-            )
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", orig_aqe)
-            spark.conf.set("spark.sql.shuffle.partitions", orig_shuffle)
-
-    def _run_rounds(
-        self, frontier, round_no, latest, last_committed, start_latest,
-        seen_count, metrics_log, recrawl_hashes,
-        bloom_enabled, seen_df, all_seen_df, orig_aqe, orig_shuffle="200",
-        frontier_rows=None, pending_add_rows=None, frontier_empty=False,
-    ) -> CrawlResult:
-        spark, cfg = self.spark, self.cfg
-        # tiny-round thresholds derived from CLUSTER WIDTH (unless pinned):
-        # the AQE/narrow-shuffle switch scales with defaultParallelism so a
-        # 4000-core cluster keeps its optimizations at proportionally bigger
-        # "tiny" rounds, and the narrowed width never starves the cluster
-        # below 1/8 of its cores (local[32] → the measured 100k / floor 4)
+        frontier, n_frontier, exact = self._start_frontier(latest)
         aqe_min, shuffle_floor = tiny_round_thresholds(
             spark.sparkContext.defaultParallelism, cfg
         )
-        # whether fetched pages carry a lang column, decided ONCE from the
-        # run's inputs: live_fetch always emits `lang`, fixture mode
-        # inherits it from the pages table. Checking `details.columns` /
-        # `recs.columns` in the loop would force a full analysis of those
-        # deep plans every round.
-        has_lang = (
-            cfg.fetch_mode == "live"
-            or "lang" in set(self.pages.schema.fieldNames())
+        run = _RunState(
+            frontier=frontier,
+            frontier_rows=n_frontier,
+            round_no=0 if latest is None else latest + 1,
+            start_latest=-1 if latest is None else latest,
+            last_committed=latest,
+            seen_count=(
+                self.ckpt.sum_metric("fetched_ok") if latest is not None else 0
+            ),
+            # session AQE + shuffle-width settings, restored on exit;
+            # per-round the engine toggles AQE off AND narrows the shuffle
+            # width below cfg.aqe_min_batch popped URLs (see field doc) —
+            # with AQE off, every shuffle otherwise runs the session's full
+            # spark.sql.shuffle.partitions tasks over a handful of rows
+            orig_aqe=spark.conf.get("spark.sql.adaptive.enabled", "true"),
+            orig_shuffle=spark.conf.get("spark.sql.shuffle.partitions", "200"),
+            aqe_min=aqe_min,
+            shuffle_floor=shuffle_floor,
+            # whether fetched pages carry a lang column, decided ONCE from
+            # the run's inputs: live_fetch always emits `lang`, fixture mode
+            # inherits it from the pages table. Checking a round frame's
+            # `.columns` would force a full analysis of its deep plan.
+            has_lang=(
+                cfg.fetch_mode == "live"
+                or "lang" in set(self.pages.schema.fieldNames())
+            ),
         )
-        import os as _os
+        try:
+            unioned = recrawl is not None
+            if recrawl is not None:
+                self._add_recrawl(run, recrawl)
+            # live robots acquisition: effective politeness from any prior
+            # probes, then a run-start wave over seed (+ recrawl) hosts so
+            # the FIRST pop already honors their rules; the per-round wave
+            # at commit covers hosts newly discovered by link extraction
+            # and (under a TTL) hosts still being fetched
+            self._refresh_effective_politeness(run.round_no)
+            if cfg.fetch_mode == "live" and cfg.live_robots:
+                src = self.seeds.select("url")
+                if recrawl is not None:
+                    src = src.union(recrawl.select("url"))
+                self._robots_refresh(src, run.round_no)
+            # opt-in live sitemap discovery (fresh starts only: a resume's
+            # round-0 commit already persisted whatever the wave found, and
+            # the seen-set/add_candidates dedup makes re-adding pointless)
+            if cfg.fetch_mode == "live" and cfg.live_sitemaps and latest is None:
+                unioned = self._add_sitemaps(run) or unioned
+            # run-start frontier built ONCE: with recrawl/sitemap rows
+            # unioned in, pop's window, its join-back and the first commit's
+            # remove_popped would each rebuild the add_candidates lineage.
+            # Gated on the driver-known tiny bound, so a big frontier is
+            # never pinned in executor storage.
+            if (
+                unioned
+                and run.frontier_rows is not None
+                and run.frontier_rows < aqe_min
+            ):
+                run.frontier = run.frontier.localCheckpoint(eager=True)
+            # an exactly-empty frontier (a complete checkpoint) runs no round
+            run.frontier_empty = exact and run.frontier_rows == 0
+            return self._run_rounds(run)
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", run.orig_aqe)
+            spark.conf.set("spark.sql.shuffle.partitions", run.orig_shuffle)
+            for df in run.run_caches:
+                df.unpersist()
 
-        _debug_rt = _os.environ.get("SPARK_GRAFT_ROUND_TIMING")
+    def _wipe(self) -> None:
+        """Fresh start over an existing checkpoint (cli --no-resume /
+        --force): wipe committed rounds, compacts, and the bitset table —
+        otherwise stale rounds beyond this run's last round contaminate the
+        assembled outputs and hijack later resumes."""
+        import shutil
 
+        self.ckpt.wipe()
+        shutil.rmtree(self.bloom_table.root, ignore_errors=True)
+        if self.cfg.bloom_partitions is None:
+            self.bloom_table = BloomTable.adopt(self.bloom_table.root)
+        else:
+            self.bloom_table = BloomTable(
+                self.bloom_table.root, self.cfg.bloom_partitions
+            )
+
+    def _start_frontier(
+        self, latest: int | None
+    ) -> tuple[DataFrame, int | None, bool]:
+        """(frontier, driver-known row count, whether the count is EXACT)
+        at run start: the latest committed state on resume, the seed list
+        on a fresh crawl. The count is exact for a snapshot footer or the
+        seed count, an upper bound after a delta replay, and None when an
+        old manifest lacks the metric (which disables layout sizing, never
+        correctness)."""
+        if latest is None:
+            frontier = seeds_to_frontier(self.seeds)
+            n = frontier.count()  # seed list: tiny by contract
+            # createDataFrame seed frames default to the session's full
+            # parallelism — dozens of near-empty partitions that round 0's
+            # whole pop/anti-join/union pipeline then inherits
+            return frontier.coalesce(max(1, -(-n // 1_000_000))), n, True
+        # branch on what the checkpoint actually contains, not the config
+        # string: in "auto" mode delta commits engage past the row
+        # threshold, so the latest round may or may not carry a frontier
+        # snapshot — ckpt.has_table is the ground truth
+        if self.ckpt.has_table(latest, "frontier"):
+            frontier = self.ckpt.load(self.spark, latest, "frontier")
+            n = self.ckpt.round_metric(latest, "frontier_rows")
+            return frontier, None if n is None else int(n), True
+        # mid-interval resume: snapshot + delta replay (identical state by
+        # construction — see _load_frontier_state). The row bound is the
+        # snapshot's exact count plus each later delta round's committed
+        # adds bound, so auto-mode's delta-engagement check survives the
+        # resume.
+        frontier, snap = self._load_frontier_state(latest)
+        n = self.ckpt.round_metric(snap, "frontier_rows")
+        if n is not None:
+            for q in self.ckpt.committed_rounds():
+                if snap < q <= latest:
+                    adds = self.ckpt.round_metric(q, "frontier_adds")
+                    if adds is None:
+                        # old manifest without the adds bound: an unknown
+                        # term makes the whole bound unknown — never
+                        # silently under-count (the bound gates broadcasts
+                        # and the auto delta-engagement check)
+                        n = None
+                        break
+                    n += int(adds)
+        return frontier, None if n is None else int(n), False
+
+    def _add_recrawl(self, run: _RunState, recrawl: DataFrame) -> None:
+        """Revoke the seen status of ``recrawl``'s URLs and put them back
+        in the frontier."""
+        cfg = self.cfg
+        rows = frontier_rows(
+            recrawl,
+            F.col("url"),
+            depth=0,
+            seed_idx=0,
+            page_no=0,
+            in_page_idx=0,
+            dfs_rank=0,
+            round_added=run.round_no,
+            kind="record",
+            connector_id=F.col("connector_id"),
+        )
+        run.frontier = add_candidates(run.frontier, rows)
+        hashes = run.recrawl_hashes = rows.select("url_hash").persist()
+        run.run_caches.append(hashes)
+        # delta-frontier persistence: run-start additions exist only in
+        # this run's memory until a commit persists them — ride the first
+        # committed round's add delta (a snapshot commit covers them
+        # implicitly and clears the pending set too). Armed for "auto" as
+        # well: delta commits can engage mid-run there.
+        if cfg.frontier_storage in ("delta", "auto"):
+            run.pending_add_rows = rows
+        # revoked-seen hashes: size-gated. Small waves (--force on a
+        # connector, images recheck — thousands) collect into the table's
+        # driver cuckoo, which rides the existing bitset broadcast for free.
+        # Big waves (change-rate recrawl at web scale is 10^7-8 URLs/day)
+        # NEVER collect: they persist as a bucket-partitioned parquet
+        # sidecar that filter_unseen consumes with a distributed hash-keyed
+        # join — the exact same shape seen_delta already uses.
+        # gate CUMULATIVELY: the cuckoo keeps prior waves (a second
+        # run(recrawl=...) on the same engine adds to it), and mark_deleted
+        # raises past the combined total — a per-wave check would crash
+        # that second run instead of falling back to the sidecar branch
+        # below. ONE bounded action decides: more than `room` hashes back
+        # means the wave overflows.
+        room = max(
+            0,
+            BloomTable.REVOKED_DRIVER_MAX - self.bloom_table.n_revoked_driver,
+        )
+        head = [r["url_hash"] for r in hashes.limit(room + 1).collect()]
+        if len(head) <= room:
+            n_revoked = len(head)
+            self.bloom_table.mark_deleted(np.array(head, dtype=np.int64))
+        else:
+            import os
+
+            n_revoked = hashes.count()
+            rv_dir = os.path.join(cfg.ckpt_dir, "_revoked_sidecar")
+            n_parts = self.bloom_table.n_partitions
+            (
+                hashes.select("url_hash")
+                .repartition(
+                    n_parts, F.pmod(F.col("url_hash"), F.lit(n_parts))
+                )
+                .write.mode("overwrite")
+                .parquet(rv_dir)
+            )
+            self.bloom_table.set_revoked_df(self.spark.read.parquet(rv_dir))
+        if run.frontier_rows is not None:
+            run.frontier_rows += n_revoked
+
+    def _add_sitemaps(self, run: _RunState) -> bool:
+        """One live sitemap wave over the seed hosts; its URLs join the
+        frontier. Returns whether the wave found any."""
+        from crawler_spark.operators.sitemaps import (
+            sitemap_frontier_rows,
+            sitemap_wave,
+        )
+
+        cfg = self.cfg
+        hosts = (
+            self.seeds.select("url", url_host(F.col("url")).alias("host"))
+            .where(F.col("host").isNotNull())
+            .groupBy("host")
+            .agg(F.min("url").alias("url"))
+        )
+        sm_rows = sitemap_frontier_rows(
+            sitemap_wave(
+                hosts, timeout_s=cfg.robots_timeout_s, user_agent=cfg.user_agent
+            ),
+            round_added=run.round_no,
+        ).persist()
+        n_sm = sm_rows.count()  # bounded: hosts × sitemap entries
+        if not n_sm:
+            sm_rows.unpersist()
+            return False
+        run.run_caches.append(sm_rows)
+        run.frontier = add_candidates(run.frontier, sm_rows)
+        if run.frontier_rows is not None:
+            run.frontier_rows += n_sm
+        if cfg.frontier_storage in ("delta", "auto"):
+            # both are builder output in FRONTIER column order
+            run.pending_add_rows = (
+                sm_rows
+                if run.pending_add_rows is None
+                else run.pending_add_rows.union(sm_rows)
+            )
+        return True
+
+    def _bloom_enabled(self, seen_count: int) -> bool:
+        if self.cfg.use_bloom == "auto":
+            return seen_count >= self.cfg.bloom_auto_threshold
+        return bool(self.cfg.use_bloom)
+
+    def _deltas_or_empty(self, name: str, schema, **window) -> DataFrame:
+        d = self.ckpt.load_all_deltas(self.spark, name, **window)
+        return d if d is not None else self._empty(schema)
+
+    def _seen_df(self, run: _RunState) -> DataFrame:
+        """The URL-seen set the exact anti-join and the Bloom confirm
+        read."""
+        if self.cfg.force:
+            # --force ignores PRE-RUN history only: pages fetched by THIS
+            # forced run become seen again, so a URL re-discovered later in
+            # the same run (related link, second seed) is not re-fetched —
+            # the reference analog is --force refetching once, after which
+            # the rewritten file short-circuits repeat encounters
+            # (base.js:135-138,165). Always-empty here would loop forever on
+            # cyclic related graphs.
+            return self._deltas_or_empty(
+                "seen_delta", schemas.URL_SEEN, after=run.start_latest
+            )
+        if run.recrawl_hashes is None:
+            return self._deltas_or_empty("seen_delta", schemas.URL_SEEN)
+        # revoke recrawl hashes ONLY from deltas that predate this run —
+        # once re-fetched, their fresh delta makes them seen again
+        load = self.ckpt.load_all_deltas
+        old = load(self.spark, "seen_delta", upto=run.start_latest)
+        new = load(self.spark, "seen_delta", after=run.start_latest)
+        if old is not None:
+            old = old.join(
+                run.recrawl_hashes.select(F.col("url_hash").alias("__rc_h")),
+                old["url_hash"] == F.col("__rc_h"),
+                "left_anti",
+            )
+        parts = [p for p in (old, new) if p is not None]
+        if not parts:
+            return self._empty(schemas.URL_SEEN)
+        d = parts[0]
+        for p in parts[1:]:
+            d = d.unionByName(p)
+        return d
+
+    def _all_seen_df(self) -> DataFrame:
+        """UNFILTERED seen deltas, for Bloom builds only: the bitsets may
+        over-approximate (force-excluded / revoked hashes included) — the
+        safe direction, since a bloom hit only routes the row to the exact
+        confirm against _seen_df(), the filtered truth. An
+        under-approximating bloom built from the filtered view would go
+        stale the moment a later resume drops the force flag."""
+        return self._deltas_or_empty("seen_delta", schemas.URL_SEEN)
+
+    # ---- the round loop: one method per stage ------------------------
+
+    def _run_rounds(self, run: _RunState) -> CrawlResult:
+        """Rounds until the frontier is exhausted or ``max_rounds``. Each
+        stage's wall lands in the round's ``stage_s``: the stages before
+        the commit in the committed manifest, all eight in the in-memory
+        round log (``CrawlResult.metrics``)."""
         # the loop ends when a commit's EXACT frontier footer count is 0;
         # delta-frontier rounds carry only an upper bound and end through
-        # the n_popped == 0 path below
-        while round_no < cfg.max_rounds and not frontier_empty:
-            import time as _time
-
-            round_t0 = _time.time()
-            _sect_t = [round_t0]
-
-            def _sect(label: str) -> None:
-                if _debug_rt:
-                    now = _time.time()
-                    print(
-                        f"[round {round_no}] {label}: "
-                        f"{now - _sect_t[0]:.2f}s", flush=True,
-                    )
-                    _sect_t[0] = now
-
-            seen = seen_df()
-            # driver-known politeness size bound (robots probe cache bytes;
-            # None without a probe cache — user rows are config scale and
-            # keep their broadcast): gates every per-host broadcast this
-            # round — a probed table spanning millions of hosts degrades to
-            # shuffle joins instead of blowing the driver
-            pol_bytes = self._robots.nbytes()
-            allowed = (
-                apply_robots(frontier, self.politeness, politeness_bytes=pol_bytes)
-                if self.politeness is not None
-                else frontier
-            )
-            # retry backoff eligibility (§2.9): rows delayed past this round
-            # stay in the frontier but cannot be popped yet
-            eligible = allowed.where(F.col("not_before") <= F.lit(round_no))
-            # persist the pop result: the salting stage consumes it three
-            # times (host counts, bucket total, the join) and would re-run
-            # the window shuffle each time otherwise
-            # persist (NOT localCheckpoint): a cached plan keeps accurate
-            # Catalyst size statistics, so downstream joins against the
-            # bounded round batch stay auto-broadcast; a LogicalRDD from
-            # localCheckpoint reports defaultSizeInBytes and silently
-            # degrades them to shuffle joins (measured: 3x slower commits)
-            popped_raw = pop_batch(
-                eligible,
-                self.politeness,
-                cfg.default_budget,
-                cfg.global_batch,
-                # driver-known bound gating the join-back broadcast: pops
-                # can never exceed the manifest-carried frontier row bound
-                popped_bound=frontier_rows,
-                politeness_bytes=pol_bytes,
-            ).persist()
-            # ONE action sizes everything downstream: n_popped doubles as
-            # the round-batch count (repartition preserves it), the salt
-            # stage's explicit partition count, and the AQE small-round
-            # switch — the salting stage's own two sizing jobs are skipped.
-            # Each extra driver action re-analyzes the full round DAG, which
-            # at small rounds costs more than the job itself.
-            n_popped = popped_raw.count()
-            _sect("pop+count")
-            if n_popped == 0:
-                popped_raw.unpersist()
-                # nothing eligible now — jump to the earliest FUTURE backoff
-                # round among robots-ALLOWED rows. Robots-disallowed rows are
-                # never popped and linger with not_before <= round_no; taking
-                # min over the raw frontier would see them, conclude
-                # nxt <= round_no, and silently drop pending future retries.
-                nxt = (
-                    allowed.where(F.col("not_before") > F.lit(round_no))
-                    .agg(F.min("not_before"))
-                    .first()[0]
-                )
+        # the empty-pop path
+        while run.round_no < self.cfg.max_rounds and not run.frontier_empty:
+            rnd = _Round(no=run.round_no)
+            with rnd.stage("pop"):
+                self._pop(run, rnd)
+            if rnd.n_popped == 0:
+                nxt = self._earliest_backoff(rnd)
                 if nxt is None:
                     break
-                round_no = int(nxt)
+                run.round_no = nxt
                 continue
+            with rnd.stage("fetch"):
+                self._fetch(rnd)
+            with rnd.stage("sidecar_upkeep"):
+                self._sidecar_upkeep(run, rnd)
+            with rnd.stage("extract"):
+                self._extract(run, rnd)
+            with rnd.stage("expand"):
+                self._expand(rnd)
+            with rnd.stage("seen_filter"):
+                self._seen_filter(run, rnd)
+            with rnd.stage("commit"):
+                self._commit(run, rnd)
+            with rnd.stage("bloom_upkeep"):
+                self._bloom_upkeep(run, rnd)
+            self._end_round(run, rnd)
+        webtext = self._deltas_or_empty("webtext_delta", schemas.WEBTEXT)
+        if self.cfg.keep_best or self.cfg.dedup_paragraphs:
+            webtext = self._curate_webtext(webtext)
+        return CrawlResult(
+            records=self._deltas_or_empty("records_delta", schemas.RECORDS),
+            webtext=webtext,
+            url_seen=self._deltas_or_empty("seen_delta", schemas.URL_SEEN),
+            fetch_log=self._deltas_or_empty("fetch_log_delta", schemas.FETCH_LOG),
+            rounds=run.round_no,
+            metrics=run.metrics_log,
+        )
 
-            if orig_aqe == "true":
-                want = "false" if n_popped < aqe_min else "true"
-                if spark.conf.get("spark.sql.adaptive.enabled") != want:
-                    spark.conf.set("spark.sql.adaptive.enabled", want)
-            # narrow the shuffle width while the round batch is tiny: with
-            # AQE off, every shuffle (frontier dedup, window pop, bloom
-            # routing) otherwise launches the session's full width over a
-            # handful of rows — task-launch overhead, not work. Affects
-            # plan-time only, so the NEXT round's pop inherits this round's
-            # width: rounds of similar size, self-correcting, and restored
-            # on run exit. Never widened past the session setting.
-            want_shuffle = str(
-                min(
-                    int(orig_shuffle),
-                    max(shuffle_floor, -(-n_popped // max(1, cfg.target_per_task))),
-                )
-                if n_popped < aqe_min
-                else int(orig_shuffle)
+    def _pop(self, run: _RunState, rnd: _Round) -> None:
+        """Robots rules, backoff eligibility and the per-host budget pop,
+        then the round's size switches and the salted host repartition."""
+        spark, cfg = self.spark, self.cfg
+        # driver-known politeness size bound (robots probe cache bytes;
+        # None without a probe cache — user rows are config scale and keep
+        # their broadcast): gates every per-host broadcast this round — a
+        # probed table spanning millions of hosts degrades to shuffle joins
+        # instead of blowing the driver
+        rnd.pol_bytes = self._robots.nbytes()
+        rnd.allowed = (
+            apply_robots(
+                run.frontier, self.politeness, politeness_bytes=rnd.pol_bytes
             )
-            if spark.conf.get("spark.sql.shuffle.partitions") != want_shuffle:
-                spark.conf.set("spark.sql.shuffle.partitions", want_shuffle)
+            if self.politeness is not None
+            else run.frontier
+        )
+        # retry backoff eligibility (§2.9): rows delayed past this round
+        # stay in the frontier but cannot be popped yet
+        eligible = rnd.allowed.where(F.col("not_before") <= F.lit(rnd.no))
+        # persist the pop result: the salting stage consumes it three times
+        # (host counts, bucket total, the join) and would re-run the window
+        # shuffle each time otherwise. persist, not localCheckpoint: the
+        # size statistics are the same either way (a cached or checkpointed
+        # plan reports its origin plan's estimate), so the joins against
+        # the round batch rely on the explicit broadcast gates below
+        # (popped_bound, batch_bound), not on statistics — and a persisted
+        # block lost with its executor is recomputed from lineage, where a
+        # lost local-checkpoint block fails the job
+        rnd.popped_raw = pop_batch(
+            eligible,
+            self.politeness,
+            cfg.default_budget,
+            cfg.global_batch,
+            # driver-known bound gating the join-back broadcast: pops can
+            # never exceed the manifest-carried frontier row bound
+            popped_bound=run.frontier_rows,
+            politeness_bytes=rnd.pol_bytes,
+        ).persist()
+        # ONE action sizes everything downstream: n_popped doubles as the
+        # round-batch count (repartition preserves it), the salt stage's
+        # explicit partition count, and the AQE small-round switch — the
+        # salting stage's own two sizing jobs are skipped. Each extra
+        # driver action re-analyzes the full round DAG, which at small
+        # rounds costs more than the job itself.
+        n = rnd.n_popped = rnd.popped_raw.count()
+        if n == 0:
+            rnd.popped_raw.unpersist()
+            return
+        rnd.tiny = n < run.aqe_min
+        if run.orig_aqe == "true":
+            want = "false" if rnd.tiny else "true"
+            if spark.conf.get("spark.sql.adaptive.enabled") != want:
+                spark.conf.set("spark.sql.adaptive.enabled", want)
+        # narrow the shuffle width while the round batch is tiny: with AQE
+        # off, every shuffle (frontier dedup, window pop, bloom routing)
+        # otherwise launches the session's full width over a handful of
+        # rows — task-launch overhead, not work. Affects plan-time only, so
+        # the NEXT round's pop inherits this round's width: rounds of
+        # similar size, self-correcting, and restored on run exit. Never
+        # widened past the session setting.
+        rnd.width = int(run.orig_shuffle)
+        if rnd.tiny:
+            rnd.width = min(
+                rnd.width,
+                max(run.shuffle_floor, -(-n // max(1, cfg.target_per_task))),
+            )
+        if spark.conf.get("spark.sql.shuffle.partitions") != str(rnd.width):
+            spark.conf.set("spark.sql.shuffle.partitions", str(rnd.width))
+        # live mode: no salt — one worker per host so the in-worker
+        # crawl-delay bounds the host's AGGREGATE request rate (k salt
+        # buckets would fetch at k× the allowed rate). Live sizing stays in
+        # the salting stage (a host count there is noise next to network
+        # wall); fixture mode passes the explicit count.
+        salt = cfg.fetch_mode != "live"
+        rnd.popped = salted_host_repartition(
+            rnd.popped_raw,
+            cfg.target_per_task,
+            salt=salt,
+            num_partitions=(
+                max(1, -(-n // cfg.target_per_task)) if salt else None
+            ),
+            # gates the host-counts broadcast (counts rows ≤ n_popped)
+            batch_bound=n,
+        ).persist()
+        rnd.remaining = remove_popped(run.frontier, rnd.popped)
 
-            # live mode: no salt — one worker per host so the in-worker
-            # crawl-delay bounds the host's AGGREGATE request rate
-            # (k salt buckets would fetch at k× the allowed rate). Live
-            # sizing stays in the salting stage (a host count there is noise
-            # next to network wall); fixture mode passes the explicit count.
-            salt = cfg.fetch_mode != "live"
-            popped = salted_host_repartition(
-                popped_raw,
-                cfg.target_per_task,
-                salt=salt,
-                num_partitions=(
-                    max(1, -(-n_popped // cfg.target_per_task))
-                    if salt
-                    else None
+    def _earliest_backoff(self, rnd: _Round) -> int | None:
+        """After an empty pop: the earliest FUTURE backoff round among
+        robots-ALLOWED rows, or None when nothing is left. Robots-disallowed
+        rows are never popped and linger with not_before <= the round;
+        taking min over the raw frontier would see them, conclude
+        nxt <= round, and silently drop pending future retries."""
+        nxt = (
+            rnd.allowed.where(F.col("not_before") > F.lit(rnd.no))
+            .agg(F.min("not_before"))
+            .first()[0]
+        )
+        return None if nxt is None else int(nxt)
+
+    def _fetch(self, rnd: _Round) -> None:
+        """Fetch the popped batch, materialized exactly once, and split it
+        into ok / retry rows and the round's seen additions."""
+        cfg = self.cfg
+        live = cfg.fetch_mode == "live"
+        if live:
+            fetched = live_fetch(
+                self._live_fetch_input(rnd),
+                timeout_s=cfg.fetch_timeout_s,
+                user_agent=cfg.user_agent,
+                connectors=self.connectors,
+            )
+        else:
+            fetched = fixture_fetch(
+                rnd.popped, self.pages, batch_bound=rnd.n_popped
+            )
+        fetched = rnd.fetched = _materialize_once(fetched, rnd)
+        rnd.ok, rnd.retry, _ = split_retries(
+            fetched, cfg.max_attempts, live_retryable() if live else None
+        )
+        # the round's seen additions: every 200 body, PLUS — under
+        # conditional fetch — every 304 answer. A 304 confirms the stored
+        # copy is current, so the URL is seen again; without this, a
+        # recrawl-revoked URL answering 304 stayed permanently unseen (304s
+        # land in `dead` via split_retries) and every later rediscovery
+        # re-fetched it for another 304 (round-4 ADVICE).
+        rnd.seen_round = rnd.ok.select("url_hash")
+        if cfg.conditional_fetch and live:
+            rnd.seen_round = rnd.seen_round.union(
+                fetched.where(F.col("status") == 304).select("url_hash")
+            )
+
+    def _live_fetch_input(self, rnd: _Round) -> DataFrame:
+        """The popped batch with each host's crawl delay (configured, times
+        any adaptive backoff factor) and, under conditional fetch, each
+        URL's stored validators."""
+        cfg = self.cfg
+        batch_in = rnd.popped
+        if self.politeness is not None:
+            delays = self.politeness.select(
+                F.col("host").alias("__d_host"),
+                F.col("crawl_delay_ms"),
+            )
+            # pol_bytes gate, same as apply_robots/pop_batch
+            if (
+                rnd.pol_bytes is None
+                or rnd.pol_bytes <= politeness_mod.BROADCAST_MAX_BYTES
+            ):
+                delays = F.broadcast(delays)
+            batch_in = (
+                batch_in.join(
+                    delays, batch_in["host"] == F.col("__d_host"), "left"
+                )
+                .drop("__d_host")
+                .withColumn(
+                    "crawl_delay_ms",
+                    F.coalesce(F.col("crawl_delay_ms"), F.lit(0)),
+                )
+            )
+        fac = self._load_adaptive_factors() if cfg.adaptive_politeness else None
+        if fac is not None:
+            fac = fac.where(F.col("factor") > 1.0).select(
+                F.col("host").alias("__f_host"), "factor"
+            )
+            fac = self._adaptive.broadcast_if_small(fac)
+            if "crawl_delay_ms" not in batch_in.columns:
+                batch_in = batch_in.withColumn("crawl_delay_ms", F.lit(0))
+            # a throttling host with no configured delay backs off from the
+            # base; factors multiply the larger
+            backed_off = (
+                F.greatest(
+                    F.col("crawl_delay_ms"), F.lit(ADAPTIVE_BASE_DELAY_MS)
+                )
+                * F.col("factor")
+            ).cast("long")
+            batch_in = (
+                batch_in.join(
+                    fac, batch_in["host"] == F.col("__f_host"), "left"
+                )
+                .drop("__f_host")
+                .withColumn(
+                    "crawl_delay_ms",
+                    F.when(F.col("factor").isNotNull(), backed_off).otherwise(
+                        F.col("crawl_delay_ms")
+                    ),
+                )
+                .drop("factor")
+            )
+        vals = self._load_validators() if cfg.conditional_fetch else None
+        if vals is not None:
+            vals = self._validators.broadcast_if_small(vals)
+            # revisited URLs pick up their stored validators; first-time
+            # URLs join to NULLs → unconditional GET
+            batch_in = batch_in.join(
+                vals.withColumnRenamed("url", "__v_url"),
+                batch_in["url"] == F.col("__v_url"),
+                "left",
+            ).drop("__v_url")
+        return batch_in
+
+    def _sidecar_upkeep(self, run: _RunState, rnd: _Round) -> None:
+        """Learn from this round's fetches into the checkpoint sidecars;
+        what they learn applies from the NEXT round. Also the opt-in WARC
+        mirror of the round's fetched bytes."""
+        cfg = self.cfg
+        live = cfg.fetch_mode == "live"
+        if live and cfg.adaptive_politeness:
+            # throttle signals → backoff factors for the next delay join
+            self._adaptive_update(rnd.fetched, rnd.no)
+        if cfg.trap_detection:
+            # fetched bytes → trap sketches for the next candidate gate
+            self._trap_update(rnd.ok, rnd.no)
+        if cfg.canonical_collapse:
+            # rel=canonical declarations → aliases for the next candidates
+            self._alias_update(rnd.ok, rnd.no)
+        if cfg.conditional_fetch and live:
+            # response validators: the next revisit of these URLs goes out
+            # conditional; 304 answers are unchanged-visit evidence for the
+            # change-rate revisit estimator
+            self._validators_update(rnd.ok, rnd.no)
+            self._nm_update(rnd.fetched, rnd.no)
+        if cfg.warc_out:
+            # archive-as-you-crawl: this round's fetched bytes as WARC
+            # containers (ok is already materialized, so this re-reads the
+            # cache, not the network)
+            import os
+
+            from crawler_spark.sources.warc import warc_export
+
+            wcols = [
+                F.col("url"),
+                F.col("warc_ts"),
+                F.col("body").alias("html"),
+            ]
+            wkw = {}
+            if run.has_lang:
+                wcols.append(F.col("lang"))
+                wkw["lang_col"] = "lang"
+            warc_export(
+                rnd.ok.select(*wcols),
+                os.path.join(cfg.warc_out, f"round={rnd.no}"),
+                **wkw,
+            )
+
+    def _extract(self, run: _RunState, rnd: _Round) -> None:
+        """ONE extraction pass over the round's ok pages: search pages →
+        record links + next pages (S1/A1/O3), detail pages → records +
+        webtext + related links. One Python stage, joined once to the page
+        metadata and materialized once (recs and the frontier both read
+        it, and live secondary chains must see each record exactly once);
+        links and recs are projections of it."""
+        cfg = self.cfg
+        page_meta = rnd.ok.select(
+            "url",
+            "kind",
+            "connector_id",
+            "seed_idx",
+            "page_no",
+            "in_page_idx",
+            "dfs_rank",
+            "depth",
+            "score",
+            *(["lang"] if run.has_lang else []),
+            "warc_ts",
+        ).join(
+            F.broadcast(self.seed_cfg.select("connector_id", "related_policy")),
+            "connector_id",
+            "left",
+        )
+        extracted = (
+            rnd.ok.select("url", "body", "connector_id", "kind")
+            .mapInPandas(
+                extract_round_batch(
+                    extract_links_batch_for(self.connectors),
+                    extract_records_batch_for(self.connectors),
                 ),
-                # gates the host-counts broadcast (counts rows ≤ n_popped)
-                batch_bound=n_popped,
-            ).persist()
+                ROUND_OUT_SCHEMA,
+            )
+            .join(rnd.small(page_meta), "url")
+        )
+        # the eager localCheckpoint is the one materialization, in big
+        # rounds too: the checkpointed plan keeps the origin's size
+        # statistics, and a persisted extract plan, self-joined by the
+        # secondary enrichment below, grew big-round planning past the
+        # driver heap
+        extracted = extracted.localCheckpoint(eager=True)
+        # page kind → output rows: link rows (null out_url included) for
+        # "search", one record row per detail page otherwise
+        n_rows = dict(extracted.groupBy("kind").count().collect())
+        rnd.n_links = n_rows.pop("search", 0)
+        rnd.n_recs = sum(n_rows.values())
+        rnd.links = extracted.where(F.col("kind") == "search").select(
+            F.col("url").alias("parent_url"),
+            "connector_id",
+            "seed_idx",
+            "page_no",
+            "depth",
+            "score",
+            "total_count",
+            "out_url",
+            "out_idx",
+        )
+        rnd.recs = extracted.where(F.col("kind") != "search")
+        # Gallica-style typed secondary fetches (gallica.js:83-148): inline
+        # enrichment hops merged into the parent records BEFORE any write;
+        # never frontier candidates, never in the seen set
+        if secondary.chain_len(self.connectors) and rnd.n_recs:
+            # connector ids and metadata come from `ok`/`page_meta`, not
+            # from `recs`: every extra reference to the extract lineage
+            # multiplies the plan big rounds analyze
+            rec_rows, sec_caches = secondary.enrich_secondaries(
+                rnd.recs.select(*RECORD_OUT_COLS),
+                rnd.ok.select("url", "connector_id"),
+                self.pages,
+                self.connectors,
+                fetch_mode=cfg.fetch_mode,
+                timeout_s=cfg.fetch_timeout_s,
+                politeness=self.politeness,
+                politeness_bytes=rnd.pol_bytes,
+                user_agent=cfg.user_agent,
+                # each hop's wave is one URL per chained record at most
+                # (seed_wave / next_url are per-record scalars), so the
+                # round's record count bounds every hop's semi-filter
+                batch_bound=rnd.n_recs,
+            )
+            rnd.caches += sec_caches
+            # the enrichment lineage carries HTTP side effects in live
+            # mode: materialize it exactly once, before the commit's
+            # parallel writes can race to be its first materializer
+            rnd.recs = _materialize_once(
+                rec_rows.join(rnd.small(page_meta), "url"), rnd
+            )
 
-            remaining = remove_popped(frontier, popped)
-            if cfg.fetch_mode == "live":
-                batch_in = popped
-                if self.politeness is not None:
-                    delays = self.politeness.select(
-                        F.col("host").alias("__d_host"),
-                        F.col("crawl_delay_ms"),
-                    )
-                    # pol_bytes gate, same as apply_robots/pop_batch
-                    if (
-                        pol_bytes is None
-                        or pol_bytes <= politeness_mod.BROADCAST_MAX_BYTES
-                    ):
-                        delays = F.broadcast(delays)
-                    batch_in = (
-                        popped.join(
-                            delays,
-                            popped["host"] == F.col("__d_host"),
-                            "left",
-                        )
-                        .drop("__d_host")
-                        .withColumn(
-                            "crawl_delay_ms",
-                            F.coalesce(F.col("crawl_delay_ms"), F.lit(0)),
-                        )
-                    )
-                if cfg.adaptive_politeness:
-                    fac = self._load_adaptive_factors()
-                    if fac is not None:
-                        fac = fac.where(F.col("factor") > 1.0).select(
-                            F.col("host").alias("__f_host"), "factor"
-                        )
-                        fac = self._adaptive.broadcast_if_small(fac)
-                        if "crawl_delay_ms" not in batch_in.columns:
-                            batch_in = batch_in.withColumn(
-                                "crawl_delay_ms", F.lit(0)
-                            )
-                        # a throttling host with no configured delay backs
-                        # off from the base; factors multiply the larger
-                        batch_in = (
-                            batch_in.join(
-                                fac,
-                                batch_in["host"] == F.col("__f_host"),
-                                "left",
-                            )
-                            .drop("__f_host")
-                            .withColumn(
-                                "crawl_delay_ms",
-                                F.when(
-                                    F.col("factor").isNotNull(),
-                                    (
-                                        F.greatest(
-                                            F.col("crawl_delay_ms"),
-                                            F.lit(
-                                                cfg.adaptive_base_delay_ms
-                                            ),
-                                        )
-                                        * F.col("factor")
-                                    ).cast("long"),
-                                ).otherwise(F.col("crawl_delay_ms")),
-                            )
-                            .drop("factor")
-                        )
-                if cfg.conditional_fetch:
-                    vals = self._load_validators()
-                    if vals is not None:
-                        vals = self._validators.broadcast_if_small(vals)
-                        # revisited URLs pick up their stored validators;
-                        # first-time URLs join to NULLs → unconditional GET
-                        batch_in = batch_in.join(
-                            vals.withColumnRenamed("url", "__v_url"),
-                            batch_in["url"] == F.col("__v_url"),
-                            "left",
-                        ).drop("__v_url")
-                fetched = live_fetch(
-                    batch_in,
-                    timeout_s=cfg.fetch_timeout_s,
-                    user_agent=cfg.user_agent,
-                    connectors=self.connectors,
-                )
-            else:
-                fetched = fixture_fetch(popped, self.pages, batch_bound=n_popped)
-            # materialize the fetch EXACTLY once, before any of the
-            # concurrent commit writes downstream can race to be its first
-            # materializer — concurrent first-computes of an uncached block
-            # each run the lineage, and in live mode that lineage is real
-            # HTTP requests (duplicate fetches would break politeness)
-            tiny = n_popped < aqe_min
-            if tiny:
-                # driver-bound tail/test rounds: EVERY Dataset op eagerly
-                # re-analyzes its whole logical plan, so at tiny batches the
-                # dominant round cost is Catalyst analysis over the
-                # fetch-join lineage, paid again by each downstream op. The
-                # eager localCheckpoint is the one materialization AND
-                # swaps the plan for a shallow LogicalRDD scan of it. Big
-                # rounds keep the full plan — analysis amortizes, and
-                # accurate size stats matter there for join planning.
-                # Coalesce after: the fetch join inherits the pages scan's
-                # file partitioning (32+ mostly-empty partitions for a
-                # handful of rows), and the coalesced count is what EVERY
-                # downstream stage of the round then runs at.
-                fetched = fetched.localCheckpoint(eager=True).coalesce(
-                    int(want_shuffle)
-                )
-            else:
-                fetched = fetched.persist()
-                fetched.count()
-            if cfg.fetch_mode == "live":
-                ok, retry, dead = split_retries(
-                    fetched, cfg.max_attempts, live_retryable()
-                )
-                if cfg.adaptive_politeness:
-                    # learn from this round's throttle signals; factors
-                    # apply from the NEXT round's delay join
-                    self._adaptive_update(fetched, round_no)
-            else:
-                ok, retry, dead = split_retries(fetched, cfg.max_attempts)
-            if cfg.trap_detection:
-                # learn from this round's fetched bytes; suppression
-                # applies from the NEXT round's candidate gate
-                self._trap_update(ok, round_no)
-            if cfg.canonical_collapse:
-                # learn rel=canonical declarations from this round's
-                # bytes; rewrites apply from the NEXT round's candidates
-                self._alias_update(ok, round_no)
-            # the round's seen additions: every 200 body, PLUS — under
-            # conditional fetch — every 304 answer. A 304 confirms the
-            # stored copy is current, so the URL is seen again; without
-            # this, a recrawl-revoked URL answering 304 stayed permanently
-            # unseen (304s land in `dead` via split_retries) and every
-            # later rediscovery re-fetched it for another 304 (round-4
-            # ADVICE).
-            seen_round = ok.select("url_hash")
-            if cfg.conditional_fetch and cfg.fetch_mode == "live":
-                seen_round = seen_round.union(
-                    fetched.where(F.col("status") == 304).select("url_hash")
-                )
-                # persist this round's response validators; the next
-                # revisit of these URLs goes out conditional
-                self._validators_update(ok, round_no)
-                # and log 304 answers as unchanged-visit evidence for
-                # the change-rate revisit estimator
-                self._nm_update(fetched, round_no)
-            if cfg.warc_out:
-                # archive-as-you-crawl: this round's fetched bytes as
-                # WARC containers (ok is already materialized, so this
-                # re-reads the cache, not the network)
-                from crawler_spark.sources.warc import warc_export
-
-                wcols = [
-                    F.col("url"),
-                    F.col("warc_ts"),
-                    F.col("body").alias("html"),
-                ]
-                wkw = {}
-                if has_lang:
-                    wcols.append(F.col("lang"))
-                    wkw["lang_col"] = "lang"
-                warc_export(
-                    ok.select(*wcols),
-                    _os.path.join(cfg.warc_out, f"round={round_no}"),
-                    **wkw,
-                )
-            _sect("fetch")
-
-            # lineage-truncated frames (LogicalRDD) report no size stats, so
-            # the planner can no longer see that round-bounded frames are
-            # broadcast-small; at tiny batches hint it explicitly — the
-            # driver KNOWS the bound (n_popped). Big rounds keep planner /
-            # AQE decisions.
-            _b = F.broadcast if tiny else (lambda df: df)
-
-            # ---- ONE extraction pass over the round's ok pages: search
-            # pages → record links + next pages (S1/A1/O3), detail pages →
-            # records + webtext + related links. One Python stage, joined
-            # once to the page metadata and materialized once (recs and
-            # the frontier both read it, and live secondary chains below
-            # must see each record exactly once); links and recs are
-            # projections of it.
-            page_meta = ok.select(
-                "url",
-                "kind",
+    def _expand(self, rnd: _Round) -> None:
+        """Next-round frontier candidates: record links, next search pages
+        and related records, through the opt-in URL gates."""
+        record_cands = frontier_rows(
+            rnd.links.where(F.col("out_url").isNotNull()),
+            F.col("out_url"),
+            depth=F.col("depth") + 1,
+            seed_idx=F.col("seed_idx"),
+            page_no=F.col("page_no"),
+            in_page_idx=F.col("out_idx"),
+            dfs_rank=0,
+            round_added=rnd.no + 1,
+            kind="record",
+            connector_id=F.col("connector_id"),
+        )
+        child_rank = F.when(
+            F.col("related_policy") == "before_parent_write", F.col("pos")
+        ).otherwise(F.col("dfs_rank") + 1 + F.col("pos"))
+        related_cands = frontier_rows(
+            rnd.recs.where(_expandable() & (F.size("related_urls") > 0)).select(
                 "connector_id",
                 "seed_idx",
                 "page_no",
                 "in_page_idx",
                 "dfs_rank",
                 "depth",
-                "score",
-                *(["lang"] if has_lang else []),
-                "warc_ts",
-            ).join(
-                F.broadcast(
-                    self.seed_cfg.select("connector_id", "related_policy")
-                ),
-                "connector_id",
-                "left",
-            )
-            extracted = (
-                ok.select("url", "body", "connector_id", "kind")
-                .mapInPandas(
-                    extract_round_batch(
-                        extract_links_batch_for(self.connectors),
-                        extract_records_batch_for(self.connectors),
-                    ),
-                    ROUND_OUT_SCHEMA,
-                )
-                .join(_b(page_meta), "url")
-            )
-            # the eager localCheckpoint is the one materialization, in big
-            # rounds too: the checkpointed plan keeps the origin's size
-            # statistics, and a persisted extract plan, self-joined by the
-            # secondary enrichment below, grew big-round planning past the
-            # driver heap
-            extracted = extracted.localCheckpoint(eager=True)
-            # page kind → output rows: link rows (null out_url included)
-            # for "search", one record row per detail page otherwise
-            n_rows = dict(extracted.groupBy("kind").count().collect())
-            n_links = n_rows.pop("search", 0)
-            n_recs = sum(n_rows.values())
-            links = extracted.where(F.col("kind") == "search").select(
-                F.col("url").alias("parent_url"),
-                "connector_id",
-                "seed_idx",
-                "page_no",
-                "depth",
-                "score",
-                "total_count",
-                "out_url",
-                "out_idx",
-            )
-            recs = extracted.where(F.col("kind") != "search")
-            _sect("extract")
-
-            record_cands = (
-                links.where(F.col("out_url").isNotNull())
-                .select(
-                    F.col("out_url").alias("url"),
-                    url_hash(F.col("out_url")).alias("url_hash"),
-                    url_host(F.col("out_url")).alias("host"),
-                    (F.col("depth") + 1).cast("int").alias("depth"),
-                    F.lit(0.0).alias("score"),
-                    F.col("seed_idx"),
-                    F.col("page_no"),
-                    F.col("out_idx").alias("in_page_idx"),
-                    F.lit(0).alias("dfs_rank"),
-                    F.lit(round_no + 1).alias("round_added"),
-                    F.lit(0).alias("attempts"),
-                    F.lit(round_no + 1).alias("not_before"),
-                    F.lit("record").alias("kind"),
-                    F.col("connector_id"),
-                )
-            )
-
-            # pagination arithmetic (A1): one row per search page
-            per_page = links.groupBy(
-                "parent_url", "connector_id", "seed_idx", "page_no", "depth"
-            ).agg(
-                F.count("out_url").alias("n_links"),
-                F.first("total_count", ignorenulls=True).alias("total_count"),
-            )
-            per_page = per_page.join(
-                F.broadcast(self.seed_cfg), "connector_id", "left"
-            )
-            total_pages = F.ceil(F.col("total_count") / F.col("limit"))
-            last_page = (F.col("start_page") + total_pages - 1).cast("int")
-            # Known-total styles fan out ALL remaining pages from the FIRST
-            # page — page URLs are derivable, so deep paginations stop
-            # serializing the round loop (a 10^4-page host becomes one
-            # round's worth of frontier instead of 10^4 sequential rounds).
-            # Parity-safe: ordering comes from the (seed, page, idx, rank)
-            # tuple, never from discovery time; the URL-seen set is
-            # unchanged. The reference's page-at-a-time loop (base.js:67-113)
-            # is a sequential-client artifact, not a semantic.
-            # unknown_total keeps chaining (next page only exists if this
-            # one was non-empty — artic.js:59-78). page/offset styles with a
-            # null total (count selector missing/unparsable) fan out NOTHING:
-            # the reference computes totalPages from the count and stops
-            # after page 1 when it is absent (base.js:68-69), and the replay
-            # oracle does the same — chaining them would fetch pages the
-            # oracle never visits and break crawl-order/URL-seen parity.
-            known = F.col("paging_style").isin(
-                "page", "offset", "path"
-            ) & F.col("total_count").isNotNull()
-            fanout = (
-                F.when(
-                    known
-                    & (F.col("page_no") == F.col("start_page"))
-                    & (last_page >= F.col("page_no") + 1),
-                    F.expr("sequence(page_no + 1, last_page_v)"),
-                )
-                .when(
-                    (F.col("paging_style") == "unknown_total")
-                    & (F.col("n_links") > 0)
-                    & (
-                        F.col("max_offset").isNull()
-                        | (
-                            (F.col("page_no") + 1 - F.col("start_page"))
-                            * F.col("limit")
-                            < F.col("max_offset")
-                        )
-                    ),
-                    F.array(F.col("page_no") + 1),
-                )
-                # mfa-boston.js:53-60: chain the next page only while the
-                # current page came back FULL — a short (or empty) page ends
-                # this seed's chain and the crawl falls through to the next
-                # seed, which is already an independent frontier row here
-                .when(
-                    (F.col("paging_style") == "short_page")
-                    & (F.col("n_links") >= F.col("limit")),
-                    F.array(F.col("page_no") + 1),
-                )
-                .otherwise(F.array().cast("array<int>"))
-            )
-            fanned = per_page.withColumn("last_page_v", last_page).select(
-                "parent_url",
-                "connector_id",
-                "seed_idx",
-                "depth",
-                "paging_style",
-                "start_page",
-                "limit",
-                F.explode(fanout.cast("array<int>")).alias("next_pno"),
-            )
-            # page-style rewrites page=N; offset-style rewrites
-            # offset=(N - start_page)*limit (met-museum offset+perPage)
-            next_url = F.when(
-                F.col("paging_style") == "offset",
-                F.regexp_replace(
-                    F.col("parent_url"),
-                    r"offset=\d+",
-                    F.concat(
-                        F.lit("offset="),
-                        (
-                            (F.col("next_pno") - F.col("start_page"))
-                            * F.col("limit")
-                        ).cast("string"),
-                    ),
-                ),
-            ).when(
-                # venetian.js:27-29: the page ordinal is a PATH segment
-                # (`/page:N/`), not a query param
-                F.col("paging_style") == "path",
-                F.regexp_replace(
-                    F.col("parent_url"),
-                    r"page:\d+",
-                    F.concat(F.lit("page:"), F.col("next_pno").cast("string")),
-                ),
-            ).otherwise(
-                F.regexp_replace(
-                    F.col("parent_url"),
-                    r"page=\d+",
-                    F.concat(F.lit("page="), F.col("next_pno").cast("string")),
-                )
-            )
-            next_pages = fanned.select(
-                next_url.alias("url"),
-                url_hash(next_url).alias("url_hash"),
-                url_host(next_url).alias("host"),
-                F.col("depth").cast("int").alias("depth"),
-                F.lit(0.0).alias("score"),
-                F.col("seed_idx"),
-                F.col("next_pno").cast("int").alias("page_no"),
-                F.lit(-1).alias("in_page_idx"),
-                F.lit(0).alias("dfs_rank"),
-                F.lit(round_no + 1).alias("round_added"),
-                F.lit(0).alias("attempts"),
-                F.lit(round_no + 1).alias("not_before"),
-                F.lit("search").alias("kind"),
-                F.col("connector_id"),
-            )
-
-            # Gallica-style typed secondary fetches (gallica.js:83-148):
-            # inline enrichment hops merged into the parent records BEFORE
-            # any write; never frontier candidates, never in the seen set
-            sec_caches: list = []
-            if secondary.chain_len(self.connectors) and n_recs:
-                # connector ids and metadata come from `ok`/`page_meta`,
-                # not from `recs`: every extra reference to the extract
-                # lineage multiplies the plan big rounds analyze
-                rec_rows, sec_caches = secondary.enrich_secondaries(
-                    recs.select(*RECORD_OUT_COLS),
-                    ok.select("url", "connector_id"),
-                    self.pages,
-                    self.connectors,
-                    fetch_mode=cfg.fetch_mode,
-                    timeout_s=cfg.fetch_timeout_s,
-                    politeness=self.politeness,
-                    politeness_bytes=pol_bytes,
-                    user_agent=cfg.user_agent,
-                    # each hop's wave is one URL per chained record at most
-                    # (seed_wave / next_url are per-record scalars), so the
-                    # round's record count bounds every hop's semi-filter
-                    batch_bound=n_recs,
-                )
-                recs = rec_rows.join(_b(page_meta), "url")
-                # the enrichment lineage carries HTTP side effects in live
-                # mode: materialize it exactly once, before the commit's
-                # parallel writes can race to be its first materializer
-                if tiny:
-                    recs = recs.coalesce(int(want_shuffle)).localCheckpoint(
-                        eager=True
-                    )
-                else:
-                    recs = recs.persist()
-                    recs.count()
-                _sect("secondary")
-
-            expandable = (F.col("kind") == "record") & (
-                F.col("related_policy").isin("after_parent_write", "before_parent_write")
-            )
-            # joconde write-before-parent: parent's write rank trails its
-            # related children (SURVEY.md §7.3.2)
-            parent_rank = F.when(
-                expandable & (F.col("related_policy") == "before_parent_write"),
-                F.size("related_urls"),
-            ).otherwise(F.col("dfs_rank"))
-
-            # image metadata extracted by the connector (title/description
-            # from tag attrs — mfa-boston.js:105-114; full id/title/
-            # description/author/license on GraphQL entities —
-            # paris-musees.js:181-191) carries through to the record sink;
-            # text/localFilename/hasError are sink-stage fields
-            keep_pred = F.col("keep")
-            if cfg.soft404_filter:
-                from crawler_spark.functions.urlfilter import is_soft404
-
-                # HTTP-200 error templates never reach the sinks; the
-                # visit itself stays (seen set, frontier removal)
-                keep_pred = keep_pred & ~is_soft404(
-                    F.col("text"), cfg.soft404_short_chars
-                )
-            records_out = recs.where(keep_pred).select(
-                "connector_id",
-                F.col("record_id").alias("id"),
-                "url",
-                "fields",
-                F.transform(
-                    "images",
-                    lambda im: F.struct(
-                        im["id"].alias("id"),
-                        im["url"].alias("url"),
-                        im["title"].alias("title"),
-                        im["description"].alias("description"),
-                        im["author"].alias("author"),
-                        im["license"].alias("license"),
-                        F.lit(None).cast("string").alias("text"),
-                        F.lit(None).cast("string").alias("localFilename"),
-                        F.lit(False).alias("hasError"),
-                    ),
-                ).alias("images"),
-                F.col("raw"),
-                "seed_idx",
-                "page_no",
-                "in_page_idx",
-                parent_rank.cast("int").alias("dfs_rank"),
-            )
-            # webtext in the input_hint shape: url, text (+ lang, warc_ts
-            # carried from the fetched page)
-            lang_col = (
-                F.col("lang")
-                if has_lang
-                else F.lit(None).cast("string").alias("lang")
-            )
-            if cfg.lang_detect:
-                from crawler_spark.functions.textstats import langid
-
-                lang_col = F.coalesce(
-                    F.col("lang") if has_lang else F.lit(None).cast("string"),
-                    langid(F.col("text")),
-                ).alias("lang")
-            webtext_out = recs.where(keep_pred).select(
-                "url",
-                "text",
-                lang_col,
-                "warc_ts",
-            )
-
-            child_rank = F.when(
-                F.col("related_policy") == "before_parent_write", F.col("pos")
-            ).otherwise(F.col("dfs_rank") + 1 + F.col("pos"))
-            related_cands = (
-                recs.where(expandable & (F.size("related_urls") > 0))
-                .select(
-                    "connector_id",
-                    "seed_idx",
-                    "page_no",
-                    "in_page_idx",
-                    "dfs_rank",
-                    "depth",
-                    "related_policy",
-                    F.posexplode("related_urls").alias("pos", "rel_url"),
-                )
-                .select(
-                    F.col("rel_url").alias("url"),
-                    url_hash(F.col("rel_url")).alias("url_hash"),
-                    url_host(F.col("rel_url")).alias("host"),
-                    (F.col("depth") + 1).cast("int").alias("depth"),
-                    F.lit(0.0).alias("score"),
-                    F.col("seed_idx"),
-                    F.col("page_no"),
-                    F.col("in_page_idx"),
-                    child_rank.cast("int").alias("dfs_rank"),
-                    F.lit(round_no + 1).alias("round_added"),
-                    F.lit(0).alias("attempts"),
-                    F.lit(round_no + 1).alias("not_before"),
-                    F.lit("related").alias("kind"),
-                    F.col("connector_id"),
-                )
-            )
-
-            # ---- J1: new candidates minus seen minus this round's fetches
-            # positional unions over an enforced static column order:
-            # unionByName forces a full re-analysis of both (deep) children
-            # per call, a measurable slice of per-round driver wall
-            fr_cols = self._candidate_schema_cols()
-            cands = (
-                record_cands.select(*fr_cols)
-                .union(next_pages.select(*fr_cols))
-                .union(related_cands.select(*fr_cols))
-            )
-            # opt-in URL curation gate: junk shapes and blocklisted
-            # registrable domains drop here, before any seen/frontier work
-            # (the gate is pure codegen + at most one anti-join; Catalyst
-            # broadcasts a small blocklist on its own size estimate)
-            if (
-                cfg.url_junk_filter
-                or self.url_blocklist is not None
-                or cfg.trap_detection
-            ):
-                from crawler_spark.functions import urlfilter as _uf
-
-                if cfg.url_junk_filter:
-                    cands = cands.where(~_uf.url_junk(F.col("url")))
-                if self.url_blocklist is not None:
-                    cands = cands.join(
-                        self.url_blocklist.select(
-                            F.lower("domain").alias("__blk")
-                        ),
-                        _uf.registrable_domain(F.col("url"))
-                        == F.col("__blk"),
-                        "left_anti",
-                    )
-                if cfg.trap_detection:
-                    trapped = self._trapped_hosts()
-                    if trapped is not None:
-                        cands = cands.join(
-                            trapped.select(
-                                F.col("host").alias("__trap_h")
-                            ),
-                            _uf.url_host(F.col("url"))
-                            == F.col("__trap_h"),
-                            "left_anti",
-                        )
-            if cfg.canonical_collapse:
-                # rewrite candidates to collapsed canonical identity so
-                # the seen anti-join and frontier key on terminal URLs
-                amap = self._load_alias_map()
-                if amap is not None:
-                    cands = self._apply_alias_map(cands, amap)
-            seen_plus = seen.select("url_hash").union(seen_round)
-            bloom_now = bloom_enabled(seen_count)
-            bloom_v = (
-                self.bloom_table.latest_version() if bloom_now else None
-            )
-            # a bitset is only trusted when it covers EVERY committed round
-            # (version == last commit) AND was built under THIS config
-            # (persisted n_partitions/fpp meta): a stale bloom — or one whose
-            # pid routing differs from the current bloom_partitions — could
-            # answer "definitely new" for a committed hash, the unsafe
-            # direction. Either mismatch falls back to the exact anti-join
-            # for this round; the maintenance step below then full-rebuilds.
-            bloom_ok = (
-                bloom_now
-                and last_committed is not None
-                and bloom_v == last_committed
-                and self.bloom_table.compatible(bloom_v)
-            )
-            round_caches: list = []
-            if bloom_ok:
-                # Bloom covers only COMMITTED rounds — a candidate discovered
-                # in the same round that fetched it would pass the "definitely
-                # new" shortcut, so the bounded round batch gets its own exact
-                # anti-join (broadcast at scale: |ok| ≤ sum of host budgets).
-                fresh = self.bloom_table.filter_unseen(
-                    cands, seen, version=bloom_v,
-                    cache_registry=round_caches,
-                    # driver-side estimate from the running seen count —
-                    # skips the per-round n_bits metadata job "auto" costs
-                    strategy=self.bloom_table.pick_strategy(seen_count),
-                )
-                fresh = fresh.join(
-                    _b(seen_round.select(F.col("url_hash").alias("__ok_h"))),
-                    fresh["url_hash"] == F.col("__ok_h"),
-                    "left_anti",
-                )
-            else:
-                seen_side = seen_plus.select(F.col("url_hash").alias("__h"))
-                if tiny and seen_count + n_popped < 1_000_000:
-                    # the exact branch's right side is the WHOLE seen
-                    # history — broadcast only while the driver-known count
-                    # says it fits comfortably
-                    seen_side = F.broadcast(seen_side)
-                fresh = cands.join(
-                    seen_side,
-                    cands["url_hash"] == F.col("__h"),
-                    "left_anti",
-                )
-
-            # OPIC cash: fetched pages distribute score over out-links (A7)
-            if cfg.use_opic:
-                parents = links.groupBy(F.col("parent_url").alias("url")).agg(
-                    F.collect_list("out_url").alias("out_urls"),
-                    F.first("score").alias("cash"),
-                )
-                parents = parents.withColumn(
-                    "cash", F.col("cash") + F.lit(cfg.opic_initial_cash)
-                )
-                cash_in = opic_mod.distribute_cash(parents, "out_urls", "cash")
-                fresh = opic_mod.apply_cash(fresh, cash_in)
-
-            # exponential backoff: attempt k retries no earlier than
-            # round + 2^(k-1) (base.js:46-56 mapped onto rounds, §2.9)
-            # cap the EXPONENT, not the shifted value: Java's int shift
-            # takes the count mod 32, so shiftleft(1, 32) wraps to 1 and a
-            # 33rd attempt would retry every round instead of backing off
-            retry_rows = retry.select(*self._candidate_schema_cols()).withColumn(
-                "not_before",
-                (
-                    F.lit(round_no)
-                    + F.expr("shiftleft(1, least(attempts - 1, 6))")
-                ).cast("int"),
-            )
-            round_adds = fresh.select(*fr_cols).union(
-                retry_rows.select(*fr_cols)
-            )
-            frontier_next = add_candidates(
-                remaining,
-                round_adds,
-                # candidates ≤ out-links of a bounded round batch; their
-                # truncated lineage hides that from the planner
-                broadcast_keys=tiny,
-            )
-
-            fetch_log = fetched.select(
-                F.lit(round_no).alias("round"),
-                "url",
-                "status",
-                F.lit(None).cast("string").alias("error"),
-                F.col("bytes"),
-                F.lit(None).cast("double").alias("duration_ms"),
-                F.spark_partition_id().alias("partition_id"),
-            )
-
-            # ---- commit round snapshot (frontier full, rest deltas)
-            # fetch/parse metrics in ONE aggregation over the persisted
-            # fetch result (north_rule: per-round fetch/parse metrics)
-            import time as _time
-
-            # fetch/parse metrics come from the parquet the commit just
-            # wrote, NOT from extra .agg()/.count() actions — each of those
-            # would re-analyze the whole round DAG (the dominant driver cost
-            # at small rounds) and re-launch its broadcast sub-jobs. The
-            # post-write read is bounded: records_written is footer metadata
-            # only (O(files)), and the fetch-log column read is O(round
-            # batch), which the per-host budgets cap by construction.
-            metrics = {
-                "popped": n_popped,
-                "round_wall_s": round(_time.time() - round_t0, 2),
-            }
-            _sect("plan frontier_next")
-            # ---- write layout: tiny rounds otherwise inherit the full
-            # shuffle width (33+ tasks AND files per table for a handful of
-            # rows), and the next round re-reads that fan-out. Deltas are
-            # bounded by the round batch (driver-known: n_popped); the
-            # frontier's bound is last round's EXACT committed row count
-            # (carried in the manifest — no count action ever runs on the
-            # possibly-10^10-row frontier) plus this round's additions. Big
-            # rounds are left to the planner/AQE, and an unknown frontier
-            # bound (old manifests) disables the sizing, never correctness.
-            frontier_out = frontier_next
-            if tiny:
-                delta_parts = max(1, min(32, n_popped // 10_000))
-                shrink = (lambda df: df.coalesce(delta_parts))
-                fr_bound = (
-                    frontier_rows + n_links + n_popped + 4 * n_recs
-                    if frontier_rows is not None
-                    else None
-                )
-                if fr_bound is not None:
-                    # ~1M frontier rows (≈200 B each) per output file
-                    frontier_out = frontier_next.coalesce(
-                        max(1, -(-fr_bound // 1_000_000))
-                    )
-            else:
-                shrink = (lambda df: df)
-            commit_t0 = _time.time()
-            tables = {
-                "seen_delta": shrink(seen_round),
-                "records_delta": shrink(records_out),
-                "webtext_delta": shrink(webtext_out),
-                "fetch_log_delta": shrink(fetch_log),
-            }
-            if cfg.persist_link_graph:
-                # opt-in page→link edge log (hashes only, O(round links)):
-                # the input an OFFLINE scorer (opic.pagerank) needs to
-                # rescore the frontier between crawls — OPIC's online cash
-                # covers in-crawl priority, this covers batch re-ranking.
-                # Both sources ride already-materialized caches (links,
-                # recs), so the extra write stays on the parallel commit.
-                search_edges = links.where(
-                    F.col("out_url").isNotNull()
-                ).select(
-                    url_hash(F.col("parent_url")).alias("src_hash"),
-                    url_hash(F.col("out_url")).alias("dst_hash"),
-                )
-                rel_edges = (
-                    recs.where(expandable & (F.size("related_urls") > 0))
-                    .select("url", F.explode("related_urls").alias("__rel"))
-                    .select(
-                        url_hash(F.col("url")).alias("src_hash"),
-                        url_hash(F.col("__rel")).alias("dst_hash"),
-                    )
-                )
-                tables["link_graph_delta"] = shrink(
-                    search_edges.union(rel_edges)
-                )
-            delta_on = cfg.frontier_storage == "delta" or (
-                cfg.frontier_storage == "auto"
-                and frontier_rows is not None
-                and frontier_rows > cfg.frontier_delta_threshold
-            )
-            snapshot_round = (
-                not delta_on or round_no % cfg.frontier_snapshot_every == 0
-            )
-            if snapshot_round:
-                tables["frontier"] = frontier_out
-            else:
-                # O(round batch) persistence instead of the O(frontier)
-                # snapshot: this round's candidate additions + popped
-                # tombstones. Reconstruction (see _load_frontier_state)
-                # replays remove(dels)-then-add(adds) per round, so any
-                # run-start (recrawl) rows not yet persisted ride this
-                # add delta MINUS the hashes popped this round — a
-                # popped pending URL must not be resurrected by replay.
-                add_out = round_adds
-                if pending_add_rows is not None:
-                    add_out = add_out.union(
-                        remove_popped(
-                            pending_add_rows.select(*fr_cols), popped
-                        ).select(*fr_cols)
-                    )
-                tables["frontier_add"] = shrink(add_out)
-                tables["frontier_del"] = shrink(popped.select("url_hash"))
-            if snapshot_round or "frontier_add" in tables:
-                pending_add_rows = None  # persisted (or covered by snapshot)
-            # live robots: probe hosts first discovered this round (adds
-            # are round-batch-bounded) BEFORE the commit — a kill between
-            # commit and probe would otherwise persist frontier hosts that
-            # resume never probes; killed-before-commit just re-probes an
-            # idempotent cache. The popped batch's hosts ride along so a
-            # TTL re-probes hosts whose backlog is still being fetched
-            # (they may never reappear in adds). These rules serve round
-            # round_no+1 onward — the stamp and TTL age reflect that.
-            self._robots_refresh(
-                round_adds.select("url").union(popped.select("url")),
-                round_no + 1,
-            )
-            self.ckpt.commit_round(
-                round_no,
-                tables,
-                metrics,
-                stats_cb=_round_stats_from_written,
-                # every table rides an already-materialized frame
-                # (`extracted`/`recs` and `fetched` are materialized
-                # eagerly above), so all five writes run fully parallel —
-                # commit wall is the slowest write, not the sum
-            )
-            # commit + bloom maintenance run AFTER round_wall_s is stamped
-            # (they materialize the round's lineage); time them separately
-            # so the north-rule metrics expose where a round's wall goes
-            metrics["commit_wall_s"] = round(_time.time() - commit_t0, 2)
-            fr_committed = metrics.get("frontier_rows")
-            frontier_empty = fr_committed == 0
-            if fr_committed is not None:
-                frontier_rows = fr_committed
-            elif frontier_rows is not None:
-                # delta round: exact count unknown without a frontier scan;
-                # carry a driver-side UPPER bound (adds can only dedup
-                # down) — used only to size write layouts and the auto-mode
-                # delta-engagement check, never semantics. The add-delta
-                # footer count is exact; n_popped covers rows the replay
-                # may re-admit via the popped-tombstone ordering.
-                adds_bound = metrics.get("frontier_adds")
-                if adds_bound is None:
-                    adds_bound = n_links + n_popped
-                frontier_rows += adds_bound
-            bloom_t0 = _time.time()
-            round_log = {"round": round_no, **metrics}
-            metrics_log.append(round_log)
-
-            seen_count += metrics["fetched_ok"]
-            if bloom_enabled(seen_count):  # re-check: this round may cross the switch
-                # ALL bitset maintenance is executor-side: the delta is read
-                # back from the just-committed seen_delta parquet — the loop
-                # never collects round hashes to the driver
-                if (
-                    self.bloom_table.deleted is not None
-                    and recrawl_hashes is not None
-                ):
-                    # a re-fetched recrawl URL is seen again: drop its
-                    # revocation so the cuckoo override stops admitting it.
-                    # Bounded driver work: only the (small) revoked set can
-                    # intersect the round batch.
-                    refetched = recrawl_hashes.join(
-                        ok.select(F.col("url_hash").alias("__f_h")),
-                        recrawl_hashes["url_hash"] == F.col("__f_h"),
-                        "left_semi",
-                    ).collect()
-                    for r in refetched:
-                        self.bloom_table.deleted.delete(int(r["url_hash"]))
-                if (
-                    last_committed is None
-                    or round_no % cfg.bloom_rebuild_every == 0
-                    or self.bloom_table.latest_version() != last_committed
-                    or not self.bloom_table.compatible(
-                        self.bloom_table.latest_version()
-                    )
-                ):
-                    # periodic re-size / first build / stale-after-crash /
-                    # config-mismatch (resume with different bloom_partitions
-                    # must NOT incrementally OR into wrong-routed bitsets)
-                    if cfg.bloom_partitions is None:
-                        # auto: re-size from the committed seen count; the
-                        # cuckoo revocations carry over (driver-held state)
-                        resized = BloomTable.sized_for(
-                            self.bloom_table.root, seen_count,
-                            fpp=self.bloom_table.fpp,
-                        )
-                        resized.deleted = self.bloom_table.deleted
-                        resized._deleted_hashes = (
-                            self.bloom_table._deleted_hashes
-                        )
-                        self.bloom_table = resized
-                    self.bloom_table.build(all_seen_df(), version=round_no)
-                else:
-                    self.bloom_table.update(
-                        spark,
-                        from_version=last_committed,
-                        delta=self.ckpt.load(spark, round_no, "seen_delta"),
-                        version=round_no,
-                    )
-            round_log["bloom_wall_s"] = round(_time.time() - bloom_t0, 2)
-            last_committed = round_no
-            ce = cfg.compact_every or cfg.bloom_rebuild_every
-            if round_no > 0 and round_no % ce == 0:
-                self.ckpt.compact(spark, "seen_delta", upto=round_no)
-            if snapshot_round and cfg.frontier_expire_intervals:
-                # bounded delta-frontier history: old snapshots + the
-                # add/del dirs they subsume expire behind the horizon
-                self.ckpt.expire_frontier(cfg.frontier_expire_intervals)
-
-            popped_raw.unpersist()
-            popped.unpersist()
-            fetched.unpersist()
-            recs.unpersist()
-            for df in round_caches:
-                df.unpersist()
-            for df in sec_caches:
-                df.unpersist()
-            # re-read from checkpoint: cuts lineage + is the resume point.
-            # Delta rounds reconstruct snapshot+deltas with the same replay
-            # a resume would run — the in-loop state and the resume state
-            # are the same plan by construction. Branch on what THIS round
-            # actually committed (snapshot_round), never on the config
-            # string: "auto" engages delta commits past the row threshold
-            # and must reload through the replay path too.
-            if snapshot_round:
-                frontier = self.ckpt.load(spark, round_no, "frontier")
-            else:
-                frontier, _ = self._load_frontier_state(round_no)
-            round_no += 1
-
-        def _delta(name: str, schema) -> DataFrame:
-            d = self.ckpt.load_all_deltas(spark, name)
-            return d if d is not None else self._empty(schema)
-
-        webtext = _delta("webtext_delta", schemas.WEBTEXT)
-        if cfg.keep_best or cfg.dedup_paragraphs:
-            webtext = self._curate_webtext(webtext)
-
-        return CrawlResult(
-            records=_delta("records_delta", schemas.RECORDS),
-            webtext=webtext,
-            url_seen=_delta("seen_delta", schemas.URL_SEEN),
-            fetch_log=_delta("fetch_log_delta", schemas.FETCH_LOG),
-            rounds=round_no,
-            metrics=metrics_log,
+                "related_policy",
+                F.posexplode("related_urls").alias("pos", "rel_url"),
+            ),
+            F.col("rel_url"),
+            depth=F.col("depth") + 1,
+            seed_idx=F.col("seed_idx"),
+            page_no=F.col("page_no"),
+            in_page_idx=F.col("in_page_idx"),
+            dfs_rank=child_rank,
+            round_added=rnd.no + 1,
+            kind="related",
+            connector_id=F.col("connector_id"),
         )
+        # positional unions over builder output (FRONTIER column order):
+        # unionByName forces a full re-analysis of both (deep) children per
+        # call, a measurable slice of per-round driver wall
+        rnd.cands = self._gate_candidates(
+            record_cands.union(self._next_pages(rnd)).union(related_cands)
+        )
+
+    def _next_pages(self, rnd: _Round) -> DataFrame:
+        """Pagination arithmetic (A1): the search pages that follow each
+        fetched search page."""
+        per_page = rnd.links.groupBy(
+            "parent_url", "connector_id", "seed_idx", "page_no", "depth"
+        ).agg(
+            F.count("out_url").alias("n_links"),
+            F.first("total_count", ignorenulls=True).alias("total_count"),
+        )
+        per_page = per_page.join(
+            F.broadcast(self.seed_cfg), "connector_id", "left"
+        )
+        total_pages = F.ceil(F.col("total_count") / F.col("limit"))
+        last_page = (F.col("start_page") + total_pages - 1).cast("int")
+        # Known-total styles fan out ALL remaining pages from the FIRST
+        # page — page URLs are derivable, so deep paginations stop
+        # serializing the round loop (a 10^4-page host becomes one round's
+        # worth of frontier instead of 10^4 sequential rounds). Parity-safe:
+        # ordering comes from the (seed, page, idx, rank) tuple, never from
+        # discovery time; the URL-seen set is unchanged. The reference's
+        # page-at-a-time loop (base.js:67-113) is a sequential-client
+        # artifact, not a semantic.
+        # unknown_total keeps chaining (next page only exists if this one
+        # was non-empty — artic.js:59-78). page/offset styles with a null
+        # total (count selector missing/unparsable) fan out NOTHING: the
+        # reference computes totalPages from the count and stops after page
+        # 1 when it is absent (base.js:68-69), and the replay oracle does
+        # the same — chaining them would fetch pages the oracle never
+        # visits and break crawl-order/URL-seen parity.
+        known = F.col("paging_style").isin(
+            "page", "offset", "path"
+        ) & F.col("total_count").isNotNull()
+        fanout = (
+            F.when(
+                known
+                & (F.col("page_no") == F.col("start_page"))
+                & (last_page >= F.col("page_no") + 1),
+                F.expr("sequence(page_no + 1, last_page_v)"),
+            )
+            .when(
+                (F.col("paging_style") == "unknown_total")
+                & (F.col("n_links") > 0)
+                & (
+                    F.col("max_offset").isNull()
+                    | (
+                        (F.col("page_no") + 1 - F.col("start_page"))
+                        * F.col("limit")
+                        < F.col("max_offset")
+                    )
+                ),
+                F.array(F.col("page_no") + 1),
+            )
+            # mfa-boston.js:53-60: chain the next page only while the
+            # current page came back FULL — a short (or empty) page ends
+            # this seed's chain and the crawl falls through to the next
+            # seed, which is already an independent frontier row here
+            .when(
+                (F.col("paging_style") == "short_page")
+                & (F.col("n_links") >= F.col("limit")),
+                F.array(F.col("page_no") + 1),
+            )
+            .otherwise(F.array().cast("array<int>"))
+        )
+        fanned = per_page.withColumn("last_page_v", last_page).select(
+            "parent_url",
+            "connector_id",
+            "seed_idx",
+            "depth",
+            "paging_style",
+            "start_page",
+            "limit",
+            F.explode(fanout.cast("array<int>")).alias("next_pno"),
+        )
+        # page-style rewrites page=N; offset-style rewrites
+        # offset=(N - start_page)*limit (met-museum offset+perPage)
+        next_url = F.when(
+            F.col("paging_style") == "offset",
+            F.regexp_replace(
+                F.col("parent_url"),
+                r"offset=\d+",
+                F.concat(
+                    F.lit("offset="),
+                    (
+                        (F.col("next_pno") - F.col("start_page"))
+                        * F.col("limit")
+                    ).cast("string"),
+                ),
+            ),
+        ).when(
+            # venetian.js:27-29: the page ordinal is a PATH segment
+            # (`/page:N/`), not a query param
+            F.col("paging_style") == "path",
+            F.regexp_replace(
+                F.col("parent_url"),
+                r"page:\d+",
+                F.concat(F.lit("page:"), F.col("next_pno").cast("string")),
+            ),
+        ).otherwise(
+            F.regexp_replace(
+                F.col("parent_url"),
+                r"page=\d+",
+                F.concat(F.lit("page="), F.col("next_pno").cast("string")),
+            )
+        )
+        return frontier_rows(
+            fanned,
+            next_url,
+            depth=F.col("depth"),
+            seed_idx=F.col("seed_idx"),
+            page_no=F.col("next_pno"),
+            in_page_idx=-1,
+            dfs_rank=0,
+            round_added=rnd.no + 1,
+            kind="search",
+            connector_id=F.col("connector_id"),
+        )
+
+    def _gate_candidates(self, cands: DataFrame) -> DataFrame:
+        """Opt-in URL curation gate: junk shapes, blocklisted registrable
+        domains and trapped hosts drop here, before any seen/frontier work
+        (pure codegen + at most one anti-join each; Catalyst broadcasts a
+        small blocklist on its own size estimate). Under canonical
+        collapse, candidates are then rewritten to collapsed canonical
+        identity so the seen anti-join and frontier key on terminal
+        URLs."""
+        cfg = self.cfg
+        if cfg.url_junk_filter or self.url_blocklist is not None or cfg.trap_detection:
+            from crawler_spark.functions import urlfilter as _uf
+
+            if cfg.url_junk_filter:
+                cands = cands.where(~_uf.url_junk(F.col("url")))
+            if self.url_blocklist is not None:
+                cands = cands.join(
+                    self.url_blocklist.select(F.lower("domain").alias("__blk")),
+                    _uf.registrable_domain(F.col("url")) == F.col("__blk"),
+                    "left_anti",
+                )
+            trapped = self._trapped_hosts() if cfg.trap_detection else None
+            if trapped is not None:
+                cands = cands.join(
+                    trapped.select(F.col("host").alias("__trap_h")),
+                    _uf.url_host(F.col("url")) == F.col("__trap_h"),
+                    "left_anti",
+                )
+        if cfg.canonical_collapse:
+            amap = self._load_alias_map()
+            if amap is not None:
+                cands = self._apply_alias_map(cands, amap)
+        return cands
+
+    def _seen_filter(self, run: _RunState, rnd: _Round) -> None:
+        """J1: candidates minus the seen set minus this round's fetches,
+        plus the re-enqueued retries — the round's frontier additions."""
+        cfg = self.cfg
+        seen = self._seen_df(run)
+        bloom_now = self._bloom_enabled(run.seen_count)
+        bloom_v = self.bloom_table.latest_version() if bloom_now else None
+        # a bitset is only trusted when it covers EVERY committed round
+        # (version == last commit) AND was built under THIS config
+        # (persisted n_partitions/fpp meta): a stale bloom — or one whose
+        # pid routing differs from the current bloom_partitions — could
+        # answer "definitely new" for a committed hash, the unsafe
+        # direction. Either mismatch falls back to the exact anti-join for
+        # this round; bloom upkeep then full-rebuilds.
+        bloom_ok = (
+            bloom_now
+            and run.last_committed is not None
+            and bloom_v == run.last_committed
+            and self.bloom_table.compatible(bloom_v)
+        )
+        if bloom_ok:
+            # Bloom covers only COMMITTED rounds — a candidate discovered in
+            # the same round that fetched it would pass the "definitely
+            # new" shortcut, so the bounded round batch gets its own exact
+            # anti-join (broadcast at scale: |ok| ≤ sum of host budgets).
+            fresh = self.bloom_table.filter_unseen(
+                rnd.cands, seen, version=bloom_v,
+                cache_registry=rnd.caches,
+                # driver-side estimate from the running seen count — skips
+                # the per-round n_bits metadata job "auto" costs
+                strategy=self.bloom_table.pick_strategy(run.seen_count),
+            )
+            fresh = fresh.join(
+                rnd.small(rnd.seen_round.select(F.col("url_hash").alias("__ok_h"))),
+                fresh["url_hash"] == F.col("__ok_h"),
+                "left_anti",
+            )
+        else:
+            seen_side = (
+                seen.select("url_hash")
+                .union(rnd.seen_round)
+                .select(F.col("url_hash").alias("__h"))
+            )
+            if rnd.tiny and run.seen_count + rnd.n_popped < 1_000_000:
+                # the exact branch's right side is the WHOLE seen history —
+                # broadcast only while the driver-known count says it fits
+                # comfortably
+                seen_side = F.broadcast(seen_side)
+            fresh = rnd.cands.join(
+                seen_side, rnd.cands["url_hash"] == F.col("__h"), "left_anti"
+            )
+        # OPIC cash: fetched pages distribute score over out-links (A7)
+        if cfg.use_opic:
+            parents = rnd.links.groupBy(F.col("parent_url").alias("url")).agg(
+                F.collect_list("out_url").alias("out_urls"),
+                F.first("score").alias("cash"),
+            )
+            parents = parents.withColumn(
+                "cash", F.col("cash") + F.lit(cfg.opic_initial_cash)
+            )
+            cash_in = opic_mod.distribute_cash(parents, "out_urls", "cash")
+            fresh = opic_mod.apply_cash(fresh, cash_in)
+        # exponential backoff: attempt k retries no earlier than round +
+        # 2^(k-1) (base.js:46-56 mapped onto rounds, §2.9). Cap the
+        # EXPONENT, not the shifted value: Java's int shift takes the count
+        # mod 32, so shiftleft(1, 32) wraps to 1 and a 33rd attempt would
+        # retry every round instead of backing off
+        retry_rows = rnd.retry.select(*_FRONTIER_COLS).withColumn(
+            "not_before",
+            (
+                F.lit(rnd.no) + F.expr("shiftleft(1, least(attempts - 1, 6))")
+            ).cast("int"),
+        )
+        rnd.round_adds = fresh.select(*_FRONTIER_COLS).union(
+            retry_rows.select(*_FRONTIER_COLS)
+        )
+
+    def _commit(self, run: _RunState, rnd: _Round) -> None:
+        """Commit the round (frontier snapshot or delta, and the round's
+        seen/records/webtext/fetch-log deltas), then carry the committed
+        frontier size forward."""
+        frontier_next = add_candidates(
+            rnd.remaining,
+            rnd.round_adds,
+            # candidates ≤ out-links of a bounded round batch; their plan's
+            # size estimate hides that from the planner
+            broadcast_keys=rnd.tiny,
+        )
+        # the manifest carries the walls of the stages before the commit;
+        # fetch/parse metrics come from the parquet the commit writes
+        # (_round_stats_from_written), NOT from extra .agg()/.count()
+        # actions — each of those would re-analyze the whole round DAG (the
+        # dominant driver cost at small rounds) and re-launch its broadcast
+        # sub-jobs
+        rnd.metrics = {"popped": rnd.n_popped, "stage_s": dict(rnd.stage_s)}
+        tables = self._round_tables(run, rnd, frontier_next)
+        run.pending_add_rows = None  # persisted (or covered by a snapshot)
+        # live robots: probe hosts first discovered this round (adds are
+        # round-batch-bounded) BEFORE the commit — a kill between commit
+        # and probe would otherwise persist frontier hosts that resume
+        # never probes; killed-before-commit just re-probes an idempotent
+        # cache. The popped batch's hosts ride along so a TTL re-probes
+        # hosts whose backlog is still being fetched (they may never
+        # reappear in adds). These rules serve round no+1 onward — the
+        # stamp and TTL age reflect that.
+        self._robots_refresh(
+            rnd.round_adds.select("url").union(rnd.popped.select("url")),
+            rnd.no + 1,
+        )
+        # every table rides an already-materialized frame (`extracted`/
+        # `recs` and `fetched` are materialized eagerly), so all writes run
+        # fully parallel — commit wall is the slowest write, not the sum
+        self.ckpt.commit_round(
+            rnd.no, tables, rnd.metrics, stats_cb=_round_stats_from_written
+        )
+        committed = rnd.metrics.get("frontier_rows")
+        run.frontier_empty = committed == 0
+        if committed is not None:
+            run.frontier_rows = committed
+        elif run.frontier_rows is not None:
+            # delta round: exact count unknown without a frontier scan;
+            # carry a driver-side UPPER bound (adds can only dedup down) —
+            # used only to size write layouts and the auto-mode
+            # delta-engagement check, never semantics. The add-delta footer
+            # count is exact; n_popped covers rows the replay may re-admit
+            # via the popped-tombstone ordering.
+            adds_bound = rnd.metrics.get("frontier_adds")
+            if adds_bound is None:
+                adds_bound = rnd.n_links + rnd.n_popped
+            run.frontier_rows += adds_bound
+
+    def _round_tables(
+        self, run: _RunState, rnd: _Round, frontier_next: DataFrame
+    ) -> dict[str, DataFrame]:
+        """The tables the round's commit writes, with their write layout;
+        sets ``rnd.snapshot_round``."""
+        cfg = self.cfg
+        # write layout: tiny rounds otherwise inherit the full shuffle
+        # width (33+ tasks AND files per table for a handful of rows), and
+        # the next round re-reads that fan-out. Deltas are bounded by the
+        # round batch (driver-known: n_popped); the frontier's bound is last
+        # round's EXACT committed row count (carried in the manifest — no
+        # count action ever runs on the possibly-10^10-row frontier) plus
+        # this round's additions. Big rounds are left to the planner/AQE,
+        # and an unknown frontier bound (old manifests) disables the
+        # sizing, never correctness.
+        frontier_out = frontier_next
+        if rnd.tiny:
+            delta_parts = max(1, min(32, rnd.n_popped // 10_000))
+            shrink = (lambda df: df.coalesce(delta_parts))
+            if run.frontier_rows is not None:
+                fr_bound = (
+                    run.frontier_rows + rnd.n_links + rnd.n_popped
+                    + 4 * rnd.n_recs
+                )
+                # ~1M frontier rows (≈200 B each) per output file
+                frontier_out = frontier_next.coalesce(
+                    max(1, -(-fr_bound // 1_000_000))
+                )
+        else:
+            shrink = (lambda df: df)
+        records_out, webtext_out = self._record_sinks(run, rnd)
+        fetch_log = rnd.fetched.select(
+            F.lit(rnd.no).alias("round"),
+            "url",
+            "status",
+            F.lit(None).cast("string").alias("error"),
+            F.col("bytes"),
+            F.lit(None).cast("double").alias("duration_ms"),
+            F.spark_partition_id().alias("partition_id"),
+        )
+        tables = {
+            "seen_delta": shrink(rnd.seen_round),
+            "records_delta": shrink(records_out),
+            "webtext_delta": shrink(webtext_out),
+            "fetch_log_delta": shrink(fetch_log),
+        }
+        if cfg.persist_link_graph:
+            # opt-in page→link edge log (hashes only, O(round links)): the
+            # input an OFFLINE scorer (opic.pagerank) needs to rescore the
+            # frontier between crawls — OPIC's online cash covers in-crawl
+            # priority, this covers batch re-ranking. Both sources ride
+            # already-materialized frames (links, recs), so the extra write
+            # stays on the parallel commit.
+            search_edges = rnd.links.where(
+                F.col("out_url").isNotNull()
+            ).select(
+                url_hash(F.col("parent_url")).alias("src_hash"),
+                url_hash(F.col("out_url")).alias("dst_hash"),
+            )
+            rel_edges = (
+                rnd.recs.where(_expandable() & (F.size("related_urls") > 0))
+                .select("url", F.explode("related_urls").alias("__rel"))
+                .select(
+                    url_hash(F.col("url")).alias("src_hash"),
+                    url_hash(F.col("__rel")).alias("dst_hash"),
+                )
+            )
+            tables["link_graph_delta"] = shrink(search_edges.union(rel_edges))
+        delta_on = cfg.frontier_storage == "delta" or (
+            cfg.frontier_storage == "auto"
+            and run.frontier_rows is not None
+            and run.frontier_rows > cfg.frontier_delta_threshold
+        )
+        rnd.snapshot_round = (
+            not delta_on or rnd.no % cfg.frontier_snapshot_every == 0
+        )
+        if rnd.snapshot_round:
+            tables["frontier"] = frontier_out
+        else:
+            # O(round batch) persistence instead of the O(frontier)
+            # snapshot: this round's candidate additions + popped
+            # tombstones. Reconstruction (see _load_frontier_state) replays
+            # remove(dels)-then-add(adds) per round, so any run-start
+            # (recrawl) rows not yet persisted ride this add delta MINUS the
+            # hashes popped this round — a popped pending URL must not be
+            # resurrected by replay.
+            add_out = rnd.round_adds
+            if run.pending_add_rows is not None:
+                add_out = add_out.union(
+                    remove_popped(
+                        run.pending_add_rows.select(*_FRONTIER_COLS), rnd.popped
+                    ).select(*_FRONTIER_COLS)
+                )
+            tables["frontier_add"] = shrink(add_out)
+            tables["frontier_del"] = shrink(rnd.popped.select("url_hash"))
+        return tables
+
+    def _record_sinks(
+        self, run: _RunState, rnd: _Round
+    ) -> tuple[DataFrame, DataFrame]:
+        """(records, webtext) rows of the round's kept records."""
+        cfg = self.cfg
+        # joconde write-before-parent: parent's write rank trails its
+        # related children (SURVEY.md §7.3.2)
+        parent_rank = F.when(
+            _expandable() & (F.col("related_policy") == "before_parent_write"),
+            F.size("related_urls"),
+        ).otherwise(F.col("dfs_rank"))
+        # image metadata extracted by the connector (title/description from
+        # tag attrs — mfa-boston.js:105-114; full id/title/description/
+        # author/license on GraphQL entities — paris-musees.js:181-191)
+        # carries through to the record sink; text/localFilename/hasError
+        # are sink-stage fields
+        keep_pred = F.col("keep")
+        if cfg.soft404_filter:
+            from crawler_spark.functions.urlfilter import is_soft404
+
+            # HTTP-200 error templates never reach the sinks; the visit
+            # itself stays (seen set, frontier removal)
+            keep_pred = keep_pred & ~is_soft404(F.col("text"))
+        kept = rnd.recs.where(keep_pred)
+        records_out = kept.select(
+            "connector_id",
+            F.col("record_id").alias("id"),
+            "url",
+            "fields",
+            F.transform(
+                "images",
+                lambda im: F.struct(
+                    im["id"].alias("id"),
+                    im["url"].alias("url"),
+                    im["title"].alias("title"),
+                    im["description"].alias("description"),
+                    im["author"].alias("author"),
+                    im["license"].alias("license"),
+                    F.lit(None).cast("string").alias("text"),
+                    F.lit(None).cast("string").alias("localFilename"),
+                    F.lit(False).alias("hasError"),
+                ),
+            ).alias("images"),
+            F.col("raw"),
+            "seed_idx",
+            "page_no",
+            "in_page_idx",
+            parent_rank.cast("int").alias("dfs_rank"),
+        )
+        # webtext in the input_hint shape: url, text (+ lang, warc_ts
+        # carried from the fetched page)
+        no_lang = F.lit(None).cast("string")
+        lang_col = F.col("lang") if run.has_lang else no_lang.alias("lang")
+        if cfg.lang_detect:
+            from crawler_spark.functions.textstats import langid
+
+            lang_col = F.coalesce(
+                F.col("lang") if run.has_lang else no_lang,
+                langid(F.col("text")),
+            ).alias("lang")
+        webtext_out = kept.select("url", "text", lang_col, "warc_ts")
+        return records_out, webtext_out
+
+    def _bloom_upkeep(self, run: _RunState, rnd: _Round) -> None:
+        """Seen-set upkeep after the commit: Bloom bitsets (full build on
+        cadence, else an incremental update from the committed seen delta),
+        re-fetched recrawl revocations, and seen-delta compaction."""
+        spark, cfg = self.spark, self.cfg
+        run.seen_count += rnd.metrics["fetched_ok"]
+        # re-check: this round may cross the use_bloom="auto" switch
+        if self._bloom_enabled(run.seen_count):
+            # ALL bitset maintenance is executor-side: the delta is read
+            # back from the just-committed seen_delta parquet — the loop
+            # never collects round hashes to the driver
+            if (
+                self.bloom_table.deleted is not None
+                and run.recrawl_hashes is not None
+            ):
+                # a re-fetched recrawl URL is seen again: drop its
+                # revocation so the cuckoo override stops admitting it.
+                # Bounded driver work: only the (small) revoked set can
+                # intersect the round batch.
+                refetched = run.recrawl_hashes.join(
+                    rnd.ok.select(F.col("url_hash").alias("__f_h")),
+                    run.recrawl_hashes["url_hash"] == F.col("__f_h"),
+                    "left_semi",
+                ).collect()
+                for r in refetched:
+                    self.bloom_table.deleted.delete(int(r["url_hash"]))
+            if (
+                run.last_committed is None
+                or rnd.no % cfg.bloom_rebuild_every == 0
+                or self.bloom_table.latest_version() != run.last_committed
+                or not self.bloom_table.compatible(
+                    self.bloom_table.latest_version()
+                )
+            ):
+                # periodic re-size / first build / stale-after-crash /
+                # config-mismatch (resume with different bloom_partitions
+                # must NOT incrementally OR into wrong-routed bitsets)
+                if cfg.bloom_partitions is None:
+                    # auto: re-size from the committed seen count; the
+                    # cuckoo revocations carry over (driver-held state)
+                    resized = BloomTable.sized_for(
+                        self.bloom_table.root, run.seen_count,
+                        fpp=self.bloom_table.fpp,
+                    )
+                    resized.deleted = self.bloom_table.deleted
+                    resized._deleted_hashes = self.bloom_table._deleted_hashes
+                    self.bloom_table = resized
+                self.bloom_table.build(self._all_seen_df(), version=rnd.no)
+            else:
+                self.bloom_table.update(
+                    spark,
+                    from_version=run.last_committed,
+                    delta=self.ckpt.load(spark, rnd.no, "seen_delta"),
+                    version=rnd.no,
+                )
+        run.last_committed = rnd.no
+        if rnd.no > 0 and rnd.no % cfg.bloom_rebuild_every == 0:
+            self.ckpt.compact(spark, "seen_delta", upto=rnd.no)
+
+    def _end_round(self, run: _RunState, rnd: _Round) -> None:
+        """Frontier-history expiry, the round's cache releases, the round
+        log, and the committed frontier as the next round's input."""
+        cfg = self.cfg
+        if rnd.snapshot_round and cfg.frontier_expire_intervals:
+            # bounded delta-frontier history: old snapshots + the add/del
+            # dirs they subsume expire behind the horizon
+            self.ckpt.expire_frontier(cfg.frontier_expire_intervals)
+        for df in (rnd.popped_raw, rnd.popped, rnd.fetched, rnd.recs, *rnd.caches):
+            df.unpersist()
+        run.metrics_log.append(
+            {"round": rnd.no, **rnd.metrics, "stage_s": rnd.stage_s}
+        )
+        # re-read from checkpoint: cuts lineage + is the resume point. Delta
+        # rounds reconstruct snapshot+deltas with the same replay a resume
+        # would run — the in-loop state and the resume state are the same
+        # plan by construction. Branch on what THIS round actually
+        # committed (snapshot_round), never on the config string: "auto"
+        # engages delta commits past the row threshold and must reload
+        # through the replay path too.
+        if rnd.snapshot_round:
+            run.frontier = self.ckpt.load(self.spark, rnd.no, "frontier")
+        else:
+            run.frontier, _ = self._load_frontier_state(rnd.no)
+        run.round_no = rnd.no + 1

@@ -22,7 +22,9 @@ def _engine(spark, sdfs, ck, **kw):
                        sdfs["politeness"], cfg)
 
 
-def test_selective_recrawl_refetches_only_marked(spark, tmp_path):
+def test_selective_recrawl_refetches_only_marked(spark, tmp_path, monkeypatch):
+    from pyspark import StorageLevel
+
     site = generate_site(SPEC)
     sdfs = site_to_spark(spark, site)
     ck = str(tmp_path / "ck")
@@ -31,7 +33,19 @@ def test_selective_recrawl_refetches_only_marked(spark, tmp_path):
     rounds_first = first.rounds
 
     recrawl = spark.createDataFrame(RECRAWL, "url string, connector_id string")
+    persisted = []
+    frame_cls = type(recrawl)
+    persist = frame_cls.persist
+    monkeypatch.setattr(
+        frame_cls, "persist",
+        lambda df, *a, **k: persisted.append(df) or persist(df, *a, **k),
+    )
     second = _engine(spark, sdfs, ck).run(recrawl=recrawl)
+    monkeypatch.undo()
+    # the run-scoped recrawl-hash cache is released when run() returns
+    hashes = [df for df in persisted if df.columns == ["url_hash"]]
+    assert hashes
+    assert all(df.storageLevel == StorageLevel.NONE for df in hashes)
     # exactly the marked urls were fetched again, in rounds after the first run
     new_fetches = second.fetch_log.where(
         (F.col("round") >= rounds_first) & (F.col("status") == 200)

@@ -176,7 +176,6 @@ GIF_320x200 = b"GIF89a" + (320).to_bytes(2, "little") + (200).to_bytes(2, "littl
 
 def test_multimodal_sniff_and_decode(spark):
     from crawler_spark.functions.multimodal import (
-        decode_images,
         image_dimensions,
         image_type_valid,
         sniff_content_type,
@@ -225,36 +224,6 @@ def test_multimodal_sniff_and_decode(spark):
         for r in df.select("url", image_type_valid(F.col("bytes")).alias("ok")).collect()
     }
     assert valid == {"u1": True, "u2": True, "u3": False}
-
-    decoded = {r["url"]: r for r in decode_images(df).collect()}
-    assert decoded["u1"]["content_type"] == "image/jpeg"
-    assert (decoded["u1"]["width"], decoded["u1"]["height"]) == (128, 256)
-    assert (decoded["u2"]["width"], decoded["u2"]["height"]) == (64, 32)
-    assert len(decoded["u1"]["features"]) == 8
-    assert decoded["u3"]["content_type"] is None and decoded["u3"]["width"] is None
-
-
-def test_multimodal_frame_sampling(spark):
-    """Frame-sample plumbing: one row per (url, evenly-spaced frame);
-    extraction is the declared deterministic fake."""
-    from crawler_spark.functions.multimodal import frame_samples
-
-    vids = spark.createDataFrame(
-        [("v1", bytearray(b"\x00videobytes1")), ("v2", bytearray(b"\x00videobytes2"))],
-        "url string, bytes binary",
-    )
-    rows = frame_samples(vids, n_frames=4, duration_ms=40_000).collect()
-    assert len(rows) == 8
-    v1 = sorted((r for r in rows if r["url"] == "v1"), key=lambda r: r["frame_idx"])
-    assert [r["ts_ms"] for r in v1] == [5000, 15000, 25000, 35000]  # even spacing
-    assert len({bytes(r["frame"]) for r in v1}) == 4  # distinct per index
-    # deterministic across runs
-    again = sorted(
-        (r for r in frame_samples(vids, n_frames=4, duration_ms=40_000).collect()
-         if r["url"] == "v1"),
-        key=lambda r: r["frame_idx"],
-    )
-    assert [bytes(r["frame"]) for r in again] == [bytes(r["frame"]) for r in v1]
 
 
 def test_ivf_topk_exact_when_probing_all_cells(spark):
@@ -313,29 +282,6 @@ def test_sharded_jaccard_equals_single_task(spark):
         }
         assert sharded == base, shards
     assert len(base) > 0
-
-
-def test_multimodal_resize(spark):
-    """Resize plumbing: real dims + aspect-preserving fit arithmetic,
-    declared-fake resample payload."""
-    from crawler_spark.functions.multimodal import resize_images
-
-    df = spark.createDataFrame(
-        [
-            ("big", bytearray(GIF_320x200)),     # 320x200 → 256x160
-            ("small", bytearray(PNG_64x32)),     # already fits → unchanged
-            ("junk", bytearray(b"nope")),
-        ],
-        "url string, bytes binary",
-    )
-    rows = {r["url"]: r for r in resize_images(df, max_dim=256).collect()}
-    big = rows["big"]
-    assert (big["src_width"], big["src_height"]) == (320, 200)
-    assert (big["out_width"], big["out_height"]) == (256, 160)
-    assert big["thumb"] is not None
-    small = rows["small"]
-    assert (small["out_width"], small["out_height"]) == (64, 32)  # no upscale
-    assert rows["junk"]["content_type"] is None and rows["junk"]["thumb"] is None
 
 
 def test_winnow_fingerprint_guarantee(spark):

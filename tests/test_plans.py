@@ -412,3 +412,84 @@ def test_link_graph_persistence_and_offline_pagerank(spark, tmp_path):
     top = pr.orderBy(F.desc("rank")).first()
     dsts = {r["dst_hash"] for r in edges.select("dst_hash").collect()}
     assert top["id"] in dsts
+
+
+def test_frontier_row_builder_matches_frontier_schema(spark, tmp_path, monkeypatch):
+    """Every frontier_rows call site — seeds, recrawl rows, the round's
+    record / next-page / related candidates, sitemap rows — yields exactly
+    schemas.FRONTIER names, types and order, which keeps the loop's
+    positional unions safe. Schema analysis only: no crawl, no Spark job."""
+    from types import SimpleNamespace
+
+    import pytest
+
+    from crawler_spark import schemas
+    from crawler_spark.operators.extract import ROUND_OUT_SCHEMA
+    from crawler_spark.operators.frontier import frontier_rows, seeds_to_frontier
+    from crawler_spark.operators.sitemaps import sitemap_frontier_rows
+    from crawler_spark.plans import rounds
+
+    want = [(f.name, f.dataType) for f in schemas.FRONTIER.fields]
+
+    def shape(df):
+        return [(f.name, f.dataType) for f in df.schema.fields]
+
+    built = []
+
+    def spy(*a, **kw):
+        out = frontier_rows(*a, **kw)
+        built.append(out)
+        return out
+
+    def last_job():
+        ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+        return max(ids, default=-1)
+
+    job0 = last_job()
+    monkeypatch.setattr(rounds, "frontier_rows", spy)
+    seeds = spark.createDataFrame([], schemas.SEEDS)
+    eng = rounds.CrawlEngine(
+        spark, spark.createDataFrame([], schemas.FRONTIER), seeds,
+        cfg=rounds.EngineConfig(ckpt_dir=str(tmp_path / "ck")),
+    )
+
+    assert shape(seeds_to_frontier(seeds)) == want
+    wave = spark.createDataFrame(
+        [], "host string, url string, lastmod string, priority double"
+    )
+    assert shape(sitemap_frontier_rows(wave, round_added=2)) == want
+
+    # recrawl rows: stop the run-start step right after the builder
+    class Built(Exception):
+        pass
+
+    def stop(*a, **kw):
+        raise Built
+
+    monkeypatch.setattr(rounds, "add_candidates", stop)
+    with pytest.raises(Built):
+        eng._add_recrawl(
+            SimpleNamespace(round_no=3, frontier=None),
+            spark.createDataFrame([], "url string, connector_id string"),
+        )
+
+    # the round's candidates, from extract-shaped links and records
+    meta = spark.createDataFrame([], schemas.FRONTIER).select(
+        "url", "kind", "connector_id", "seed_idx", "page_no", "in_page_idx",
+        "dfs_rank", "depth", "score", F.lit("none").alias("related_policy"),
+    )
+    extracted = spark.createDataFrame([], ROUND_OUT_SCHEMA).join(meta, "url")
+    rnd = rounds._Round(no=3)
+    rnd.links = extracted.select(
+        F.col("url").alias("parent_url"), "connector_id", "seed_idx",
+        "page_no", "depth", "score", "total_count", "out_url", "out_idx",
+    )
+    rnd.recs = extracted
+    eng._expand(rnd)
+    assert shape(rnd.cands) == want
+
+    # the engine's own call sites: recrawl, record, next-page, related
+    assert len(built) == 4
+    for df in built:
+        assert shape(df) == want
+    assert last_job() == job0

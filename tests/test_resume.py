@@ -92,6 +92,25 @@ def test_fresh_crawl_job_budget(fresh_run):
     assert fresh_run["jobs"] <= FRESH_CRAWL_MAX_JOBS
 
 
+STAGES = (
+    "pop", "fetch", "sidecar_upkeep", "extract", "expand", "seen_filter",
+    "commit", "bloom_upkeep",
+)
+
+
+def test_rounds_record_stage_walls(fresh_run):
+    from crawler_spark.plans.checkpoint import Checkpointer
+
+    ckpt = Checkpointer(fresh_run["ckpt"])
+    for m in fresh_run["result"].metrics:
+        # every stage's wall in the round log; the stages before the
+        # commit in the committed manifest
+        assert tuple(m["stage_s"]) == STAGES
+        assert all(s >= 0 for s in m["stage_s"].values())
+        committed = ckpt.manifest(m["round"])["metrics"]["stage_s"]
+        assert tuple(committed) == STAGES[:6]
+
+
 def test_complete_checkpoint_resume_is_idle(spark, fresh_run, monkeypatch):
     from crawler_spark.plans import rounds
 
