@@ -27,6 +27,7 @@ tables don't, and the orphan rows stay invisible either way).
 from __future__ import annotations
 
 import json
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -127,10 +128,10 @@ class CatalogCheckpointer:
         tables: dict[str, DataFrame],
         metrics: dict,
         stats_cb=None,
-        groups=None,
     ) -> dict:
         """Append each table's rows under ``__round=round_no``, then the
-        manifest row (the commit point).
+        manifest row (the commit point). Each table's write wall lands in
+        ``metrics["commit_s"][name]``.
 
         ``stats_cb`` is the PARQUET backend's footer-reader and is ignored
         here; the standard crawl metrics are computed with bounded Spark
@@ -138,10 +139,14 @@ class CatalogCheckpointer:
         (records/adds/frontier row counts + one fetch-log status/bytes
         aggregate — all O(round batch) except the frontier count, which
         Iceberg serves from snapshot metadata in production)."""
+        commit_s: dict[str, float] = {}
         for name, df in tables.items():
+            t0 = time.perf_counter()
             self._write_round(
                 self._tbl(name), df.withColumn("__round", F.lit(round_no))
             )
+            commit_s[name] = round(time.perf_counter() - t0, 3)
+        metrics["commit_s"] = commit_s
         # standard crawl metrics from the written partitions (same keys as
         # checkpoint._round_stats_from_written)
         stats: dict = {}

@@ -19,6 +19,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -119,64 +121,38 @@ class Checkpointer:
         tables: dict[str, DataFrame],
         metrics: dict,
         stats_cb=None,
-        groups=None,
     ) -> dict:
         """Write all tables, then the manifest (the commit point).
 
+        Each table's write wall lands in ``metrics["commit_s"][name]``.
         ``stats_cb(lineage) -> dict``, when given, runs after the table
         writes and before the manifest; its result is merged into
         ``metrics`` (mutating the caller's dict) so per-round metrics can
         be derived from the just-written files instead of extra Spark
-        actions over the round lineage. ``groups``: name-tuples written
-        sequentially within one thread (see below)."""
+        actions over the round lineage."""
         rdir = self.round_dir(round_no)
-        lineage: dict[str, dict] = {}
-        import time as _time
-        from concurrent.futures import ThreadPoolExecutor
 
-        debug_t = os.environ.get("SPARK_GRAFT_COMMIT_TIMING")
-
-        def _write(item):
-            name, df = item
+        def _write(name: str) -> tuple[dict, float]:
             path = os.path.join(rdir, name)
-            w0 = _time.time()
-            df.write.mode("overwrite").parquet(path)
-            if debug_t:
-                print(
-                    f"[commit r{round_no}] {name}: "
-                    f"{_time.time() - w0:.2f}s", flush=True,
-                )
+            t0 = time.perf_counter()
+            tables[name].write.mode("overwrite").parquet(path)
+            wall = round(time.perf_counter() - t0, 3)
             files = sorted(
                 f
                 for f in os.listdir(path)
                 if f.endswith(".parquet") or f.startswith("part-")
             )
-            return name, {
-                "path": path,
-                "files": files,
-                "n_files": len(files),
-            }
+            return {"path": path, "files": files, "n_files": len(files)}, wall
 
         # the table writes are independent (disjoint dirs, manifest only
-        # after ALL succeed) — submit them as concurrent Spark jobs so the
-        # commit's wall is the slowest write, not the sum. On a cluster the
-        # concurrent stages also fill executors a sequential tail wouldn't.
-        # ``groups`` serializes tables that share an UNMATERIALIZED cached
-        # ancestor (e.g. records+webtext both extract from ``recs``):
-        # concurrent first-materializers of the same cache block would each
-        # compute it — wasted work, and unacceptable for side-effecting
-        # lineage. Tables not named in any group get their own thread.
-        grouped = [tuple(g) for g in (groups or ())]
-        named = {n for g in grouped for n in g}
-        grouped += [(n,) for n in tables if n not in named]
-
-        def _write_group(names):
-            return [_write((n, tables[n])) for n in names if n in tables]
-
-        with ThreadPoolExecutor(max_workers=len(grouped) or 1) as pool:
-            for results in pool.map(_write_group, grouped):
-                for name, entry in results:
-                    lineage[name] = entry
+        # after ALL succeed) — submit them as concurrent Spark jobs, one
+        # thread per table, so the commit's wall is the slowest write, not
+        # the sum. On a cluster the concurrent stages also fill executors a
+        # sequential tail wouldn't.
+        with ThreadPoolExecutor(max_workers=len(tables) or 1) as pool:
+            written = dict(zip(tables, pool.map(_write, tables)))
+        lineage = {name: entry for name, (entry, _) in written.items()}
+        metrics["commit_s"] = {name: wall for name, (_, wall) in written.items()}
         if stats_cb is not None:
             metrics.update(stats_cb(lineage))
         manifest = {

@@ -92,6 +92,12 @@ def test_checkpoint_interface_contract(kind, spark, tmp_path):
     assert (m0["fetched_ok"], m0["fetch_failed"]) == (3, 1)
     assert m0["records_written"] == 3 and m0["frontier_rows"] == 5
     assert m1["frontier_adds"] == 2 and m1["frontier_rows"] is None
+    # each table's write wall, in the metrics and the manifest
+    deltas = {"seen_delta", "records_delta", "webtext_delta", "fetch_log_delta"}
+    assert set(m0["commit_s"]) == deltas | {"frontier"}
+    assert set(m1["commit_s"]) == deltas | {"frontier_add", "frontier_del"}
+    assert all(s >= 0 for s in m1["commit_s"].values())
+    assert ck.round_metric(1, "commit_s") == m1["commit_s"]
 
     assert ck.committed_rounds() == [0, 1, 2]
     assert ck.latest_round() == 2

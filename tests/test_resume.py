@@ -84,8 +84,8 @@ def fresh_result(fresh_run):
     return fresh_run["result"]
 
 
-# measured: 114 jobs for this crawl (4 rounds, no empty probe round)
-FRESH_CRAWL_MAX_JOBS = 114
+# measured: 98 jobs for this crawl (4 rounds, no empty probe round)
+FRESH_CRAWL_MAX_JOBS = 98
 
 
 def test_fresh_crawl_job_budget(fresh_run):
@@ -107,8 +107,14 @@ def test_rounds_record_stage_walls(fresh_run):
         # commit in the committed manifest
         assert tuple(m["stage_s"]) == STAGES
         assert all(s >= 0 for s in m["stage_s"].values())
-        committed = ckpt.manifest(m["round"])["metrics"]["stage_s"]
+        manifest = ckpt.manifest(m["round"])
+        committed = manifest["metrics"]["stage_s"]
         assert tuple(committed) == STAGES[:6]
+        # each written table's write wall, in both
+        assert set(m["commit_s"]) == set(manifest["lineage"])
+        assert "frontier" in m["commit_s"]
+        assert all(s >= 0 for s in m["commit_s"].values())
+        assert manifest["metrics"]["commit_s"] == m["commit_s"]
 
 
 def test_complete_checkpoint_resume_is_idle(spark, fresh_run, monkeypatch):
