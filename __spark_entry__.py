@@ -874,8 +874,8 @@ def _frontier_shaped(df, key, connector, page_no, round_added):
 
 def _j4_candidate_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: in-round candidate dedup through the ENGINE's add_candidates
-    (operators/frontier.py — the contested-keys window + untouched
-    anti-join shape; joconde.js:41,184-187 memo cache): a URL discovered
+    (operators/frontier.py — one url_hash window over frontier ∪
+    candidates; joconde.js:41,184-187 memo cache): a URL discovered
     by two connectors/pages keeps exactly the lowest-ordered occurrence,
     so crawl-order parity survives duplicate discovery."""
     from crawler_spark.operators.frontier import add_candidates

@@ -62,39 +62,46 @@ def seeds_to_frontier(seeds: DataFrame, round_added: int = 0) -> DataFrame:
     """U1 seed-list union → initial frontier of search pages.
 
     ``seed_idx`` ordering is part of crawl-order parity (vam.js:10-14).
-    Nothing in the SEEDS schema stops two seed rows from sharing a URL
-    (the same listing under two connectors, or listed twice), so the rows
-    are deduped per ``url_hash`` like any frontier addition: the frontier
-    holds one row per key from its first round on, the invariant
-    ``add_candidates`` relies on.
+    Seed rows that share a URL (the same listing under two connectors) all
+    enter the frontier, so round 0 fetches each under its own connector, as
+    the reference walks each seed's search chain; one that round 0 leaves
+    unpopped is deduped by the next ``add_candidates``.
     """
-    return _first_per_key(
-        frontier_rows(
-            seeds,
-            F.col("url"),
-            depth=0,
-            seed_idx=F.col("seed_idx"),
-            page_no=F.col("start_page"),
-            in_page_idx=-1,
-            dfs_rank=0,
-            round_added=round_added,
-            kind="search",
-            connector_id=F.col("connector_id"),
-        )
+    return frontier_rows(
+        seeds,
+        F.col("url"),
+        depth=0,
+        seed_idx=F.col("seed_idx"),
+        page_no=F.col("start_page"),
+        in_page_idx=-1,
+        dfs_rank=0,
+        round_added=round_added,
+        kind="search",
+        connector_id=F.col("connector_id"),
     )
 
 
-# frontier frames are always FRONTIER-shaped — the static column list
-# avoids `.columns` (which forces full analysis of the deep per-round
-# plan), and the explicit selects make the positional unions safe
-# (`unionByName` would re-analyze both children per call)
-_COLS = [f.name for f in schemas.FRONTIER.fields]
+def add_candidates(frontier: DataFrame, candidates: DataFrame) -> DataFrame:
+    """Union new links into the frontier, deduping per url_hash by keeping
+    the lowest-ordered occurrence (J4 in-round memo cache,
+    joconde.js:41,184-187) — that is exactly the row the sequential
+    reference would have visited first, so ordering parity survives
+    duplicate discovery.
 
-
-def _first_per_key(pool: DataFrame) -> DataFrame:
-    """The lowest-ordered row of ``pool`` per ``url_hash``, in FRONTIER
-    column order: one hash-partitioned window, no global ordering."""
+    One row_number window over frontier ∪ candidates, partitioned by
+    url_hash: a single hash Exchange and no global ordering. The
+    candidates are often a deep round lineage (aggregations, explodes, the
+    seen anti-join); the plan reads them once, so that lineage runs once.
+    The window dedups the frontier side too, so the result holds one row
+    per url_hash whatever the input frontier held.
+    """
     from pyspark.sql import Window
+
+    # frontier frames are always FRONTIER-shaped — the static column list
+    # avoids `.columns` (which forces full analysis of the deep per-round
+    # plan), and the explicit selects make the positional union safe
+    # (`unionByName` would re-analyze both children per call)
+    cols = [f.name for f in schemas.FRONTIER.fields]
 
     # connector_id leads the order: the reference runs connectors
     # sequentially in id order, so a URL listed by TWO connectors is
@@ -108,62 +115,12 @@ def _first_per_key(pool: DataFrame) -> DataFrame:
         F.col("dfs_rank").asc(),
         F.col("round_added").asc(),
     )
+    pool = frontier.select(*cols).union(candidates.select(*cols))
     return (
         pool.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
-        .select(*_COLS)
+        .drop("__rn")
     )
-
-
-def add_candidates(
-    frontier: DataFrame,
-    candidates: DataFrame,
-    *,
-    small: bool = False,
-    broadcast_keys: bool = False,
-) -> DataFrame:
-    """Union new links into the frontier, deduping per url_hash by keeping
-    the lowest-ordered occurrence (J4 in-round memo cache,
-    joconde.js:41,184-187) — that is exactly the row the sequential
-    reference would have visited first, so ordering parity survives
-    duplicate discovery.
-
-    Two plans, chosen by the caller from a size the driver already knows:
-
-    * ``small`` (the frontier is known to be small): one row_number window
-      over frontier ∪ candidates — a single Exchange that reads the
-      candidates once. The candidates are often a deep round lineage
-      (aggregations, explodes, the seen anti-join), and this plan runs it
-      exactly once.
-    * otherwise (the scale path): the window is a SORT shuffle, so it runs
-      only over the *contested* keys (url_hashes present in both sides)
-      plus the new candidates; the untouched bulk of the frontier passes
-      through a hash anti-join instead of being re-sorted every round. The
-      plan reads the candidates twice, once for the key set the semi- and
-      anti-join probe and once in the window, so it runs their lineage
-      twice. ``broadcast_keys`` hints that key set as a broadcast:
-      candidate frames derived from joins inherit the joins' size
-      over-estimates (a persisted or checkpointed frame reports its origin
-      plan's statistics), so the planner would not broadcast it on its
-      own; the caller asserts a driver-known bound makes it small.
-
-    Both plans return the same rows whenever ``frontier`` holds one row per
-    url_hash: the split plan passes untouched rows through undeduped, the
-    window plan dedups them too. Every frontier keeps that invariant — the
-    seed frontier is deduped (``seeds_to_frontier``), each
-    ``add_candidates`` output has one row per key, and ``remove_popped`` and
-    checkpoint round-trips only drop rows.
-    """
-    cand = candidates.select(*_COLS)
-    if small:
-        return _first_per_key(frontier.select(*_COLS).union(cand))
-    cand_keys = cand.select("url_hash").distinct()
-    if broadcast_keys:
-        cand_keys = F.broadcast(cand_keys)
-    contested = frontier.join(cand_keys, "url_hash", "left_semi")
-    untouched = frontier.join(cand_keys, "url_hash", "left_anti")
-    deduped = _first_per_key(contested.select(*_COLS).union(cand))
-    return untouched.select(*_COLS).union(deduped)
 
 
 def remove_popped(frontier: DataFrame, popped: DataFrame) -> DataFrame:

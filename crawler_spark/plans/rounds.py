@@ -28,13 +28,10 @@ met-museum.js:241-253 vs joconde.js:180-200). Parity = sort by tuple.
 
 Scale notes (the parts that must survive 1000 executors / 10^10 URLs):
 
-* the frontier union dedup is a per-key window over ``url_hash`` — a
-  hash-partitioned shuffle, no global ordering anywhere. A big frontier
-  windows only the candidates and the frontier rows whose keys they
-  contest, while its untouched bulk passes through an anti-join; a frontier
-  whose driver-known bound is below the tiny-round threshold is windowed
-  whole with the candidates, one shuffle that runs the round's candidate
-  lineage once (``add_candidates``);
+* the frontier union dedup is a per-key window over ``url_hash`` — a single
+  hash-partitioned shuffle over frontier ∪ candidates, no global ordering
+  anywhere, that runs the round's candidate lineage once
+  (``add_candidates``);
 * the seen set is only ever touched by (a) Bloom-prefiltered anti-join reads
   and (b) per-round delta appends — never rewritten;
 * the pages scan is joined against a broadcast of the (bounded) round batch,
@@ -482,12 +479,6 @@ class _RunState:
     # frames persisted for the whole run, released when run() returns
     run_caches: list = dc_field(default_factory=list)
     metrics_log: list = dc_field(default_factory=list)
-
-    def small_frontier(self, bound: int | None) -> bool:
-        """Whether a driver-known frontier row bound is below the tiny-round
-        threshold: ``add_candidates`` may then window the whole frontier
-        instead of splitting off its untouched rows."""
-        return bound is not None and bound < self.aqe_min
 
 
 @dataclass
@@ -1175,7 +1166,7 @@ class CrawlEngine:
         applies — frontier state after round ``upto`` is therefore
         bit-identical to what full-snapshot mode would have persisted.
         Bounded work: ≤ frontier_snapshot_every delta dirs, each O(round
-        batch), applied as broadcast probes + contested-key windows over
+        batch), applied as broadcast del probes + url_hash windows over
         one snapshot scan. Returns (frontier, snapshot_round) — the
         snapshot round's manifest carries the last exact frontier_rows."""
         committed = self.ckpt.committed_rounds()
@@ -1199,27 +1190,21 @@ class CrawlEngine:
             )
         df = self.ckpt.load(self.spark, snap, "frontier")
 
-        # broadcast each replayed round's del/add keys only under the
-        # manifest-carried row counts (driver-known, no extra action):
-        # a 10M-pop delta round's key set must not land on the driver —
-        # past the bound the anti-join/window fall back to shuffles
-        def _fits(bound) -> bool:
-            return (
-                bound is not None
-                and int(bound) * politeness_mod.KEY_BYTES
-                <= politeness_mod.BROADCAST_MAX_BYTES
-            )
-
+        # broadcast each replayed round's del keys only under the
+        # manifest-carried pop count (driver-known, no extra action): a
+        # 10M-pop delta round's key set must not land on the driver — past
+        # the bound the anti-join falls back to a shuffle
         for q in [r for r in committed if snap < r <= upto]:
             dels = self.ckpt.load(self.spark, q, "frontier_del")
-            if _fits(self.ckpt.round_metric(q, "popped")):
+            popped = self.ckpt.round_metric(q, "popped")
+            if (
+                popped is not None
+                and int(popped) * politeness_mod.KEY_BYTES
+                <= politeness_mod.BROADCAST_MAX_BYTES
+            ):
                 dels = F.broadcast(dels)
             adds = self.ckpt.load(self.spark, q, "frontier_add")
-            df = add_candidates(
-                remove_popped(df, dels),
-                adds,
-                broadcast_keys=_fits(self.ckpt.round_metric(q, "frontier_adds")),
-            )
+            df = add_candidates(remove_popped(df, dels), adds)
         return df, snap
 
     def run(
@@ -1293,7 +1278,11 @@ class CrawlEngine:
             # remove_popped would each rebuild the add_candidates lineage.
             # Gated on the driver-known tiny bound, so a big frontier is
             # never pinned in executor storage.
-            if unioned and run.small_frontier(run.frontier_rows):
+            if (
+                unioned
+                and run.frontier_rows is not None
+                and run.frontier_rows < aqe_min
+            ):
                 run.frontier = run.frontier.localCheckpoint(eager=True)
             # an exactly-empty frontier (a complete checkpoint) runs no round
             run.frontier_empty = exact and run.frontier_rows == 0
@@ -1328,13 +1317,10 @@ class CrawlEngine:
         on a fresh crawl. The count is exact for a snapshot footer or the
         seed count, an upper bound after a delta replay, and None when an
         old manifest lacks the metric (which disables layout sizing, never
-        correctness). The seed rows are counted before
-        ``seeds_to_frontier`` drops duplicate seed URLs (counting its
-        window would add shuffle jobs), so that count is exact up to those
-        duplicates — and 0 exactly when the frontier is empty."""
+        correctness)."""
         if latest is None:
-            n = self.seeds.count()  # seed list: tiny by contract
             frontier = seeds_to_frontier(self.seeds)
+            n = frontier.count()  # seed list: tiny by contract
             # createDataFrame seed frames default to the session's full
             # parallelism — dozens of near-empty partitions that round 0's
             # whole pop/anti-join/union pipeline then inherits
@@ -1384,9 +1370,7 @@ class CrawlEngine:
             kind="record",
             connector_id=F.col("connector_id"),
         )
-        run.frontier = add_candidates(
-            run.frontier, rows, small=run.small_frontier(run.frontier_rows)
-        )
+        run.frontier = add_candidates(run.frontier, rows)
         hashes = run.recrawl_hashes = rows.select("url_hash").persist()
         run.run_caches.append(hashes)
         # delta-frontier persistence: run-start additions exist only in
@@ -1461,9 +1445,7 @@ class CrawlEngine:
             sm_rows.unpersist()
             return False
         run.run_caches.append(sm_rows)
-        run.frontier = add_candidates(
-            run.frontier, sm_rows, small=run.small_frontier(run.frontier_rows)
-        )
+        run.frontier = add_candidates(run.frontier, sm_rows)
         if run.frontier_rows is not None:
             run.frontier_rows += n_sm
         if cfg.frontier_storage in ("delta", "auto"):
@@ -2185,24 +2167,7 @@ class CrawlEngine:
         """Commit the round (frontier snapshot or delta, and the round's
         seen/records/webtext/fetch-log deltas), then carry the committed
         frontier size forward."""
-        # the frontier's bound: last round's EXACT committed row count
-        # (carried in the manifest — no count action ever runs on the
-        # possibly-10^10-row frontier) plus this round's additions; None
-        # (old manifests) disables the small plan and the write sizing,
-        # never correctness
-        fr_bound = (
-            None
-            if run.frontier_rows is None
-            else run.frontier_rows + rnd.n_links + rnd.n_popped + 4 * rnd.n_recs
-        )
-        frontier_next = add_candidates(
-            rnd.remaining,
-            rnd.round_adds,
-            small=rnd.tiny and run.small_frontier(fr_bound),
-            # candidates ≤ out-links of a bounded round batch; their plan's
-            # size estimate hides that from the planner
-            broadcast_keys=rnd.tiny,
-        )
+        frontier_next = add_candidates(rnd.remaining, rnd.round_adds)
         # the manifest carries the walls of the stages before the commit;
         # fetch/parse metrics come from the parquet the commit writes
         # (_round_stats_from_written), NOT from extra .agg()/.count()
@@ -2210,7 +2175,7 @@ class CrawlEngine:
         # dominant driver cost at small rounds) and re-launch its broadcast
         # sub-jobs
         rnd.metrics = {"popped": rnd.n_popped, "stage_s": dict(rnd.stage_s)}
-        tables = self._round_tables(run, rnd, frontier_next, fr_bound)
+        tables = self._round_tables(run, rnd, frontier_next)
         run.pending_add_rows = None  # persisted (or covered by a snapshot)
         # live robots: probe hosts first discovered this round (adds are
         # round-batch-bounded) BEFORE the commit — a kill between commit
@@ -2247,11 +2212,7 @@ class CrawlEngine:
             run.frontier_rows += adds_bound
 
     def _round_tables(
-        self,
-        run: _RunState,
-        rnd: _Round,
-        frontier_next: DataFrame,
-        fr_bound: int | None,
+        self, run: _RunState, rnd: _Round, frontier_next: DataFrame
     ) -> dict[str, DataFrame]:
         """The tables the round's commit writes, with their write layout;
         sets ``rnd.snapshot_round``."""
@@ -2259,13 +2220,21 @@ class CrawlEngine:
         # write layout: tiny rounds otherwise inherit the full shuffle
         # width (33+ tasks AND files per table for a handful of rows), and
         # the next round re-reads that fan-out. Deltas are bounded by the
-        # round batch (driver-known: n_popped), the frontier by
-        # ``fr_bound``. Big rounds are left to the planner/AQE.
+        # round batch (driver-known: n_popped); the frontier's bound is last
+        # round's EXACT committed row count (carried in the manifest — no
+        # count action ever runs on the possibly-10^10-row frontier) plus
+        # this round's additions. Big rounds are left to the planner/AQE,
+        # and an unknown frontier bound (old manifests) disables the
+        # sizing, never correctness.
         frontier_out = frontier_next
         if rnd.tiny:
             delta_parts = max(1, min(32, rnd.n_popped // 10_000))
             shrink = (lambda df: df.coalesce(delta_parts))
-            if fr_bound is not None:
+            if run.frontier_rows is not None:
+                fr_bound = (
+                    run.frontier_rows + rnd.n_links + rnd.n_popped
+                    + 4 * rnd.n_recs
+                )
                 # ~1M frontier rows (≈200 B each) per output file
                 frontier_out = frontier_next.coalesce(
                     max(1, -(-fr_bound // 1_000_000))

@@ -142,6 +142,39 @@ def test_content_filter_keep_parity(spark, tmp_path):
     assert 0 < len(got) < n_visited
 
 
+def test_shared_seed_url_parity(spark, tmp_path):
+    """Two connectors list the same search URL under different seed
+    configs. The reference walks each seed's chain with its own config:
+    c0's chain is capped after page 1, so c1's uncapped chain writes the
+    records of the later pages. Both seed rows enter the frontier, and the
+    engine writes exactly the oracle's records in its order."""
+    site = generate_site(
+        SiteSpec(n_hosts=1, details_per_host=8, limit=4, budget_per_round=7)
+    )
+    seeds = site["seeds"]
+    seeds.loc[1] = {**seeds.loc[0].to_dict(), "connector_id": "c1"}
+    seeds.loc[0, ["paging_style", "max_offset"]] = ["unknown_total", 4]
+    pages = {r.url: r.html for r in site["pages"].itertuples()}
+    oracle = replay(pages, seeds.to_dict("records"))
+    # the shared URL really splits the written records across both chains
+    assert {w["connector_id"] for w in oracle.written} == {"c0", "c1"}
+
+    sdfs = site_to_spark(spark, site)
+    res = CrawlEngine(
+        spark, sdfs["pages"], sdfs["seeds"], sdfs["politeness"],
+        EngineConfig(ckpt_dir=str(tmp_path / "ck"), default_budget=7),
+    ).run()
+    order = ("connector_id", "seed_idx", "page_no", "in_page_idx", "dfs_rank")
+    got = [
+        (r["url"], r["connector_id"])
+        for r in sorted(
+            res.records.select("url", *order).collect(),
+            key=lambda r: tuple(r[k] for k in order),
+        )
+    ]
+    assert got == [(w["url"], w["connector_id"]) for w in oracle.written]
+
+
 def test_url_seen_set_parity(engine_result, oracle, site, spark):
     """north_rule: 'the final URL-seen set must match the reference's
     output under the same seed list and politeness budget'. The

@@ -6,7 +6,6 @@ silently degrade (SURVEY.md §4):
 * parquet scans get predicate pushdown + column pruning.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -470,10 +469,7 @@ def test_frontier_row_builder_matches_frontier_schema(spark, tmp_path, monkeypat
     monkeypatch.setattr(rounds, "add_candidates", stop)
     with pytest.raises(Built):
         eng._add_recrawl(
-            SimpleNamespace(
-                round_no=3, frontier=None, frontier_rows=None,
-                small_frontier=lambda bound: False,
-            ),
+            SimpleNamespace(round_no=3, frontier=None),
             spark.createDataFrame([], "url string, connector_id string"),
         )
 
@@ -506,75 +502,66 @@ def _frontier_row(url_hash, connector_id, seed_idx=0, page_no=0, round_added=0):
     )
 
 
-# (frontier rows, candidate rows, the winners' (url_hash, connector_id,
-# seed_idx, page_no)) — the frontier holds one row per url_hash
-_ADD_CASES = {
-    "frontier_row_wins": (
-        [_frontier_row(1, "c0")],
-        [_frontier_row(1, "c0", seed_idx=2, round_added=1)],
-        [(1, "c0", 0, 0)],
-    ),
-    "candidate_wins": (
-        [_frontier_row(2, "c0", seed_idx=3)],
-        [_frontier_row(2, "c0", seed_idx=1, round_added=1)],
-        [(2, "c0", 1, 0)],
-    ),
-    "duplicate_candidates": (
-        [_frontier_row(9, "c0")],
-        [
-            _frontier_row(3, "c0", page_no=4, round_added=1),
-            _frontier_row(3, "c0", page_no=2, round_added=1),
-            _frontier_row(3, "c0", page_no=4, round_added=1),
-        ],
-        [(3, "c0", 0, 2), (9, "c0", 0, 0)],
-    ),
-    "connector_tiebreak": (
-        [_frontier_row(4, "c1")],
-        [_frontier_row(4, "c0", seed_idx=5, page_no=5, round_added=1)],
-        [(4, "c0", 5, 5)],
-    ),
-    "empty_candidates": (
-        [_frontier_row(5, "c0"), _frontier_row(6, "c1")],
-        [],
-        [(5, "c0", 0, 0), (6, "c1", 0, 0)],
-    ),
-    "no_frontier": (
-        [],
-        [_frontier_row(7, "c1"), _frontier_row(7, "c0", seed_idx=9)],
-        [(7, "c0", 9, 0)],
-    ),
-}
-
-
-@pytest.mark.parametrize("case", sorted(_ADD_CASES))
-def test_add_candidates_small_plan_matches_split_plan(spark, case):
-    """Over a frontier with one row per url_hash, the small plan (one
-    window over frontier ∪ candidates) keeps exactly the rows the split
-    plan (contested-key window + untouched anti-join) keeps."""
+def test_add_candidates_keeps_lowest_ordered_row_per_url(spark):
+    """One window over frontier ∪ candidates keeps, per url_hash, the row
+    the sequential reference would visit first — whichever side it came
+    from — and passes uncontested frontier rows and candidates through."""
     from crawler_spark import schemas
     from crawler_spark.operators.frontier import add_candidates
 
-    front_rows, cand_rows, winners = _ADD_CASES[case]
-    frontier = spark.createDataFrame(front_rows, schemas.FRONTIER)
-    cands = spark.createDataFrame(cand_rows, schemas.FRONTIER)
-    got = {
-        small: sorted(
-            add_candidates(frontier, cands, small=small).collect(),
-            key=lambda r: r["url_hash"],
-        )
-        for small in (True, False)
+    # (frontier rows, candidate rows, the winners' (url_hash,
+    # connector_id, seed_idx, page_no))
+    cases = {
+        "frontier_row_wins": (
+            [_frontier_row(1, "c0")],
+            [_frontier_row(1, "c0", seed_idx=2, round_added=1)],
+            [(1, "c0", 0, 0)],
+        ),
+        "candidate_wins": (
+            [_frontier_row(2, "c0", seed_idx=3)],
+            [_frontier_row(2, "c0", seed_idx=1, round_added=1)],
+            [(2, "c0", 1, 0)],
+        ),
+        "duplicate_candidates": (
+            [_frontier_row(9, "c0")],
+            [
+                _frontier_row(3, "c0", page_no=4, round_added=1),
+                _frontier_row(3, "c0", page_no=2, round_added=1),
+                _frontier_row(3, "c0", page_no=4, round_added=1),
+            ],
+            [(3, "c0", 0, 2), (9, "c0", 0, 0)],
+        ),
+        "connector_tiebreak": (
+            [_frontier_row(4, "c1")],
+            [_frontier_row(4, "c0", seed_idx=5, page_no=5, round_added=1)],
+            [(4, "c0", 5, 5)],
+        ),
+        "empty_candidates": (
+            [_frontier_row(5, "c0"), _frontier_row(6, "c1")],
+            [],
+            [(5, "c0", 0, 0), (6, "c1", 0, 0)],
+        ),
+        "no_frontier": (
+            [],
+            [_frontier_row(7, "c1"), _frontier_row(7, "c0", seed_idx=9)],
+            [(7, "c0", 9, 0)],
+        ),
     }
-    assert got[True] == got[False]
-    assert [
-        (r["url_hash"], r["connector_id"], r["seed_idx"], r["page_no"])
-        for r in got[True]
-    ] == winners
+    for case, (front_rows, cand_rows, winners) in cases.items():
+        out = add_candidates(
+            spark.createDataFrame(front_rows, schemas.FRONTIER),
+            spark.createDataFrame(cand_rows, schemas.FRONTIER),
+        )
+        got = sorted(
+            (r["url_hash"], r["connector_id"], r["seed_idx"], r["page_no"])
+            for r in out.collect()
+        )
+        assert got == winners, case
 
 
-def test_add_candidates_small_plan_is_one_exchange(spark):
-    """The small plan reads the candidates once: one hash Exchange for the
-    window, no key distinct and no broadcast of the candidates' keys (even
-    when the caller hints one)."""
+def test_add_candidates_is_one_exchange(spark):
+    """The merge reads the candidates once: one hash Exchange for the
+    window, no key distinct and no broadcast of the candidates' keys."""
     from crawler_spark import schemas
     from crawler_spark.operators.frontier import add_candidates
 
@@ -590,7 +577,7 @@ def test_add_candidates_small_plan_is_one_exchange(spark):
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        df = add_candidates(frontier, cands, small=True, broadcast_keys=True)
+        df = add_candidates(frontier, cands)
         assert df.count() == 3
         plan = _executed_plan(df)
     finally:
@@ -598,24 +585,3 @@ def test_add_candidates_small_plan_is_one_exchange(spark):
     assert plan.count("Exchange") == 1
     assert "Exchange hashpartitioning(url_hash" in plan
     assert "BroadcastExchange" not in plan
-
-
-def test_seed_frontier_keeps_one_row_per_url(spark):
-    """Two seed rows sharing a URL become one frontier row, the
-    lowest-ordered one, so a fresh frontier already holds the one row per
-    url_hash that both add_candidates plans rely on."""
-    from crawler_spark import schemas
-    from crawler_spark.operators.frontier import seeds_to_frontier
-
-    seeds = spark.createDataFrame(
-        [
-            ("c1", 0, "http://h/s", "page", 10, 1, None, "none"),
-            ("c0", 3, "http://h/s", "page", 10, 2, None, "none"),
-            ("c0", 1, "http://h/t", "page", 10, 1, None, "none"),
-        ],
-        schemas.SEEDS,
-    )
-    rows = sorted(seeds_to_frontier(seeds).collect(), key=lambda r: r["url"])
-    assert [
-        (r["url"], r["connector_id"], r["seed_idx"], r["page_no"]) for r in rows
-    ] == [("http://h/s", "c0", 3, 2), ("http://h/t", "c0", 1, 1)]

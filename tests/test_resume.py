@@ -84,8 +84,8 @@ def fresh_result(fresh_run):
     return fresh_run["result"]
 
 
-# measured: 98 jobs for this crawl (4 rounds, no empty probe round)
-FRESH_CRAWL_MAX_JOBS = 98
+# measured: 96 jobs for this crawl (4 rounds, no empty probe round)
+FRESH_CRAWL_MAX_JOBS = 96
 
 
 def test_fresh_crawl_job_budget(fresh_run):
