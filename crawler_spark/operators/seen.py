@@ -10,8 +10,11 @@ too big to join every candidate against cheaply, so the design is:
 2. candidates the Bloom *might* have seen (a tiny fraction) go through the
    **exact left-anti join** against the seen table — false positives can
    never violate URL-seen parity;
-3. deletable entries (``--force`` / images-checker re-crawls, J3) live in a
-   **cuckoo filter** spill (Fan et al., CoNEXT 2014 — Bloom cannot delete).
+3. revoked entries (``--force`` / images-checker re-crawls, J3) need no
+   structure here: the caller's seen view already leaves them out, and a
+   Bloom filter has no false negatives, so every revoked hash — built into
+   the bitsets while it was seen — reaches that exact confirm. Bloom
+   positives are never final, so the bitsets never have to forget.
 
 Bits are derived from the already-computed ``xxhash64(url)`` with two
 splitmix64-style remixes → k indexes (standard double hashing,
@@ -102,101 +105,6 @@ class BloomFilter:
         return cls(n_bits, n_hashes, buf.copy() if writable else buf)
 
 
-class CuckooFilter:
-    """Small cuckoo filter for the *deletable* seen subset (SURVEY.md §4.3.2).
-
-    4-slot buckets, 16-bit fingerprints, partial-key cuckoo hashing
-    (Fan et al. 2014). Supports delete — needed for ``--force`` and the
-    images-checker re-crawl (J3), which Bloom cannot express.
-    """
-
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int):
-        self.n_buckets = max(2, 1 << (n_buckets - 1).bit_length())
-        self.table = np.zeros((self.n_buckets, self.SLOTS), dtype=np.uint16)
-
-    def _fp_and_buckets(self, h: int) -> tuple[int, int, int]:
-        u = np.uint64(np.int64(h).view(np.uint64) if not isinstance(h, np.uint64) else h)
-        mixed = int(_splitmix64(np.array([u], dtype=np.uint64))[0])
-        fp = (mixed & 0xFFFF) or 1
-        i1 = (mixed >> 16) % self.n_buckets
-        fp_mix = int(_splitmix64(np.array([np.uint64(fp)], dtype=np.uint64))[0])
-        i2 = (i1 ^ fp_mix) % self.n_buckets
-        return fp, i1, i2
-
-    def _insert_at(self, i: int, fp: int) -> bool:
-        row = self.table[i]
-        for s in range(self.SLOTS):
-            if row[s] == 0:
-                row[s] = fp
-                return True
-        return False
-
-    def add(self, h: int) -> bool:
-        fp, i1, i2 = self._fp_and_buckets(h)
-        if self._insert_at(i1, fp) or self._insert_at(i2, fp):
-            return True
-        i = i1
-        rng = np.random.default_rng(fp)  # deterministic kicks
-        for _ in range(self.MAX_KICKS):
-            s = int(rng.integers(self.SLOTS))
-            fp, self.table[i][s] = int(self.table[i][s]), fp
-            fp_mix = int(_splitmix64(np.array([np.uint64(fp)], dtype=np.uint64))[0])
-            i = (i ^ fp_mix) % self.n_buckets
-            if self._insert_at(i, fp):
-                return True
-        return False  # table full — caller rebuilds bigger
-
-    def contains(self, h: int) -> bool:
-        fp, i1, i2 = self._fp_and_buckets(h)
-        return fp in self.table[i1] or fp in self.table[i2]
-
-    def contains_many(self, hashes: np.ndarray) -> np.ndarray:
-        """Vectorized membership — same fp/bucket derivation as
-        ``_fp_and_buckets``, numpy-batched for the Arrow filter UDF."""
-        if len(hashes) == 0:
-            return np.zeros(0, dtype=bool)
-        u = np.asarray(hashes, dtype=np.int64).view(np.uint64)
-        mixed = _splitmix64(u)
-        fp = (mixed & np.uint64(0xFFFF)).astype(np.uint64)
-        fp = np.where(fp == 0, np.uint64(1), fp)
-        i1 = ((mixed >> np.uint64(16)) % np.uint64(self.n_buckets)).astype(np.int64)
-        fp_mix = _splitmix64(fp)
-        i2 = ((i1.astype(np.uint64) ^ fp_mix) % np.uint64(self.n_buckets)).astype(np.int64)
-        fp16 = fp.astype(np.uint16)
-        in1 = (self.table[i1] == fp16[:, None]).any(axis=1)
-        in2 = (self.table[i2] == fp16[:, None]).any(axis=1)
-        return in1 | in2
-
-    def to_bytes(self) -> bytes:
-        return self.table.tobytes()
-
-    @classmethod
-    def from_bytes(
-        cls, data: bytes, n_buckets: int, writable: bool = True
-    ) -> "CuckooFilter":
-        cf = cls(n_buckets)
-        table = np.frombuffer(data, dtype=np.uint16).reshape(
-            n_buckets, cls.SLOTS
-        )
-        # see BloomFilter.from_bytes: readonly view for the per-batch
-        # contains_many paths, copy only where the caller mutates
-        cf.table = table.copy() if writable else table
-        return cf
-
-    def delete(self, h: int) -> bool:
-        fp, i1, i2 = self._fp_and_buckets(h)
-        for i in (i1, i2):
-            row = self.table[i]
-            for s in range(self.SLOTS):
-                if row[s] == fp:
-                    row[s] = 0
-                    return True
-        return False
-
-
 # ---------------------------------------------------------------------------
 # Spark-side seen set
 
@@ -224,7 +132,11 @@ class BloomTable:
       "Maybe seen" survivors go to the exact anti-join; false positives can
       never violate URL-seen parity, and a bloom row is only trusted when
       its version == the latest committed round (a stale bitset could say
-      "definitely new" for a committed hash — the unsafe direction).
+      "definitely new" for a committed hash — the unsafe direction);
+    * **revocation**: none here. The bitsets are built from the unfiltered
+      seen deltas, so a revoked hash is always "maybe seen" and goes to the
+      exact confirm, which reads the caller's revocation-filtered seen view
+      (``CrawlEngine._seen_df``) and admits it as new.
 
     Versioned dirs ``v{round}`` under ``root``; the previous version is kept
     for crash safety and older ones are pruned.
@@ -241,16 +153,6 @@ class BloomTable:
         self.n_partitions = n_partitions
         self.fpp = fpp
         self.expected_per_part = expected_per_part
-        # deletable subset (--force / images-checker re-crawls, J3): Bloom
-        # can't delete, so revocations spill to a cuckoo filter (Fan et al.
-        # 2014) whose membership overrides "maybe seen". Driver-held but
-        # size-GATED (REVOKED_DRIVER_MAX): a --force on a connector is
-        # thousands of hashes; a change-rate recrawl wave at 100× is 10^7-8
-        # and goes through `set_revoked_df` instead — a distributed frame
-        # filter_unseen consumes with a hash-keyed join, never collected.
-        self.deleted: CuckooFilter | None = None
-        self._deleted_hashes: list[int] = []
-        self.revoked_df: DataFrame | None = None
         # version → (total_bits, broadcast payload | None): bitsets are
         # immutable per version (build/update write a NEW version dir and
         # prune the old), so the round loop's flag stage pays the metadata
@@ -320,69 +222,20 @@ class BloomTable:
             else "cogroup"
         )
 
-    # revocation sets at or under this count stay in the driver cuckoo
-    # (broadcast with the bitsets — zero extra shuffle per round); bigger
-    # waves (change-rate recrawl at web scale is 10^7-8 URLs/day) must go
-    # through set_revoked_df. Mirrors BROADCAST_MAX_BYTES: ~1M 8-byte
-    # hashes ≈ 16 MB of cuckoo, comfortably broadcastable.
-    REVOKED_DRIVER_MAX = 1_000_000
+    # Revocation lives only in the caller's seen view (see the class
+    # docstring). These two stubs exist solely because the benchmark
+    # tracer's PATCHES table (perfbench/tracing.py) looks both names up on
+    # this class; they go once those rows are dropped.
+    _NO_REVOCATION = (
+        "revocation is applied by the caller's revocation-filtered seen"
+        " view (CrawlEngine._seen_df), not by the Bloom table"
+    )
 
-    @property
-    def n_revoked_driver(self) -> int:
-        """Hashes already held by the driver cuckoo — callers gating a new
-        wave against ``REVOKED_DRIVER_MAX`` must add this (the gate in
-        :meth:`mark_deleted` is cumulative, so a per-wave check alone
-        would pass a second wave that the method then rejects)."""
-        return len(self._deleted_hashes)
+    def mark_deleted(self, hashes) -> None:
+        raise NotImplementedError(self._NO_REVOCATION)
 
-    def mark_deleted(self, hashes: np.ndarray) -> None:
-        """Record hashes whose 'seen' status is revoked (re-crawl).
-
-        On cuckoo overflow the filter rebuilds doubled from the full list
-        (index-walked — no O(n²) list-head pops). Callers with more than
-        ``REVOKED_DRIVER_MAX`` revocations must use :meth:`set_revoked_df`;
-        this method raises rather than silently ballooning driver heap.
-        """
-        hashes = np.asarray(hashes, dtype=np.int64)
-        if len(hashes) == 0:
-            return
-        # gate BEFORE recording: an over-gate wave must leave the table
-        # untouched, so the caller can reroute it through set_revoked_df
-        # and still mark_deleted small waves on this instance afterwards
-        n = len(self._deleted_hashes) + len(hashes)
-        if n > self.REVOKED_DRIVER_MAX:
-            raise ValueError(
-                f"{n} revoked hashes exceeds REVOKED_DRIVER_MAX="
-                f"{self.REVOKED_DRIVER_MAX}; pass the revocation set as a"
-                " DataFrame via set_revoked_df instead of collecting it"
-            )
-        self._deleted_hashes.extend(int(h) for h in hashes)
-        if self.deleted is None:
-            self.deleted = CuckooFilter(max(64, 2 * n))
-        todo = [int(h) for h in hashes]
-        i = 0
-        while i < len(todo):
-            if self.deleted.add(todo[i]):
-                i += 1
-                continue
-            # overflow → rebuild doubled, re-adding the complete deleted
-            # list from the top (fresh filter, so every add lands once)
-            self.deleted = CuckooFilter(self.deleted.n_buckets * 2)
-            todo = self._deleted_hashes
-            i = 0
-
-    def set_revoked_df(self, revoked: DataFrame) -> None:
-        """Distributed revocation set (one ``url_hash`` BIGINT column) for
-        waves too large for the driver cuckoo. ``filter_unseen`` routes any
-        candidate whose hash appears here to the suspect path with a
-        hash-keyed join (AQE broadcasts it when it turns out small); the
-        exact confirm against the caller's revocation-filtered seen view
-        then decides — the same safe direction the cuckoo uses. The frame
-        is evaluated once per round; callers should hand in a persisted or
-        parquet-backed frame so lineage doesn't recompute the wave."""
-        self.revoked_df = revoked.select(
-            F.col("url_hash").cast("long").alias("url_hash")
-        )
+    def set_revoked_df(self, revoked) -> None:
+        raise NotImplementedError(self._NO_REVOCATION)
 
     # -- version bookkeeping ------------------------------------------------
     def _vdir(self, version: int) -> str:
@@ -583,7 +436,6 @@ class BloomTable:
         candidates: DataFrame,
         seen: DataFrame,
         version: int,
-        deleted: "CuckooFilter | None" = None,
         hash_col: str = "url_hash",
         *,
         cache_registry: list,  # keyword-only, genuinely required
@@ -605,8 +457,10 @@ class BloomTable:
         owns unpersisting it once the round's outputs are materialized —
         with a silent default, 10^4 rounds would each leak a
         candidate-set-sized cache block until session stop (round-2
-        ADVICE); the signature itself now enforces the contract. ``deleted``
-        defaults to this table's own revocation cuckoo (``mark_deleted``)."""
+        ADVICE); the signature itself now enforces the contract.
+
+        ``seen`` must already leave out revoked hashes: the bitsets still
+        hold them, so they are suspects, and this confirm admits them."""
         if cache_registry is None:
             raise TypeError(
                 "filter_unseen requires cache_registry=<list>: the internal"
@@ -614,13 +468,6 @@ class BloomTable:
                 " round's outputs materialize) or it leaks per call"
             )
         spark = candidates.sparkSession
-        if deleted is None:
-            deleted = self.deleted
-        cuckoo_payload = (
-            (deleted.to_bytes(), deleted.n_buckets)
-            if deleted is not None
-            else None
-        )
 
         # payload is resolved only on the branches that consume it: an
         # explicit strategy="cogroup" call (rounds.py passes
@@ -642,36 +489,13 @@ class BloomTable:
                 # explicit strategy override past the gate: collect
                 # uncached (the gate exists precisely so auto never does)
                 payload = self._collect_payload(self.load(spark, version))
-            flagged = self._flag_broadcast(
-                spark, candidates, payload, cuckoo_payload, hash_col
-            )
+            flagged = self._flag_broadcast(spark, candidates, payload, hash_col)
         elif strategy == "cogroup":
             flagged = self._flag_cogroup(
-                spark, candidates, self.load(spark, version),
-                cuckoo_payload, hash_col,
+                candidates, self.load(spark, version), hash_col
             )
         else:
             raise ValueError(f"unknown strategy {strategy!r}")
-        if self.revoked_df is not None:
-            # large revocation wave (set_revoked_df): a hash-keyed left join
-            # routes revoked candidates to the SUSPECT path — same safe
-            # direction as the cuckoo (the exact confirm decides), but
-            # distributed: nothing about the wave ever sits in driver heap.
-            # AQE turns this into a broadcast join when the wave is small.
-            rv = self.revoked_df.select(
-                F.col("url_hash").alias("__rv_h"),
-                F.lit(True).alias("__rv"),
-            ).dropDuplicates(["__rv_h"])
-            flagged = (
-                flagged.join(
-                    rv, F.col(hash_col) == F.col("__rv_h"), "left"
-                )
-                .withColumn(
-                    "__maybe",
-                    F.col("__maybe") | F.coalesce(F.col("__rv"), F.lit(False)),
-                )
-                .drop("__rv_h", "__rv")
-            )
         flagged = flagged.persist()
         if cache_registry is not None:
             cache_registry.append(flagged)
@@ -684,9 +508,7 @@ class BloomTable:
         )
         return fresh.unionByName(confirmed_new)
 
-    def _flag_cogroup(
-        self, spark, candidates, bloom_df, cuckoo_payload, hash_col
-    ) -> DataFrame:
+    def _flag_cogroup(self, candidates, bloom_df, hash_col) -> DataFrame:
         """Route candidates to their pid's bitset (big-table strategy)."""
         cand = candidates.withColumn(
             "__pid",
@@ -696,7 +518,6 @@ class BloomTable:
             f"`{f.name}` {f.dataType.simpleString()}"
             for f in cand.schema.fields
         ) + ", __maybe boolean"
-        bc = spark.sparkContext.broadcast(cuckoo_payload)
 
         def _flag(key, cand_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame):
             if len(cand_pdf) == 0:
@@ -711,17 +532,6 @@ class BloomTable:
                     writable=False,
                 )
                 maybe = bf.maybe_contains(arr)
-            raw = bc.value
-            if raw is not None:
-                # a cuckoo (revocation) hit routes the row to the SUSPECT
-                # path — the exact confirm against the revocation-filtered
-                # seen view decides. Forcing "definitely new" here would
-                # let a fingerprint COLLISION with an unrelated committed
-                # hash skip the confirm and re-fetch it (the unsafe
-                # direction this module promises never happens); true
-                # revocations still come out new from the exact confirm.
-                cf = CuckooFilter.from_bytes(*raw, writable=False)
-                maybe |= cf.contains_many(arr)
             return cand_pdf.assign(__maybe=maybe)
 
         return (
@@ -731,20 +541,18 @@ class BloomTable:
             .drop("__pid")
         )
 
-    def _flag_broadcast(
-        self, spark, candidates, payload, cuckoo_payload, hash_col
-    ) -> DataFrame:
+    def _flag_broadcast(self, spark, candidates, payload, hash_col) -> DataFrame:
         """Broadcast the (bounded) bitsets; flag map-side — no candidate
         shuffle. ``payload`` arrives pre-collected (and version-cached) from
         :meth:`_broadcast_payload`, gated by BROADCAST_MAX_BYTES."""
         from pyspark.sql.functions import pandas_udf
 
-        bc = spark.sparkContext.broadcast((payload, cuckoo_payload))
+        bc = spark.sparkContext.broadcast(payload)
         P = self.n_partitions
 
         @pandas_udf("boolean")
         def _maybe_seen(h: pd.Series) -> pd.Series:
-            blooms_raw, cuckoo_raw = bc.value
+            blooms_raw = bc.value
             arr = h.to_numpy(dtype=np.int64)
             pids = np.mod(arr, P)
             out = np.zeros(len(arr), dtype=bool)
@@ -755,13 +563,6 @@ class BloomTable:
                 bf = BloomFilter.from_bytes(*raw, writable=False)
                 m = pids == pid
                 out[m] = bf.maybe_contains(arr[m])
-            if cuckoo_raw is not None:
-                # revocation hit → suspect (exact confirm decides); see
-                # _flag_cogroup for why forcing fresh here would be unsafe
-                cf = CuckooFilter.from_bytes(
-                    *cuckoo_raw, writable=False
-                )
-                out |= cf.contains_many(arr)
             return pd.Series(out)
 
         return candidates.withColumn("__maybe", _maybe_seen(F.col(hash_col)))

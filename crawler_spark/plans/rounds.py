@@ -473,7 +473,9 @@ class _RunState:
     # set once a commit's exact frontier count is 0 (or a complete
     # checkpoint is resumed): no further round runs
     frontier_empty: bool = False
+    # run(recrawl=...): the revoked hashes and their count
     recrawl_hashes: DataFrame | None = None
+    n_revoked: int | None = None
     # delta-frontier persistence: run-start additions no commit holds yet
     pending_add_rows: DataFrame | None = None
     # frames persisted for the whole run, released when run() returns
@@ -1214,8 +1216,9 @@ class CrawlEngine:
 
         ``recrawl``: optional (url, connector_id) rows whose seen status is
         revoked — the selective --force / images-checker path: their hashes
-        are deleted from the seen set (cuckoo spill on the Bloom side,
-        SURVEY.md §4.3.2) and they re-enter the frontier.
+        are anti-joined out of the pre-run seen deltas (``_seen_df``) and
+        they re-enter the frontier. Every round the run commits records the
+        revocation count as ``metrics["revoked"]``.
         """
         spark, cfg = self.spark, self.cfg
         self.ckpt.cleanup_partial()
@@ -1380,44 +1383,13 @@ class CrawlEngine:
         # well: delta commits can engage mid-run there.
         if cfg.frontier_storage in ("delta", "auto"):
             run.pending_add_rows = rows
-        # revoked-seen hashes: size-gated. Small waves (--force on a
-        # connector, images recheck — thousands) collect into the table's
-        # driver cuckoo, which rides the existing bitset broadcast for free.
-        # Big waves (change-rate recrawl at web scale is 10^7-8 URLs/day)
-        # NEVER collect: they persist as a bucket-partitioned parquet
-        # sidecar that filter_unseen consumes with a distributed hash-keyed
-        # join — the exact same shape seen_delta already uses.
-        # gate CUMULATIVELY: the cuckoo keeps prior waves (a second
-        # run(recrawl=...) on the same engine adds to it), and mark_deleted
-        # raises past the combined total — a per-wave check would crash
-        # that second run instead of falling back to the sidecar branch
-        # below. ONE bounded action decides: more than `room` hashes back
-        # means the wave overflows.
-        room = max(
-            0,
-            BloomTable.REVOKED_DRIVER_MAX - self.bloom_table.n_revoked_driver,
-        )
-        head = [r["url_hash"] for r in hashes.limit(room + 1).collect()]
-        if len(head) <= room:
-            n_revoked = len(head)
-            self.bloom_table.mark_deleted(np.array(head, dtype=np.int64))
-        else:
-            import os
-
-            n_revoked = hashes.count()
-            rv_dir = os.path.join(cfg.ckpt_dir, "_revoked_sidecar")
-            n_parts = self.bloom_table.n_partitions
-            (
-                hashes.select("url_hash")
-                .repartition(
-                    n_parts, F.pmod(F.col("url_hash"), F.lit(n_parts))
-                )
-                .write.mode("overwrite")
-                .parquet(rv_dir)
-            )
-            self.bloom_table.set_revoked_df(self.spark.read.parquet(rv_dir))
+        # the revocation itself is _seen_df's anti-join of these hashes
+        # from the pre-run seen deltas: the Bloom bitsets still hold them,
+        # so they always reach that exact confirm. The count materializes
+        # the persisted hashes and bounds the frontier growth.
+        run.n_revoked = hashes.count()
         if run.frontier_rows is not None:
-            run.frontier_rows += n_revoked
+            run.frontier_rows += run.n_revoked
 
     def _add_sitemaps(self, run: _RunState) -> bool:
         """One live sitemap wave over the seed hosts; its URLs join the
@@ -2175,6 +2147,8 @@ class CrawlEngine:
         # dominant driver cost at small rounds) and re-launch its broadcast
         # sub-jobs
         rnd.metrics = {"popped": rnd.n_popped, "stage_s": dict(rnd.stage_s)}
+        if run.n_revoked is not None:
+            rnd.metrics["revoked"] = run.n_revoked
         tables = self._round_tables(run, rnd, frontier_next)
         run.pending_add_rows = None  # persisted (or covered by a snapshot)
         # live robots: probe hosts first discovered this round (adds are
@@ -2373,8 +2347,9 @@ class CrawlEngine:
 
     def _bloom_upkeep(self, run: _RunState, rnd: _Round) -> None:
         """Seen-set upkeep after the commit: Bloom bitsets (full build on
-        cadence, else an incremental update from the committed seen delta),
-        re-fetched recrawl revocations, and seen-delta compaction."""
+        cadence, else an incremental update from the committed seen delta)
+        and seen-delta compaction. Recrawl revocations need no upkeep: they
+        live only in ``_seen_df``'s view of the pre-run deltas."""
         spark, cfg = self.spark, self.cfg
         run.seen_count += rnd.metrics["fetched_ok"]
         # re-check: this round may cross the use_bloom="auto" switch
@@ -2382,21 +2357,6 @@ class CrawlEngine:
             # ALL bitset maintenance is executor-side: the delta is read
             # back from the just-committed seen_delta parquet — the loop
             # never collects round hashes to the driver
-            if (
-                self.bloom_table.deleted is not None
-                and run.recrawl_hashes is not None
-            ):
-                # a re-fetched recrawl URL is seen again: drop its
-                # revocation so the cuckoo override stops admitting it.
-                # Bounded driver work: only the (small) revoked set can
-                # intersect the round batch.
-                refetched = run.recrawl_hashes.join(
-                    rnd.ok.select(F.col("url_hash").alias("__f_h")),
-                    run.recrawl_hashes["url_hash"] == F.col("__f_h"),
-                    "left_semi",
-                ).collect()
-                for r in refetched:
-                    self.bloom_table.deleted.delete(int(r["url_hash"]))
             if (
                 run.last_committed is None
                 or rnd.no % cfg.bloom_rebuild_every == 0
@@ -2409,15 +2369,11 @@ class CrawlEngine:
                 # config-mismatch (resume with different bloom_partitions
                 # must NOT incrementally OR into wrong-routed bitsets)
                 if cfg.bloom_partitions is None:
-                    # auto: re-size from the committed seen count; the
-                    # cuckoo revocations carry over (driver-held state)
-                    resized = BloomTable.sized_for(
+                    # auto: re-size from the committed seen count
+                    self.bloom_table = BloomTable.sized_for(
                         self.bloom_table.root, run.seen_count,
                         fpp=self.bloom_table.fpp,
                     )
-                    resized.deleted = self.bloom_table.deleted
-                    resized._deleted_hashes = self.bloom_table._deleted_hashes
-                    self.bloom_table = resized
                 self.bloom_table.build(self._all_seen_df(), version=rnd.no)
             else:
                 self.bloom_table.update(

@@ -58,26 +58,42 @@ def test_incremental_update(spark, tmp_path, seen_and_cands):
     assert not os.path.isdir(str(tmp_path / "blooms2" / "v-1"))
 
 
-def test_cuckoo_override_readmits_revoked(spark, tmp_path, seen_and_cands):
-    """A revoked-seen (forced recrawl) hash passes the Bloom as new."""
-    import numpy as np
-
+@pytest.mark.parametrize("strategy", ["broadcast", "cogroup"])
+def test_revoked_hashes_readmitted_by_exact_confirm(
+    spark, tmp_path, seen_and_cands, strategy
+):
+    """Revocation needs nothing in the table: with the bitsets built from
+    the FULL seen set and the confirm reading seen minus the revoked set R
+    (the engine's _all_seen_df and _seen_df), the result equals a plain
+    anti-join against seen minus R. A Bloom has no false negatives, so every
+    revoked hash is a suspect that the confirm admits as new."""
     from crawler_spark.operators.seen import BloomTable
 
     seen, cands = seen_and_cands
     bt = BloomTable(str(tmp_path / "blooms3"), n_partitions=8)
     bt.build(seen, version=0)
-    revoked = [r["url_hash"] for r in seen.limit(5).collect()]
-    bt.mark_deleted(np.array(revoked, dtype=np.int64))
-    # revoke from the exact table too (the engine anti-joins old deltas)
-    seen_minus = seen.join(
-        spark.createDataFrame([(h,) for h in revoked], "h long"),
-        seen["url_hash"] == F.col("h"),
-        "left_anti",
+    revoked = spark.createDataFrame(
+        [(r["url_hash"],) for r in seen.limit(5).collect()], "h long"
     )
-    got = bt.filter_unseen(cands, seen_minus, version=0, cache_registry=[])  # own cuckoo
-    got_hashes = {r["url_hash"] for r in got.collect()}
-    assert set(revoked) <= got_hashes
+    seen_minus = seen.join(
+        revoked, seen["url_hash"] == F.col("h"), "left_anti"
+    )
+    reg = []
+    got = {
+        r["id"]
+        for r in bt.filter_unseen(
+            cands, seen_minus, version=0, cache_registry=reg,
+            strategy=strategy,
+        ).collect()
+    }
+    want = {
+        r["id"]
+        for r in cands.join(seen_minus, "url_hash", "left_anti").collect()
+    }
+    assert len(want) == 2000 + 5  # every non-seen id, plus the revoked ones
+    assert got == want
+    for f in reg:
+        f.unpersist()
 
 
 def test_compaction_invisible_to_readers(spark, tmp_path):

@@ -1,10 +1,10 @@
-"""Bloom / cuckoo URL-seen structures (SURVEY.md §4.3.2)."""
+"""Bloom URL-seen structures (SURVEY.md §4.3.2)."""
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from crawler_spark.operators.seen import BloomFilter, CuckooFilter
+from crawler_spark.operators.seen import BloomFilter
 
 
 @settings(max_examples=50, deadline=None)
@@ -34,20 +34,6 @@ def test_bloom_roundtrip_bytes():
     assert bf2.maybe_contains(np.arange(100, dtype=np.int64)).all()
 
 
-def test_cuckoo_add_contains_delete():
-    cf = CuckooFilter(256)
-    keys = list(range(-500, -400))
-    for k in keys:
-        assert cf.add(k)
-    assert all(cf.contains(k) for k in keys)
-    # deletes actually remove (the --force / images-checker path, J3)
-    for k in keys[:50]:
-        assert cf.delete(k)
-    assert all(cf.contains(k) for k in keys[50:])
-    deleted_still = sum(cf.contains(k) for k in keys[:50])
-    assert deleted_still <= 5  # only fingerprint collisions may linger
-
-
 def test_bloomtable_exact_parity(spark, tmp_path):
     """Bloom pre-filter + exact confirm == plain anti-join, always.
     (The ONE seen-set API: BloomTable; the driver-dict SeenSet was
@@ -70,21 +56,3 @@ def test_bloomtable_exact_parity(spark, tmp_path):
         for r in bt.filter_unseen(cands, seen, version=0, cache_registry=[]).collect()
     )
     assert got == list(range(5000, 7500))
-
-
-def test_bloomtable_mark_deleted_overflow_rebuild():
-    """mark_deleted survives cuckoo overflow by rebuilding doubled from the
-    complete revocation list (no hash may be lost — a lost revocation would
-    suppress a forced re-crawl)."""
-    import numpy as np
-
-    from crawler_spark.operators.seen import BloomTable
-
-    bt = BloomTable("/tmp/unused_bloomtable_dir", n_partitions=4)
-    rng = np.random.default_rng(3)
-    hashes = rng.integers(-(2**62), 2**62, 3000, dtype=np.int64)
-    bt.mark_deleted(hashes[:100])
-    first_size = bt.deleted.n_buckets
-    bt.mark_deleted(hashes[100:])  # forces ≥1 overflow rebuild
-    assert bt.deleted.n_buckets > first_size
-    assert bt.deleted.contains_many(hashes).all()
