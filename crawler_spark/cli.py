@@ -242,14 +242,12 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from crawler_spark.plans.rounds import CrawlEngine, EngineConfig
+    from crawler_spark.session import SESSION_DEFAULTS
 
     owned = SparkSession.getActiveSession() is None
     spark = (
         SparkSession.builder.appName("crawler_spark")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=SESSION_DEFAULTS)
         .getOrCreate()
     )
     if args.list_fields or args.check_images:

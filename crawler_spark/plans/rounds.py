@@ -449,12 +449,6 @@ def _expandable():
 class _RunState:
     """What one ``CrawlEngine.run`` carries from round to round."""
 
-    frontier: DataFrame
-    # driver-known frontier size (exact, or an upper bound after delta
-    # rounds) — sizes the frontier WRITE layout each round; None = unknown
-    # (old manifests without the metric), which disables the sizing, never
-    # correctness
-    frontier_rows: int | None
     round_no: int
     # the latest committed round when the run started (-1: fresh crawl)
     start_latest: int
@@ -470,6 +464,13 @@ class _RunState:
     aqe_min: int
     shuffle_floor: int
     has_lang: bool
+    # the run-start frontier (_start_frontier), then each commit's
+    frontier: DataFrame | None = None
+    # driver-known frontier size (exact, or an upper bound after delta
+    # rounds) — sizes the frontier WRITE layout each round; None = unknown
+    # (old manifests without the metric), which disables the sizing, never
+    # correctness
+    frontier_rows: int | None = None
     # set once a commit's exact frontier count is 0 (or a complete
     # checkpoint is resumed): no further round runs
     frontier_empty: bool = False
@@ -489,6 +490,8 @@ class _Round:
     stage."""
 
     no: int
+    # the driver JVM's generated-class compile count at round start
+    codegen0: int = 0
     # wall seconds per stage, recorded by stage()
     stage_s: dict = dc_field(default_factory=dict)
     # frames persisted by the round's stages, released at its end
@@ -538,6 +541,15 @@ class _Round:
         the planner would not broadcast it; the driver KNOWS the bound
         (n_popped). Big rounds keep planner / AQE decisions."""
         return F.broadcast(df) if self.tiny else df
+
+
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes the driver JVM has compiled so far (Spark's
+    ``CodegenMetrics``). A class found in the JVM-wide codegen cache
+    (``spark.sql.codegen.cache.maxEntries``) is not compiled again, so a
+    round whose plan shapes an earlier round already ran adds little."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _materialize_once(df: DataFrame, rnd: _Round) -> DataFrame:
@@ -1225,13 +1237,10 @@ class CrawlEngine:
         if not resume and self.ckpt.latest_round() is not None:
             self._wipe()
         latest = self.ckpt.latest_round() if resume else None
-        frontier, n_frontier, exact = self._start_frontier(latest)
         aqe_min, shuffle_floor = tiny_round_thresholds(
             spark.sparkContext.defaultParallelism, cfg
         )
         run = _RunState(
-            frontier=frontier,
-            frontier_rows=n_frontier,
             round_no=0 if latest is None else latest + 1,
             start_latest=-1 if latest is None else latest,
             last_committed=latest,
@@ -1257,6 +1266,9 @@ class CrawlEngine:
             ),
         )
         try:
+            run.frontier, run.frontier_rows, exact = self._start_frontier(
+                run, latest
+            )
             unioned = recrawl is not None
             if recrawl is not None:
                 self._add_recrawl(run, recrawl)
@@ -1313,7 +1325,7 @@ class CrawlEngine:
             )
 
     def _start_frontier(
-        self, latest: int | None
+        self, run: _RunState, latest: int | None
     ) -> tuple[DataFrame, int | None, bool]:
         """(frontier, driver-known row count, whether the count is EXACT)
         at run start: the latest committed state on resume, the seed list
@@ -1323,7 +1335,12 @@ class CrawlEngine:
         correctness)."""
         if latest is None:
             frontier = seeds_to_frontier(self.seeds)
-            n = frontier.count()  # seed list: tiny by contract
+            # the seed list is tiny by contract: count it under the
+            # tiny-round switch (one job, no AQE query stages), then size
+            # the switch from the exact count
+            self._round_switch(run, 0)
+            n = frontier.count()
+            self._round_switch(run, n)
             # createDataFrame seed frames default to the session's full
             # parallelism — dozens of near-empty partitions that round 0's
             # whole pop/anti-join/union pipeline then inherits
@@ -1488,12 +1505,15 @@ class CrawlEngine:
         """Rounds until the frontier is exhausted or ``max_rounds``. Each
         stage's wall lands in the round's ``stage_s``: the stages before
         the commit in the committed manifest, all eight in the in-memory
-        round log (``CrawlResult.metrics``)."""
+        round log (``CrawlResult.metrics``). ``codegen_compiles`` (the
+        driver JVM's generated-class compiles) has the same split."""
         # the loop ends when a commit's EXACT frontier footer count is 0;
         # delta-frontier rounds carry only an upper bound and end through
         # the empty-pop path
         while run.round_no < self.cfg.max_rounds and not run.frontier_empty:
-            rnd = _Round(no=run.round_no)
+            rnd = _Round(
+                no=run.round_no, codegen0=_codegen_compiles(self.spark)
+            )
             with rnd.stage("pop"):
                 self._pop(run, rnd)
             if rnd.n_popped == 0:
@@ -1532,7 +1552,13 @@ class CrawlEngine:
     def _pop(self, run: _RunState, rnd: _Round) -> None:
         """Robots rules, backoff eligibility and the per-host budget pop,
         then the round's size switches and the salted host repartition."""
-        spark, cfg = self.spark, self.cfg
+        cfg = self.cfg
+        # a driver-known frontier bound below aqe_min already proves the
+        # round tiny: switch before the pop's count, so the count runs
+        # without AQE's per-shuffle query-stage jobs (a resumed run's first
+        # round would otherwise count under the session default)
+        if run.frontier_rows is not None and run.frontier_rows < run.aqe_min:
+            self._round_switch(run, run.frontier_rows, widen=False)
         # driver-known politeness size bound (robots probe cache bytes;
         # None without a probe cache — user rows are config scale and keep
         # their broadcast): gates every per-host broadcast this round — a
@@ -1579,25 +1605,7 @@ class CrawlEngine:
             rnd.popped_raw.unpersist()
             return
         rnd.tiny = n < run.aqe_min
-        if run.orig_aqe == "true":
-            want = "false" if rnd.tiny else "true"
-            if spark.conf.get("spark.sql.adaptive.enabled") != want:
-                spark.conf.set("spark.sql.adaptive.enabled", want)
-        # narrow the shuffle width while the round batch is tiny: with AQE
-        # off, every shuffle (frontier dedup, window pop, bloom routing)
-        # otherwise launches the session's full width over a handful of
-        # rows — task-launch overhead, not work. Affects plan-time only, so
-        # the NEXT round's pop inherits this round's width: rounds of
-        # similar size, self-correcting, and restored on run exit. Never
-        # widened past the session setting.
-        rnd.width = int(run.orig_shuffle)
-        if rnd.tiny:
-            rnd.width = min(
-                rnd.width,
-                max(run.shuffle_floor, -(-n // max(1, cfg.target_per_task))),
-            )
-        if spark.conf.get("spark.sql.shuffle.partitions") != str(rnd.width):
-            spark.conf.set("spark.sql.shuffle.partitions", str(rnd.width))
+        rnd.width = self._round_switch(run, n)
         # live mode: no salt — one worker per host so the in-worker
         # crawl-delay bounds the host's AGGREGATE request rate (k salt
         # buckets would fetch at k× the allowed rate). Live sizing stays in
@@ -1615,6 +1623,39 @@ class CrawlEngine:
             batch_bound=n,
         ).persist()
         rnd.remaining = remove_popped(run.frontier, rnd.popped)
+
+    def _round_switch(
+        self, run: _RunState, rows: int, widen: bool = True
+    ) -> int:
+        """The tiny-round session switch for a round of ``rows`` popped
+        URLs; returns the shuffle width it set. Below ``aqe_min`` AQE is
+        off and the width narrowed to ``rows / target_per_task`` (never
+        below ``shuffle_floor``); at or above it, the session's settings
+        hold. ``widen=False`` (``rows`` is only a bound) never widens the
+        current width.
+
+        The narrowing: with AQE off, every shuffle (frontier dedup, window
+        pop, bloom routing) otherwise launches the session's full width
+        over a handful of rows — task-launch overhead, not work. It affects
+        plan-time only, so the NEXT round's pop inherits this round's
+        width: rounds of similar size, self-correcting, and restored on run
+        exit. Never widened past the session setting."""
+        spark = self.spark
+        tiny = rows < run.aqe_min
+        if run.orig_aqe == "true":
+            want = "false" if tiny else "true"
+            if spark.conf.get("spark.sql.adaptive.enabled") != want:
+                spark.conf.set("spark.sql.adaptive.enabled", want)
+        width = int(run.orig_shuffle)
+        if tiny:
+            per_task = max(1, self.cfg.target_per_task)
+            width = min(width, max(run.shuffle_floor, -(-rows // per_task)))
+        now = spark.conf.get("spark.sql.shuffle.partitions")
+        if not widen:
+            width = min(width, int(now))
+        if now != str(width):
+            spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        return width
 
     def _earliest_backoff(self, rnd: _Round) -> int | None:
         """After an empty pop: the earliest FUTURE backoff round among
@@ -2146,7 +2187,11 @@ class CrawlEngine:
         # actions — each of those would re-analyze the whole round DAG (the
         # dominant driver cost at small rounds) and re-launch its broadcast
         # sub-jobs
-        rnd.metrics = {"popped": rnd.n_popped, "stage_s": dict(rnd.stage_s)}
+        rnd.metrics = {
+            "popped": rnd.n_popped,
+            "stage_s": dict(rnd.stage_s),
+            "codegen_compiles": _codegen_compiles(self.spark) - rnd.codegen0,
+        }
         if run.n_revoked is not None:
             rnd.metrics["revoked"] = run.n_revoked
         tables = self._round_tables(run, rnd, frontier_next)
@@ -2396,9 +2441,12 @@ class CrawlEngine:
             self.ckpt.expire_frontier(cfg.frontier_expire_intervals)
         for df in (rnd.popped_raw, rnd.popped, rnd.fetched, rnd.recs, *rnd.caches):
             df.unpersist()
-        run.metrics_log.append(
-            {"round": rnd.no, **rnd.metrics, "stage_s": rnd.stage_s}
-        )
+        run.metrics_log.append({
+            "round": rnd.no,
+            **rnd.metrics,
+            "stage_s": rnd.stage_s,
+            "codegen_compiles": _codegen_compiles(self.spark) - rnd.codegen0,
+        })
         # re-read from checkpoint: cuts lineage + is the resume point. Delta
         # rounds reconstruct snapshot+deltas with the same replay a resume
         # would run — the in-loop state and the resume state are the same
