@@ -36,8 +36,6 @@ from pyspark.sql import functions as F
 # engine table names (matches Checkpointer._TABLE_SCHEMAS keys)
 _KNOWN_TABLES = (
     "frontier",
-    "frontier_add",
-    "frontier_del",
     "seen_delta",
     "records_delta",
     "webtext_delta",
@@ -56,7 +54,6 @@ class CatalogCheckpointer:
         self.identifier = identifier
         self.root = f"catalog:{identifier}"  # for error messages
         self._manifest_tbl = self._tbl("_manifests")
-        self._expiry_tbl = self._tbl("_expiry")
         self._manifest_cache: dict[int, dict] | None = None
 
     def _tbl(self, name: str) -> str:
@@ -136,7 +133,7 @@ class CatalogCheckpointer:
         ``stats_cb`` is the PARQUET backend's footer-reader and is ignored
         here; the standard crawl metrics are computed with bounded Spark
         aggregations over the just-written round partitions instead
-        (records/adds/frontier row counts + one fetch-log status/bytes
+        (records/frontier row counts + one fetch-log status/bytes
         aggregate — all O(round batch) except the frontier count, which
         Iceberg serves from snapshot metadata in production)."""
         commit_s: dict[str, float] = {}
@@ -183,11 +180,6 @@ class CatalogCheckpointer:
             if "frontier" in tables
             else None
         )
-        stats["frontier_adds"] = (
-            self._round_part("frontier_add", round_no).count()
-            if "frontier_add" in tables
-            else None
-        )
         metrics.update(stats)
         manifest = {
             "round": round_no,
@@ -224,13 +216,7 @@ class CatalogCheckpointer:
 
     def has_table(self, round_no: int, name: str) -> bool:
         m = self._manifests().get(round_no)
-        if m is None or name not in m.get("tables", ()):
-            return False
-        if name in ("frontier", "frontier_add", "frontier_del"):
-            h = self.frontier_horizon()
-            if h is not None and round_no < h:
-                return False  # expired history (manifests stay immutable)
-        return True
+        return m is not None and name in m.get("tables", ())
 
     def load_all_deltas(
         self,
@@ -287,64 +273,8 @@ class CatalogCheckpointer:
                 return  # V1 catalog: orphans stay invisible; nothing to do
 
     def wipe(self) -> None:
-        """Fresh start: drop every crawl table (manifests + expiry too)."""
+        """Fresh start: drop every crawl table (manifests too)."""
         for name in _KNOWN_TABLES:
             self.spark.sql(f"DROP TABLE IF EXISTS {self._tbl(name)}")
         self.spark.sql(f"DROP TABLE IF EXISTS {self._manifest_tbl}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {self._expiry_tbl}")
         self._manifest_cache = None
-        self._horizon_cache = None
-
-    def expire_frontier(self, keep_intervals: int = 2) -> int | None:
-        """Expire delta-frontier history behind the newest ``keep_intervals``
-        snapshots (see Checkpointer.expire_frontier).
-
-        Crash-safe ordering: the horizon row is APPENDED to the tiny
-        ``_expiry`` table FIRST (the atomic point — ``has_table`` treats
-        frontier tables behind the horizon as gone from then on; manifests
-        are never rewritten), and only then are the expired rows deleted.
-        A kill between the two leaves unreferenced rows — wasted space, a
-        later expiry's DELETE reclaims them — never a reader that loads
-        half-expired state. Row-level DELETE is best-effort: on catalogs
-        without it (V1 parquet) the rows stay but are equally invisible."""
-        snaps = [
-            r for r in self.committed_rounds() if self.has_table(r, "frontier")
-        ]
-        if len(snaps) <= max(1, keep_intervals):
-            return None
-        horizon = snaps[-keep_intervals]
-        hrow = self.spark.createDataFrame([(int(horizon),)], "horizon int")
-        if not self._table_exists(self._expiry_tbl):
-            try:
-                hrow.writeTo(self._expiry_tbl).create()
-            except Exception:
-                hrow.write.mode("errorifexists").saveAsTable(self._expiry_tbl)
-        else:
-            try:
-                hrow.writeTo(self._expiry_tbl).append()
-            except Exception:
-                hrow.write.mode("append").saveAsTable(self._expiry_tbl)
-        self._horizon_cache = horizon
-        try:
-            for name in ("frontier", "frontier_add", "frontier_del"):
-                tbl = self._tbl(name)
-                if self._table_exists(tbl):
-                    self.spark.sql(
-                        f"DELETE FROM {tbl} WHERE __round < {int(horizon)}"
-                    )
-        except Exception:
-            pass  # V1: rows stay, has_table already hides them
-        return horizon
-
-    def frontier_horizon(self) -> int | None:
-        cached = getattr(self, "_horizon_cache", None)
-        if cached is not None:
-            return cached
-        if not self._table_exists(self._expiry_tbl):
-            return None
-        row = self.spark.table(self._expiry_tbl).agg(
-            F.max("horizon")
-        ).first()
-        h = row[0] if row is not None else None
-        self._horizon_cache = int(h) if h is not None else None
-        return self._horizon_cache

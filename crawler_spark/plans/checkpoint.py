@@ -32,11 +32,6 @@ from crawler_spark import schemas as _schemas
 # inference jobs were a measurable slice of per-round driver overhead)
 _TABLE_SCHEMAS = {
     "frontier": _schemas.FRONTIER,
-    # delta frontier storage (EngineConfig.frontier_storage="delta"):
-    # non-snapshot rounds persist O(batch) add/del deltas instead of the
-    # O(frontier) snapshot
-    "frontier_add": _schemas.FRONTIER,
-    "frontier_del": _schemas.URL_SEEN,
     "seen_delta": _schemas.URL_SEEN,
     "records_delta": _schemas.RECORDS,
     "webtext_delta": _schemas.WEBTEXT,
@@ -101,8 +96,6 @@ class Checkpointer:
         for d in list(os.listdir(self.root)):
             if d.startswith("round=") or d == "compact":
                 shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-            elif d == "frontier_expiry.json":
-                os.remove(os.path.join(self.root, d))
 
     def cleanup_partial(self) -> None:
         """Remove round dirs that never committed (kill mid-round)."""
@@ -211,58 +204,15 @@ class Checkpointer:
             if s.startswith("upto=") and int(s.split("=", 1)[1]) < upto:
                 shutil.rmtree(os.path.join(d, s), ignore_errors=True)
 
-    # -- delta-frontier expiry -------------------------------------------------
-    # Delta mode appends O(batch) frontier_add/frontier_del dirs every round
-    # and an O(frontier) snapshot every interval — unbounded over a 10^4-round
-    # crawl, and at 10^10 frontier rows the OLD SNAPSHOTS dominate storage.
-    # A snapshot subsumes every add/del ≤ its round (that is what
-    # _load_frontier_state replays), so history behind a kept snapshot is
-    # reconstructible-from-newer and safe to expire.
-
+    # ``perfbench/tracing.py`` looks this name up on the class to wrap it;
+    # it goes once that tracer row is dropped. The engine keeps one frontier
+    # format, the full snapshot per committed round, so there is no
+    # frontier history to expire.
     def expire_frontier(self, keep_intervals: int = 2) -> int | None:
-        """Expire delta-frontier history: keep the newest ``keep_intervals``
-        frontier snapshots plus all add/del deltas at-or-after the oldest
-        kept snapshot; delete older snapshots and older add/del dirs.
-
-        Returns (and records in ``frontier_expiry.json``) the horizon —
-        the oldest round a resume can still replay from. Output deltas
-        (records/webtext/seen/fetch_log) are NEVER touched: they remain the
-        authoritative crawl output, and the seen set keeps its own compact.
-        Manifests stay intact; ``has_table`` reflects the expiry, which is
-        what every reader branches on."""
-        snaps = [
-            r for r in self.committed_rounds() if self.has_table(r, "frontier")
-        ]
-        if len(snaps) <= max(1, keep_intervals):
-            return None
-        horizon = snaps[-keep_intervals]
-        # crash-safe ordering (same as the CatalogCheckpointer twin):
-        # record the horizon FIRST — atomically — then delete. A kill
-        # mid-rmtree otherwise leaves a half-deleted snapshot dir that
-        # has_table still reports present, with no horizon on disk to
-        # refuse the truncated read on resume.
-        expiry = os.path.join(self.root, "frontier_expiry.json")
-        tmp = expiry + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"resume_horizon": horizon}, fh)
-        os.replace(tmp, expiry)
-        for r in self.committed_rounds():
-            if r >= horizon:
-                continue
-            for t in ("frontier", "frontier_add", "frontier_del"):
-                p = os.path.join(self.round_dir(r), t)
-                if os.path.isdir(p):
-                    shutil.rmtree(p, ignore_errors=True)
-        return horizon
-
-    def frontier_horizon(self) -> int | None:
-        """Oldest round frontier state can be reconstructed for (None =
-        full history)."""
-        try:
-            with open(os.path.join(self.root, "frontier_expiry.json")) as fh:
-                return json.load(fh).get("resume_horizon")
-        except (OSError, ValueError):
-            return None
+        raise NotImplementedError(
+            "every committed round holds a full frontier snapshot; there is"
+            " no delta-frontier history to expire"
+        )
 
     # -- readers --------------------------------------------------------------
     @staticmethod
@@ -277,8 +227,7 @@ class Checkpointer:
         )
 
     def has_table(self, round_no: int, name: str) -> bool:
-        """Whether a committed round persisted ``name`` (delta-frontier
-        rounds write add/del tables instead of the snapshot)."""
+        """Whether a committed round persisted ``name``."""
         return os.path.isdir(os.path.join(self.round_dir(round_no), name))
 
     def load_all_deltas(

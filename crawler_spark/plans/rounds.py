@@ -41,13 +41,8 @@ Scale notes (the parts that must survive 1000 executors / 10^10 URLs):
   (pop_batch prune_shuffle) — at 10^10 rows that exchange is the round's
   largest data movement.
 
-The remaining per-round O(frontier) write — the full snapshot — has a
-delta mode (``EngineConfig.frontier_storage="delta"``): each round
-persists only its candidate additions and popped-hash tombstones (both
-O(round batch)) with a full snapshot every ``frontier_snapshot_every``
-rounds; reconstruction replays the same remove/add functions over the
-snapshot, so state is identical by construction (parity-pinned against
-full mode AND the replay oracle in tests/test_frontier_delta.py).
+Every committed round writes the full frontier snapshot, and the next round
+(or a resume) reloads it: the one per-round O(frontier) write.
 """
 
 from __future__ import annotations
@@ -57,8 +52,9 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType, StructType
 
 from crawler_spark import schemas
 from crawler_spark.functions.canonicalize import url_hash, url_host
@@ -122,16 +118,8 @@ def _round_stats_from_written(lineage: dict) -> dict:
     n_records = _footer_rows("records_delta")
     # exact committed frontier size, carried in the manifest so the next
     # round (or a resume) can size its frontier WRITE layout without ever
-    # running a count action over the (possibly 10^10-row) frontier.
-    # Delta-frontier rounds don't write the snapshot — they report None and
-    # the loop keeps a driver-side upper bound instead.
+    # running a count action over the (possibly 10^10-row) frontier
     n_frontier = _footer_rows("frontier") if "frontier" in lineage else None
-    # delta rounds: exact row count of the add delta (footer metadata only).
-    # Dedup against the live frontier can only shrink it, so it is a true
-    # upper bound on this round's frontier growth — the loop uses it to keep
-    # its driver-side frontier_rows bound honest on BIG rounds too (where no
-    # n_links count action ever runs).
-    n_adds = _footer_rows("frontier_add") if "frontier_add" in lineage else None
     fl = lineage["fetch_log_delta"]
     n_ok = n_failed = n_bytes = n_304 = 0
     for f in fl["files"]:
@@ -154,7 +142,6 @@ def _round_stats_from_written(lineage: dict) -> dict:
         "bytes_fetched": n_bytes,
         "records_written": n_records,
         "frontier_rows": n_frontier,
-        "frontier_adds": n_adds,
     }
 
 
@@ -333,30 +320,6 @@ class EngineConfig:
     # target), so the tiny-round optimizations scale with the executor
     # count instead of being pinned to this box. An int pins it.
     aqe_min_batch: int | None = None
-    # frontier persistence: "full" rewrites the whole frontier snapshot
-    # every round (simple, cheapest at driver-bound round sizes); "delta"
-    # writes O(round batch) add/del deltas per round plus a full snapshot
-    # every frontier_snapshot_every rounds — at a 10^10-row frontier the
-    # per-round full rewrite is the engine's largest write, so delta mode
-    # cuts commit IO ~snapshot_every×; "auto" (default) is full below
-    # frontier_delta_threshold driver-known frontier rows and delta above
-    # (like use_bloom="auto", the at-scale configuration engages itself).
-    # State reconstruction replays the SAME remove_popped/add_candidates
-    # functions the live loop applies (semantics identical by
-    # construction, parity-tested in tests/test_frontier_delta.py); resume
-    # works from any committed round, mid-interval included, and
-    # mixed-mode checkpoints (auto crossing the threshold) reconstruct
-    # naturally — any round with a snapshot is a replay base.
-    frontier_storage: str = "auto"
-    frontier_delta_threshold: int = 10_000_000
-    frontier_snapshot_every: int = 8
-    # delta-frontier expiry: keep only the newest N frontier snapshots (and
-    # the add/del deltas they need) — bounds checkpoint storage over a long
-    # delta crawl, where old O(frontier) snapshots dominate. None (default)
-    # keeps full history (kill-anywhere resume to ANY round); production
-    # sets e.g. 2, trading resume depth for bounded storage — the horizon
-    # is recorded in frontier_expiry.json.
-    frontier_expire_intervals: int | None = None
     # opt-in per-round link-graph edge log (src_hash, dst_hash) — the input
     # for offline frontier re-scoring (operators/opic.py:pagerank) between
     # crawls. Off by default: it adds O(round links) commit volume.
@@ -437,6 +400,34 @@ def _robots_fold(rob: DataFrame) -> DataFrame:
 
 _FRONTIER_COLS = schemas.FRONTIER.fieldNames()
 
+# the per-connector paging/related config the seeds carry
+_CONNECTOR_CFG_COLS = (
+    "paging_style", "limit", "start_page", "max_offset", "related_policy",
+)
+
+
+def _connector_cfg_map(rows: list, schema: StructType) -> Column:
+    """The per-connector config rows (``connector_id`` plus
+    ``_CONNECTOR_CFG_COLS``, one per connector) as a literal
+    ``connector_id → struct`` map. ``run()`` collects the rows once, so a
+    round looks each row's config up in an expression instead of
+    broadcasting a config table, which costs a job per join."""
+    key_type = schema["connector_id"].dataType
+    fields = [schema[c] for c in _CONNECTOR_CFG_COLS]
+    entries = []
+    for r in rows:
+        if r["connector_id"] is None:
+            continue
+        entries += [
+            F.lit(r["connector_id"]),
+            F.struct(
+                *[F.lit(r[f.name]).cast(f.dataType).alias(f.name) for f in fields]
+            ),
+        ]
+    if not entries:
+        return F.lit(None).cast(MapType(key_type, StructType(fields)))
+    return F.create_map(*entries)
+
 
 def _expandable():
     """Record rows whose connector follows related links."""
@@ -466,19 +457,17 @@ class _RunState:
     has_lang: bool
     # the run-start frontier (_start_frontier), then each commit's
     frontier: DataFrame | None = None
-    # driver-known frontier size (exact, or an upper bound after delta
-    # rounds) — sizes the frontier WRITE layout each round; None = unknown
-    # (old manifests without the metric), which disables the sizing, never
-    # correctness
+    # driver-known frontier size: the committed snapshot's footer count
+    # (plus run-start additions until the first commit) — sizes the
+    # frontier WRITE layout each round; None = unknown (old manifests
+    # without the metric), which disables the sizing, never correctness
     frontier_rows: int | None = None
-    # set once a commit's exact frontier count is 0 (or a complete
-    # checkpoint is resumed): no further round runs
+    # set once a commit's frontier count is 0 (or a complete checkpoint is
+    # resumed): no further round runs
     frontier_empty: bool = False
     # run(recrawl=...): the revoked hashes and their count
     recrawl_hashes: DataFrame | None = None
     n_revoked: int | None = None
-    # delta-frontier persistence: run-start additions no commit holds yet
-    pending_add_rows: DataFrame | None = None
     # frames persisted for the whole run, released when run() returns
     run_caches: list = dc_field(default_factory=list)
     metrics_log: list = dc_field(default_factory=list)
@@ -523,7 +512,6 @@ class _Round:
     round_adds: DataFrame | None = None
     # commit
     metrics: dict = dc_field(default_factory=dict)
-    snapshot_round: bool = True
 
     @contextmanager
     def stage(self, name: str):
@@ -654,15 +642,8 @@ class CrawlEngine:
             self.bloom_table = BloomTable(
                 bloom_root, self.cfg.bloom_partitions
             )
-        # per-connector paging/related config — a handful of rows, broadcastable
-        self.seed_cfg = seeds.select(
-            "connector_id",
-            "paging_style",
-            "limit",
-            "start_page",
-            "max_offset",
-            "related_policy",
-        ).dropDuplicates(["connector_id"])
+        # per-connector paging/related config, collected once per run()
+        self._connector_cfg: Column | None = None
 
     # ------------------------------------------------------------------
     def _empty(self, schema) -> DataFrame:
@@ -1173,54 +1154,6 @@ class CrawlEngine:
         finally:
             wave.unpersist()
 
-    def _load_frontier_state(self, upto: int) -> tuple[DataFrame, int]:
-        """Delta-frontier reconstruction: the latest committed snapshot
-        ≤ ``upto`` replayed forward through each later round's del/add
-        deltas using the SAME remove_popped/add_candidates the live loop
-        applies — frontier state after round ``upto`` is therefore
-        bit-identical to what full-snapshot mode would have persisted.
-        Bounded work: ≤ frontier_snapshot_every delta dirs, each O(round
-        batch), applied as broadcast del probes + url_hash windows over
-        one snapshot scan. Returns (frontier, snapshot_round) — the
-        snapshot round's manifest carries the last exact frontier_rows."""
-        committed = self.ckpt.committed_rounds()
-        snap = None
-        for r in reversed(committed):
-            if r <= upto and self.ckpt.has_table(r, "frontier"):
-                snap = r
-                break
-        if snap is None:
-            horizon = self.ckpt.frontier_horizon()
-            if horizon is not None:
-                raise RuntimeError(
-                    f"frontier state for round {upto} was expired"
-                    f" (frontier_expire_intervals): resume horizon is round"
-                    f" {horizon} — resume from a round ≥ the horizon"
-                )
-            raise RuntimeError(
-                f"no frontier snapshot ≤ round {upto} in {self.ckpt.root} —"
-                " delta-frontier checkpoints always snapshot round 0, so"
-                " this checkpoint is corrupt or from an incompatible engine"
-            )
-        df = self.ckpt.load(self.spark, snap, "frontier")
-
-        # broadcast each replayed round's del keys only under the
-        # manifest-carried pop count (driver-known, no extra action): a
-        # 10M-pop delta round's key set must not land on the driver — past
-        # the bound the anti-join falls back to a shuffle
-        for q in [r for r in committed if snap < r <= upto]:
-            dels = self.ckpt.load(self.spark, q, "frontier_del")
-            popped = self.ckpt.round_metric(q, "popped")
-            if (
-                popped is not None
-                and int(popped) * politeness_mod.KEY_BYTES
-                <= politeness_mod.BROADCAST_MAX_BYTES
-            ):
-                dels = F.broadcast(dels)
-            adds = self.ckpt.load(self.spark, q, "frontier_add")
-            df = add_candidates(remove_popped(df, dels), adds)
-        return df, snap
-
     def run(
         self, resume: bool = True, recrawl: DataFrame | None = None
     ) -> CrawlResult:
@@ -1265,43 +1198,13 @@ class CrawlEngine:
                 or "lang" in set(self.pages.schema.fieldNames())
             ),
         )
+        # the run's first round record also holds the pre-loop work: its
+        # wall as stage_s["run_start"], its compiles from here on
+        first = _Round(no=run.round_no, codegen0=_codegen_compiles(spark))
         try:
-            run.frontier, run.frontier_rows, exact = self._start_frontier(
-                run, latest
-            )
-            unioned = recrawl is not None
-            if recrawl is not None:
-                self._add_recrawl(run, recrawl)
-            # live robots acquisition: effective politeness from any prior
-            # probes, then a run-start wave over seed (+ recrawl) hosts so
-            # the FIRST pop already honors their rules; the per-round wave
-            # at commit covers hosts newly discovered by link extraction
-            # and (under a TTL) hosts still being fetched
-            self._refresh_effective_politeness(run.round_no)
-            if cfg.fetch_mode == "live" and cfg.live_robots:
-                src = self.seeds.select("url")
-                if recrawl is not None:
-                    src = src.union(recrawl.select("url"))
-                self._robots_refresh(src, run.round_no)
-            # opt-in live sitemap discovery (fresh starts only: a resume's
-            # round-0 commit already persisted whatever the wave found, and
-            # the seen-set/add_candidates dedup makes re-adding pointless)
-            if cfg.fetch_mode == "live" and cfg.live_sitemaps and latest is None:
-                unioned = self._add_sitemaps(run) or unioned
-            # run-start frontier built ONCE: with recrawl/sitemap rows
-            # unioned in, pop's window, its join-back and the first commit's
-            # remove_popped would each rebuild the add_candidates lineage.
-            # Gated on the driver-known tiny bound, so a big frontier is
-            # never pinned in executor storage.
-            if (
-                unioned
-                and run.frontier_rows is not None
-                and run.frontier_rows < aqe_min
-            ):
-                run.frontier = run.frontier.localCheckpoint(eager=True)
-            # an exactly-empty frontier (a complete checkpoint) runs no round
-            run.frontier_empty = exact and run.frontier_rows == 0
-            return self._run_rounds(run)
+            with first.stage("run_start"):
+                self._start_run(run, latest, recrawl)
+            return self._run_rounds(run, first)
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", run.orig_aqe)
             spark.conf.set("spark.sql.shuffle.partitions", run.orig_shuffle)
@@ -1324,15 +1227,59 @@ class CrawlEngine:
                 self.bloom_table.root, self.cfg.bloom_partitions
             )
 
+    def _start_run(
+        self, run: _RunState, latest: int | None, recrawl: DataFrame | None
+    ) -> None:
+        """The work before the first round: the run-start frontier (plus
+        recrawl and sitemap rows), the per-connector config and the
+        run-start robots wave."""
+        cfg = self.cfg
+        run.frontier, run.frontier_rows = self._start_frontier(run, latest)
+        conn = self.seeds.select(
+            "connector_id", *_CONNECTOR_CFG_COLS
+        ).dropDuplicates(["connector_id"])
+        self._connector_cfg = _connector_cfg_map(conn.collect(), conn.schema)
+        unioned = recrawl is not None
+        if recrawl is not None:
+            self._add_recrawl(run, recrawl)
+        # live robots acquisition: effective politeness from any prior
+        # probes, then a run-start wave over seed (+ recrawl) hosts so the
+        # FIRST pop already honors their rules; the per-round wave at
+        # commit covers hosts newly discovered by link extraction and
+        # (under a TTL) hosts still being fetched
+        self._refresh_effective_politeness(run.round_no)
+        if cfg.fetch_mode == "live" and cfg.live_robots:
+            src = self.seeds.select("url")
+            if recrawl is not None:
+                src = src.union(recrawl.select("url"))
+            self._robots_refresh(src, run.round_no)
+        # opt-in live sitemap discovery (fresh starts only: a resume's
+        # round-0 commit already persisted whatever the wave found, and the
+        # seen-set/add_candidates dedup makes re-adding pointless)
+        if cfg.fetch_mode == "live" and cfg.live_sitemaps and latest is None:
+            unioned = self._add_sitemaps(run) or unioned
+        # run-start frontier built ONCE: with recrawl/sitemap rows unioned
+        # in, pop's window, its join-back and the first commit's
+        # remove_popped would each rebuild the add_candidates lineage.
+        # Gated on the driver-known tiny bound, so a big frontier is never
+        # pinned in executor storage.
+        if (
+            unioned
+            and run.frontier_rows is not None
+            and run.frontier_rows < run.aqe_min
+        ):
+            run.frontier = run.frontier.localCheckpoint(eager=True)
+        # an empty frontier (a complete checkpoint) runs no round
+        run.frontier_empty = run.frontier_rows == 0
+
     def _start_frontier(
         self, run: _RunState, latest: int | None
-    ) -> tuple[DataFrame, int | None, bool]:
-        """(frontier, driver-known row count, whether the count is EXACT)
-        at run start: the latest committed state on resume, the seed list
-        on a fresh crawl. The count is exact for a snapshot footer or the
-        seed count, an upper bound after a delta replay, and None when an
-        old manifest lacks the metric (which disables layout sizing, never
-        correctness)."""
+    ) -> tuple[DataFrame, int | None]:
+        """(frontier, driver-known row count) at run start: the latest
+        committed snapshot on resume, the seed list on a fresh crawl. The
+        count is the snapshot's footer count or the seed count, and None
+        when an old manifest lacks the metric (which disables layout
+        sizing, never correctness)."""
         if latest is None:
             frontier = seeds_to_frontier(self.seeds)
             # the seed list is tiny by contract: count it under the
@@ -1344,40 +1291,23 @@ class CrawlEngine:
             # createDataFrame seed frames default to the session's full
             # parallelism — dozens of near-empty partitions that round 0's
             # whole pop/anti-join/union pipeline then inherits
-            return frontier.coalesce(max(1, -(-n // 1_000_000))), n, True
-        # branch on what the checkpoint actually contains, not the config
-        # string: in "auto" mode delta commits engage past the row
-        # threshold, so the latest round may or may not carry a frontier
-        # snapshot — ckpt.has_table is the ground truth
-        if self.ckpt.has_table(latest, "frontier"):
-            frontier = self.ckpt.load(self.spark, latest, "frontier")
-            n = self.ckpt.round_metric(latest, "frontier_rows")
-            return frontier, None if n is None else int(n), True
-        # mid-interval resume: snapshot + delta replay (identical state by
-        # construction — see _load_frontier_state). The row bound is the
-        # snapshot's exact count plus each later delta round's committed
-        # adds bound, so auto-mode's delta-engagement check survives the
-        # resume.
-        frontier, snap = self._load_frontier_state(latest)
-        n = self.ckpt.round_metric(snap, "frontier_rows")
-        if n is not None:
-            for q in self.ckpt.committed_rounds():
-                if snap < q <= latest:
-                    adds = self.ckpt.round_metric(q, "frontier_adds")
-                    if adds is None:
-                        # old manifest without the adds bound: an unknown
-                        # term makes the whole bound unknown — never
-                        # silently under-count (the bound gates broadcasts
-                        # and the auto delta-engagement check)
-                        n = None
-                        break
-                    n += int(adds)
-        return frontier, None if n is None else int(n), False
+            return frontier.coalesce(max(1, -(-n // 1_000_000))), n
+        if not self.ckpt.has_table(latest, "frontier"):
+            # older builds could commit a round with frontier add/del
+            # deltas instead of the snapshot; this engine reads snapshots
+            raise RuntimeError(
+                f"committed round {latest} in {self.ckpt.root} has no"
+                " frontier snapshot (a delta-frontier checkpoint from an"
+                " older build), so it cannot be resumed: start the crawl"
+                " afresh (run(resume=False), CLI --no-resume)"
+            )
+        frontier = self.ckpt.load(self.spark, latest, "frontier")
+        n = self.ckpt.round_metric(latest, "frontier_rows")
+        return frontier, None if n is None else int(n)
 
     def _add_recrawl(self, run: _RunState, recrawl: DataFrame) -> None:
         """Revoke the seen status of ``recrawl``'s URLs and put them back
         in the frontier."""
-        cfg = self.cfg
         rows = frontier_rows(
             recrawl,
             F.col("url"),
@@ -1393,13 +1323,6 @@ class CrawlEngine:
         run.frontier = add_candidates(run.frontier, rows)
         hashes = run.recrawl_hashes = rows.select("url_hash").persist()
         run.run_caches.append(hashes)
-        # delta-frontier persistence: run-start additions exist only in
-        # this run's memory until a commit persists them — ride the first
-        # committed round's add delta (a snapshot commit covers them
-        # implicitly and clears the pending set too). Armed for "auto" as
-        # well: delta commits can engage mid-run there.
-        if cfg.frontier_storage in ("delta", "auto"):
-            run.pending_add_rows = rows
         # the revocation itself is _seen_df's anti-join of these hashes
         # from the pre-run seen deltas: the Bloom bitsets still hold them,
         # so they always reach that exact confirm. The count materializes
@@ -1437,13 +1360,6 @@ class CrawlEngine:
         run.frontier = add_candidates(run.frontier, sm_rows)
         if run.frontier_rows is not None:
             run.frontier_rows += n_sm
-        if cfg.frontier_storage in ("delta", "auto"):
-            # both are builder output in FRONTIER column order
-            run.pending_add_rows = (
-                sm_rows
-                if run.pending_add_rows is None
-                else run.pending_add_rows.union(sm_rows)
-            )
         return True
 
     def _bloom_enabled(self, seen_count: int) -> bool:
@@ -1501,26 +1417,24 @@ class CrawlEngine:
 
     # ---- the round loop: one method per stage ------------------------
 
-    def _run_rounds(self, run: _RunState) -> CrawlResult:
-        """Rounds until the frontier is exhausted or ``max_rounds``. Each
-        stage's wall lands in the round's ``stage_s``: the stages before
-        the commit in the committed manifest, all eight in the in-memory
-        round log (``CrawlResult.metrics``). ``codegen_compiles`` (the
-        driver JVM's generated-class compiles) has the same split."""
-        # the loop ends when a commit's EXACT frontier footer count is 0;
-        # delta-frontier rounds carry only an upper bound and end through
-        # the empty-pop path
+    def _run_rounds(self, run: _RunState, rnd: _Round) -> CrawlResult:
+        """Rounds, from ``rnd``, until the frontier is exhausted or
+        ``max_rounds``. Each stage's wall lands in the round's ``stage_s``:
+        the stages before the commit in the committed manifest, all eight
+        in the in-memory round log (``CrawlResult.metrics``).
+        ``codegen_compiles`` (the driver JVM's generated-class compiles)
+        has the same split."""
+        # the loop ends when a commit's frontier footer count is 0
         while run.round_no < self.cfg.max_rounds and not run.frontier_empty:
-            rnd = _Round(
-                no=run.round_no, codegen0=_codegen_compiles(self.spark)
-            )
             with rnd.stage("pop"):
                 self._pop(run, rnd)
             if rnd.n_popped == 0:
                 nxt = self._earliest_backoff(rnd)
                 if nxt is None:
                     break
-                run.round_no = nxt
+                # the next round with eligible rows keeps this record
+                # (run-start wall and compiles included)
+                run.round_no = rnd.no = nxt
                 continue
             with rnd.stage("fetch"):
                 self._fetch(rnd)
@@ -1537,6 +1451,9 @@ class CrawlEngine:
             with rnd.stage("bloom_upkeep"):
                 self._bloom_upkeep(run, rnd)
             self._end_round(run, rnd)
+            rnd = _Round(
+                no=run.round_no, codegen0=_codegen_compiles(self.spark)
+            )
         webtext = self._deltas_or_empty("webtext_delta", schemas.WEBTEXT)
         if self.cfg.keep_best or self.cfg.dedup_paragraphs:
             webtext = self._curate_webtext(webtext)
@@ -1823,9 +1740,9 @@ class CrawlEngine:
         links and recs are projections of it."""
         cfg = self.cfg
         page_meta = rnd.ok.select(
+            "connector_id",
             "url",
             "kind",
-            "connector_id",
             "seed_idx",
             "page_no",
             "in_page_idx",
@@ -1834,10 +1751,9 @@ class CrawlEngine:
             "score",
             *(["lang"] if run.has_lang else []),
             "warc_ts",
-        ).join(
-            F.broadcast(self.seed_cfg.select("connector_id", "related_policy")),
-            "connector_id",
-            "left",
+            self._connector_cfg[F.col("connector_id")]["related_policy"].alias(
+                "related_policy"
+            ),
         )
         extracted = (
             rnd.ok.select("url", "body", "connector_id", "kind")
@@ -1958,8 +1874,9 @@ class CrawlEngine:
             F.count("out_url").alias("n_links"),
             F.first("total_count", ignorenulls=True).alias("total_count"),
         )
-        per_page = per_page.join(
-            F.broadcast(self.seed_cfg), "connector_id", "left"
+        conn = self._connector_cfg[F.col("connector_id")]
+        per_page = per_page.select(
+            "*", *[conn[c].alias(c) for c in _CONNECTOR_CFG_COLS]
         )
         total_pages = F.ceil(F.col("total_count") / F.col("limit"))
         last_page = (F.col("start_page") + total_pages - 1).cast("int")
@@ -2177,7 +2094,7 @@ class CrawlEngine:
         )
 
     def _commit(self, run: _RunState, rnd: _Round) -> None:
-        """Commit the round (frontier snapshot or delta, and the round's
+        """Commit the round (frontier snapshot, and the round's
         seen/records/webtext/fetch-log deltas), then carry the committed
         frontier size forward."""
         frontier_next = add_candidates(rnd.remaining, rnd.round_adds)
@@ -2195,7 +2112,6 @@ class CrawlEngine:
         if run.n_revoked is not None:
             rnd.metrics["revoked"] = run.n_revoked
         tables = self._round_tables(run, rnd, frontier_next)
-        run.pending_add_rows = None  # persisted (or covered by a snapshot)
         # live robots: probe hosts first discovered this round (adds are
         # round-batch-bounded) BEFORE the commit — a kill between commit
         # and probe would otherwise persist frontier hosts that resume
@@ -2214,27 +2130,13 @@ class CrawlEngine:
         self.ckpt.commit_round(
             rnd.no, tables, rnd.metrics, stats_cb=_round_stats_from_written
         )
-        committed = rnd.metrics.get("frontier_rows")
-        run.frontier_empty = committed == 0
-        if committed is not None:
-            run.frontier_rows = committed
-        elif run.frontier_rows is not None:
-            # delta round: exact count unknown without a frontier scan;
-            # carry a driver-side UPPER bound (adds can only dedup down) —
-            # used only to size write layouts and the auto-mode
-            # delta-engagement check, never semantics. The add-delta footer
-            # count is exact; n_popped covers rows the replay may re-admit
-            # via the popped-tombstone ordering.
-            adds_bound = rnd.metrics.get("frontier_adds")
-            if adds_bound is None:
-                adds_bound = rnd.n_links + rnd.n_popped
-            run.frontier_rows += adds_bound
+        run.frontier_rows = rnd.metrics["frontier_rows"]
+        run.frontier_empty = run.frontier_rows == 0
 
     def _round_tables(
         self, run: _RunState, rnd: _Round, frontier_next: DataFrame
     ) -> dict[str, DataFrame]:
-        """The tables the round's commit writes, with their write layout;
-        sets ``rnd.snapshot_round``."""
+        """The tables the round's commit writes, with their write layout."""
         cfg = self.cfg
         # write layout: tiny rounds otherwise inherit the full shuffle
         # width (33+ tasks AND files per table for a handful of rows), and
@@ -2298,33 +2200,7 @@ class CrawlEngine:
                 )
             )
             tables["link_graph_delta"] = shrink(search_edges.union(rel_edges))
-        delta_on = cfg.frontier_storage == "delta" or (
-            cfg.frontier_storage == "auto"
-            and run.frontier_rows is not None
-            and run.frontier_rows > cfg.frontier_delta_threshold
-        )
-        rnd.snapshot_round = (
-            not delta_on or rnd.no % cfg.frontier_snapshot_every == 0
-        )
-        if rnd.snapshot_round:
-            tables["frontier"] = frontier_out
-        else:
-            # O(round batch) persistence instead of the O(frontier)
-            # snapshot: this round's candidate additions + popped
-            # tombstones. Reconstruction (see _load_frontier_state) replays
-            # remove(dels)-then-add(adds) per round, so any run-start
-            # (recrawl) rows not yet persisted ride this add delta MINUS the
-            # hashes popped this round — a popped pending URL must not be
-            # resurrected by replay.
-            add_out = rnd.round_adds
-            if run.pending_add_rows is not None:
-                add_out = add_out.union(
-                    remove_popped(
-                        run.pending_add_rows.select(*_FRONTIER_COLS), rnd.popped
-                    ).select(*_FRONTIER_COLS)
-                )
-            tables["frontier_add"] = shrink(add_out)
-            tables["frontier_del"] = shrink(rnd.popped.select("url_hash"))
+        tables["frontier"] = frontier_out
         return tables
 
     def _record_sinks(
@@ -2432,13 +2308,8 @@ class CrawlEngine:
             self.ckpt.compact(spark, "seen_delta", upto=rnd.no)
 
     def _end_round(self, run: _RunState, rnd: _Round) -> None:
-        """Frontier-history expiry, the round's cache releases, the round
-        log, and the committed frontier as the next round's input."""
-        cfg = self.cfg
-        if rnd.snapshot_round and cfg.frontier_expire_intervals:
-            # bounded delta-frontier history: old snapshots + the add/del
-            # dirs they subsume expire behind the horizon
-            self.ckpt.expire_frontier(cfg.frontier_expire_intervals)
+        """The round's cache releases, the round log, and the committed
+        frontier as the next round's input."""
         for df in (rnd.popped_raw, rnd.popped, rnd.fetched, rnd.recs, *rnd.caches):
             df.unpersist()
         run.metrics_log.append({
@@ -2447,15 +2318,7 @@ class CrawlEngine:
             "stage_s": rnd.stage_s,
             "codegen_compiles": _codegen_compiles(self.spark) - rnd.codegen0,
         })
-        # re-read from checkpoint: cuts lineage + is the resume point. Delta
-        # rounds reconstruct snapshot+deltas with the same replay a resume
-        # would run — the in-loop state and the resume state are the same
-        # plan by construction. Branch on what THIS round actually
-        # committed (snapshot_round), never on the config string: "auto"
-        # engages delta commits past the row threshold and must reload
-        # through the replay path too.
-        if rnd.snapshot_round:
-            run.frontier = self.ckpt.load(self.spark, rnd.no, "frontier")
-        else:
-            run.frontier, _ = self._load_frontier_state(rnd.no)
+        # re-read from checkpoint: cuts lineage, and is the state a resume
+        # would start from
+        run.frontier = self.ckpt.load(self.spark, rnd.no, "frontier")
         run.round_no = rnd.no + 1

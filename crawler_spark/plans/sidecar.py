@@ -15,6 +15,11 @@ killed midway loses at most what was learned, never correctness:
   as ``None``, "nothing learned yet";
 * corrupt — data files Spark cannot read — raises from :meth:`Sidecar.read`
   instead of silently reading as absent.
+
+Compaction swaps its folded copy in by renames only, so a kill at any point
+leaves every row readable: the live directory, or — when a kill fell between
+moving the live directory aside and moving the copy in — the completed
+``<dir>.compact``, which the next access adopts.
 """
 
 from __future__ import annotations
@@ -69,9 +74,20 @@ class Sidecar:
         self.fold = fold
         self.max_files = max_files
 
+    def _adopt_compacted(self) -> None:
+        """Finish a compaction killed between its two renames: with the
+        live directory gone, a completed ``<dir>.compact`` holds every row,
+        so it becomes the live directory."""
+        tmp = self.path + ".compact"
+        if not os.path.isdir(self.path) and os.path.exists(
+            os.path.join(tmp, "_SUCCESS")
+        ):
+            os.replace(tmp, self.path)
+
     def _data_files(self) -> list[os.DirEntry] | None:
         """Data files (names starting with ``_`` or ``.`` are Spark
         bookkeeping), or None when the directory does not exist."""
+        self._adopt_compacted()
         try:
             return [
                 e
@@ -95,12 +111,17 @@ class Sidecar:
         return self.spark.read.parquet(self.path)
 
     def append(self, df: DataFrame) -> None:
+        # adopt first: an append would otherwise create a live directory
+        # beside a completed compaction and hide its rows
+        self._adopt_compacted()
         df.write.mode("append").parquet(self.path)
         self.compact()
 
     def compact(self, max_files: int | None = None) -> None:
         """Past the file bound, write the folded rows to ``<dir>.compact``
-        (output width from the bytes read) and swap that in."""
+        (output width from the bytes read) and swap that in: the live
+        directory is renamed to ``<dir>.old``, the copy renamed into its
+        place, and only then is the old directory deleted."""
         bound = self.max_files if max_files is None else max_files
         files = self._data_files()
         if files is None or len(files) <= bound:
@@ -111,8 +132,11 @@ class Sidecar:
         self.fold(self.read()).coalesce(width).write.mode("overwrite").parquet(
             tmp
         )
-        shutil.rmtree(self.path, ignore_errors=True)
+        old = self.path + ".old"
+        shutil.rmtree(old, ignore_errors=True)
+        os.replace(self.path, old)
         os.replace(tmp, self.path)
+        shutil.rmtree(old, ignore_errors=True)
 
     def broadcast_if_small(self, df: DataFrame) -> DataFrame:
         """``df``, derived from this sidecar, with a broadcast hint while

@@ -17,9 +17,9 @@ RECRAWL = [
 ]
 
 
-def _engine(spark, sdfs, ck, **kw):
-    cfg = EngineConfig(ckpt_dir=ck, default_budget=10, use_bloom=True,
-                       bloom_partitions=4, **kw)
+def _engine(spark, sdfs, ck, default_budget=10, **kw):
+    cfg = EngineConfig(ckpt_dir=ck, default_budget=default_budget,
+                       use_bloom=True, bloom_partitions=4, **kw)
     return CrawlEngine(spark, sdfs["pages"], sdfs["seeds"],
                        sdfs["politeness"], cfg)
 
@@ -66,6 +66,28 @@ def test_selective_recrawl_refetches_only_marked(spark, tmp_path, monkeypatch):
     # a third run with no recrawl marks does nothing (idempotent again)
     third = _engine(spark, sdfs, ck).run()
     assert third.records.count() == second.records.count()
+
+
+def test_recrawl_larger_than_one_round_budget(spark, tmp_path):
+    """A recrawl wave bigger than one round's per-host budget: 12 marked
+    URLs on one host pop over several rounds, so the URLs left after the
+    first recrawl round must survive that round's frontier snapshot and
+    its reload. Every marked URL is fetched again, exactly once."""
+    site = generate_site(
+        SiteSpec(n_hosts=3, details_per_host=18, limit=5, related_per_host=2)
+    )
+    sdfs = site_to_spark(spark, site)
+    ck = str(tmp_path / "ckbig")
+    first = _engine(spark, sdfs, ck, default_budget=7).run()
+    urls = [(f"http://h0.example.test/record/{i}", "c0") for i in range(1, 13)]
+    rc = spark.createDataFrame(urls, "url string, connector_id string")
+    second = _engine(spark, sdfs, ck, default_budget=7).run(recrawl=rc)
+    assert second.rounds - first.rounds >= 2
+    refetched = second.fetch_log.where(
+        (F.col("round") >= first.rounds) & (F.col("status") == 200)
+    ).select("url").collect()
+    assert sorted(r["url"] for r in refetched) == sorted(u for u, _ in urls)
+    assert second.records.count() == first.records.count() + len(urls)
 
 
 def test_force_recrawls_everything(spark, tmp_path):

@@ -479,6 +479,8 @@ def test_frontier_row_builder_matches_frontier_schema(spark, tmp_path, monkeypat
         "dfs_rank", "depth", "score", F.lit("none").alias("related_policy"),
     )
     extracted = spark.createDataFrame([], ROUND_OUT_SCHEMA).join(meta, "url")
+    # the per-connector config run() collects at run start
+    eng._connector_cfg = rounds._connector_cfg_map([], seeds.schema)
     rnd = rounds._Round(no=3)
     rnd.links = extracted.select(
         F.col("url").alias("parent_url"), "connector_id", "seed_idx",

@@ -84,9 +84,10 @@ def fresh_result(fresh_run):
     return fresh_run["result"]
 
 
-# measured: 94 jobs for this crawl (4 rounds, no empty probe round; the
-# seed count and round 0's pop count run under the tiny-round switch)
-FRESH_CRAWL_MAX_JOBS = 94
+# measured: 87 jobs for this crawl (4 rounds, no empty probe round; the
+# seed count and round 0's pop count run under the tiny-round switch; the
+# per-connector config is collected once, not broadcast twice a round)
+FRESH_CRAWL_MAX_JOBS = 87
 
 
 def test_fresh_crawl_job_budget(fresh_run):
@@ -103,14 +104,16 @@ def test_rounds_record_stage_walls(fresh_run):
     from crawler_spark.plans.checkpoint import Checkpointer
 
     ckpt = Checkpointer(fresh_run["ckpt"])
-    for m in fresh_run["result"].metrics:
+    for i, m in enumerate(fresh_run["result"].metrics):
         # every stage's wall in the round log; the stages before the
-        # commit in the committed manifest
-        assert tuple(m["stage_s"]) == STAGES
+        # commit in the committed manifest. The run's first round also
+        # holds the work run() does before its loop.
+        first = ("run_start",) if i == 0 else ()
+        assert tuple(m["stage_s"]) == first + STAGES
         assert all(s >= 0 for s in m["stage_s"].values())
         manifest = ckpt.manifest(m["round"])
         committed = manifest["metrics"]["stage_s"]
-        assert tuple(committed) == STAGES[:6]
+        assert tuple(committed) == first + STAGES[:6]
         # each written table's write wall, in both
         assert set(m["commit_s"]) == set(manifest["lineage"])
         assert "frontier" in m["commit_s"]
@@ -133,6 +136,19 @@ def test_repeat_crawl_compiles_no_code(spark, fresh_run, tmp_path):
     assert res.metrics
     compiles = [m["codegen_compiles"] for m in res.metrics]
     assert compiles == [0] * len(compiles)
+
+
+def test_resume_refuses_round_without_frontier_snapshot(spark, site, tmp_path):
+    # older builds could commit a round whose frontier was stored as
+    # add/del deltas instead of a snapshot; resuming such a checkpoint
+    # names the round and the way out instead of failing on a later read
+    from crawler_spark import schemas
+
+    eng = _engine(spark, site_to_spark(spark, site), str(tmp_path / "ck"))
+    seen = spark.createDataFrame([(1,)], schemas.URL_SEEN)
+    eng.ckpt.commit_round(0, {"seen_delta": seen}, {"popped": 1})
+    with pytest.raises(RuntimeError, match="round 0 .*--no-resume"):
+        eng.run()
 
 
 def test_complete_checkpoint_resume_is_idle(spark, fresh_run, monkeypatch):

@@ -1,8 +1,9 @@
 """Checkpoint sidecars (plans/sidecar.py): absent reads as None while a
-corrupt sidecar raises, and compaction leaves every freshest-per-key
-reader's answer unchanged."""
+corrupt sidecar raises, compaction leaves every freshest-per-key reader's
+answer unchanged, and a compaction killed at any rename loses no row."""
 
 import os
+import shutil
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -132,3 +133,60 @@ def test_compaction_keeps_reader_answer(spark, tmp_path, attr, rounds, answer):
         assert before["a"] == 1.0
         before = {h: f for h, f in before.items() if f != 1.0}
     assert after == before
+
+
+class _Killed(Exception):
+    pass
+
+
+@pytest.mark.parametrize(
+    "fn, nth",
+    [
+        # the folded copy is complete; the live directory is not moved yet
+        ("replace", 1),
+        # the live directory is moved aside; the copy is not moved in yet
+        ("replace", 2),
+        # the copy is live; the old directory is not deleted yet
+        ("rmtree", 2),
+    ],
+    ids=["before_move_aside", "between_renames", "before_old_delete"],
+)
+def test_compaction_killed_at_each_step_keeps_every_row(
+    spark, tmp_path, monkeypatch, fn, nth
+):
+    path = str(tmp_path / "log")
+    schema = "url string, round int"
+    side = Sidecar(spark, path, keep_all)
+    for r in (1, 2):
+        side.append(
+            spark.createDataFrame([(f"u{r}a", r), (f"u{r}b", r)], schema)
+        )
+
+    def rows(sc):
+        return sorted(tuple(x) for x in sc.read().collect())
+
+    before = rows(side)
+    owner = os if fn == "replace" else shutil
+    real = getattr(owner, fn)
+    calls = []
+
+    def killed(*a, **k):
+        calls.append(a)
+        if len(calls) == nth:
+            raise _Killed
+        return real(*a, **k)
+
+    monkeypatch.setattr(owner, fn, killed)
+    with pytest.raises(_Killed):
+        side.compact(max_files=0)
+    monkeypatch.undo()
+    assert os.path.isdir(path) == ((fn, nth) != ("replace", 2))
+    # a restarted run opens the same directory afresh: the completed copy
+    # is adopted where the live directory is gone, and nothing is lost
+    again = Sidecar(spark, path, keep_all)
+    assert again.nbytes() > 0
+    assert rows(again) == before
+    again.append(spark.createDataFrame([("u3", 3)], schema))
+    again.compact(max_files=0)
+    assert rows(again) == sorted(before + [("u3", 3)])
+    assert not os.path.exists(path + ".old")

@@ -23,7 +23,7 @@ def _write_feed(path, rows):
 def test_stream_ingest_dedup_and_sink(spark, tmp_path):
     feed = tmp_path / "feed"
     feed.mkdir()
-    out = tmp_path / "frontier_delta"
+    out = tmp_path / "frontier_sink"
     ckpt = tmp_path / "ckpt"
 
     rows = [
